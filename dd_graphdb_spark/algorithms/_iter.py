@@ -26,9 +26,11 @@ from __future__ import annotations
 import os
 import threading
 from collections.abc import Callable
-from contextlib import contextmanager as _contextmanager
+from dataclasses import replace
 
 from pyspark.sql import DataFrame
+
+from dd_graphdb_spark.session import rebind, scoped
 
 #: serializes the snapshot→loop→unpersist bracket: the diff-based
 #: bookkeeping sees SESSION-global pinned-RDD state, so a second loop
@@ -63,11 +65,16 @@ def plan_size_bytes(df: DataFrame) -> int | None:
     return n if 0 <= n < (1 << 50) else None
 
 
-@_contextmanager
-def wide_shuffle(spark, size_hint: DataFrame | None = None):
-    """Scoped raise of AQE's initial shuffle-partition count, for loops
-    whose per-round aggregates are EDGE-sized (synchronized LPA's
-    neighbor-label frequencies, FastSV's per-edge min-reductions).
+_INITIAL = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+
+
+def wide_shuffle(g):
+    """``g`` rebound into a child session whose AQE initial shuffle-
+    partition count is raised, for loops whose per-round aggregates are
+    EDGE-sized (synchronized LPA's neighbor-label frequencies, FastSV's
+    per-edge min-reductions). Every frame the loop derives from the
+    returned graph plans in the child; ``run_loop`` rebinds the result
+    into the caller's session, which is never written.
 
     The raise is UNCONDITIONAL within the scoped loops (r16
     adjudication of the r15 size gate, VERDICT item 4): a controlled
@@ -80,8 +87,7 @@ def wide_shuffle(spark, size_hint: DataFrame | None = None):
     optimizer pass of the edge frame per loop call. The r15 gate was
     therefore a measured net loss at the scale it was meant to help,
     and the sf10 win of the raise itself (below) never needed it:
-    REVERTED. ``size_hint`` is accepted for call-site compatibility and
-    ignored.
+    REVERTED.
 
     AQE can coalesce shuffle partitions but never split them, so the
     initial count bounds per-task aggregation hash tables: at sf10 the
@@ -90,68 +96,30 @@ def wide_shuffle(spark, size_hint: DataFrame | None = None):
     raise is wrong the other way — small-state loops (BFS frontiers)
     pay per-round fan-out overhead for nothing (same-host sf10 A/B:
     7.9 s at 32 → 33.5 s at 256) — so the raise is scoped to the loops
-    that need it and restored in a finally.
-
-    Concurrency limitation (accurate statement): _PIN_LOCK serializes
-    only OTHER run_loop fixpoint loops — an ordinary GQL/DataFrame
-    query planned on ANOTHER thread during this window silently picks
-    up the 256-partition raise (results stay correct; small-state work
-    pays measured fan-out overhead, see the A/B above). Single-threaded
-    drivers — the suites, bench, the shell — are unaffected. A
-    multi-threaded server should give loops their own
-    ``SparkSession.newSession()`` so the conf raise scopes to that
-    session's plans only."""
-    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, os.environ.get("SPARK_GRAFT_WIDE_PARTITIONS", "256"))
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-@_contextmanager
-def narrow_shuffle(spark, n: int = 8):
-    """Scoped LOWERING of the shuffle-partition count, the mirror image
-    of ``wide_shuffle``: for fixpoint loops whose whole state is tiny
-    (an incremental view's maintained graph right after a handful of
-    delta batches), per-round cost is pure task-scheduling fan-out —
-    the wide_shuffle docstring's own A/B (BFS small-state loop: 7.9 s
-    at 32 partitions → 33.5 s at 256) shows partition count dominates
-    small-state rounds. Callers gate this on a MEASURED row count
-    (parquet metadata counts are ~free), so a view whose state has
-    grown past the threshold keeps the full-width loop — the knob is
-    size-aware, never a global cap."""
-    keys = (
-        "spark.sql.shuffle.partitions",
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+    that need it."""
+    s = scoped(
+        g.vertices.sparkSession,
+        {_INITIAL: os.environ.get("SPARK_GRAFT_WIDE_PARTITIONS", "256")},
     )
-    prev = {}
-    for k in keys:
-        try:
-            prev[k] = spark.conf.get(k)
-        except Exception:
-            prev[k] = None
-    for k in keys:
-        spark.conf.set(k, str(n))
-    try:
-        yield
-    finally:
-        for k in keys:
-            if prev[k] is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, prev[k])
+    return replace(g, vertices=rebind(g.vertices, s), edges=rebind(g.edges, s))
 
 
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint with SERIALIZED memory+disk blocks.
+def narrow_shuffle(spark, n: int = 8):
+    """A child session with the shuffle-partition count LOWERED to
+    ``n``, the mirror image of ``wide_shuffle``: for fixpoint loops
+    whose whole state is tiny (an incremental view's maintained graph
+    right after a handful of delta batches), per-round cost is pure
+    task-scheduling fan-out — the wide_shuffle docstring's own A/B (BFS
+    small-state loop: 7.9 s at 32 partitions → 33.5 s at 256) shows
+    partition count dominates small-state rounds. Callers gate this on
+    a MEASURED row count (parquet metadata counts are ~free), so a view
+    whose state has grown past the threshold keeps the full-width loop
+    — the knob is size-aware, never a global cap."""
+    return scoped(spark, {"spark.sql.shuffle.partitions": str(n), _INITIAL: str(n)})
+
+
+def _ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
+    """localCheckpoint with SERIALIZED memory+disk blocks.
 
     PySpark's MEMORY_AND_DISK constant is the serialized variant; the
     JVM-side localCheckpoint default stores DESERIALIZED object rows,
@@ -160,12 +128,14 @@ def _ckpt(df: DataFrame) -> DataFrame:
     (maybeCacheDiskValuesInMemory), which with 32 concurrent tasks
     unrolling ~550 MiB partitions OOM'd a 64 g heap in the sf10 SCC
     loop. Serialized blocks fit, their unroll accounting is chunked,
-    and per-round scans decode Tungsten rows cheaply. Every fixpoint
-    checkpoint (loop state AND the run_loop result bracket) goes
-    through here; copartitioned() applies the same level itself."""
+    and per-round scans decode Tungsten rows cheaply (the sf10 edge
+    checkpoint of ``copartitioned``, ~400 M rows beside 32 concurrent
+    build sorts, OOM'd the same heap deserialized). Every fixpoint
+    checkpoint — loop state, the run_loop result bracket and the keyed
+    checkpoints — goes through here."""
     from pyspark.storagelevel import StorageLevel
 
-    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -182,45 +152,55 @@ def materialize_count(df: DataFrame) -> tuple[DataFrame, int]:
     3.30 s vs lazy-ckpt + count 1.74 s over 5 reps of a small
     aggregate frame, same job count — the eager path's internal
     rdd.count() does the same work the DataFrame count() does, and
-    isEmpty was pure additional latency. Same serialized
-    MEMORY_AND_DISK storage as _ckpt."""
-    from pyspark.storagelevel import StorageLevel
-
-    out = df.localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    isEmpty was pure additional latency."""
+    out = _ckpt(df, eager=False)
     return out, out.count()
 
 
 def materialize_agg(df: DataFrame, *aggs) -> tuple[DataFrame, tuple]:
-    """Untracked sibling of RoundPins.materialize_agg: one action
-    materializes the frame and evaluates the given aggregates over it."""
-    from pyspark.storagelevel import StorageLevel
-
-    out = df.localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    """One action materializes the frame AND evaluates the given
+    aggregates over it (e.g. the CC/SCC sum-of-labels fixpoint test) —
+    replaces a checkpoint job + a separate scalar-aggregate job.
+    Returns (frame, agg row as tuple)."""
+    out = _ckpt(df, eager=False)
     return out, tuple(out.agg(*aggs).collect()[0])
+
+
+def _keyed_checkpoint(
+    df: DataFrame, n: int, keys, shape: Callable[[DataFrame], DataFrame] | None = None
+) -> DataFrame:
+    """Eager checkpoint of ``df`` hash-partitioned into ``n`` parts on
+    ``keys`` and sorted by them within each part, with ``shape`` (a
+    window or a dedup that the partitioning already satisfies) applied
+    between the exchange and the sort.
+
+    Why AQE is off for the build: ``localCheckpoint`` records the
+    physical plan's outputPartitioning/outputOrdering into the
+    resulting LogicalRDD — but under AQE the physical plan is an
+    AdaptiveSparkPlanExec whose partitioning is unknown at checkpoint
+    time, so the checkpoint comes out with UnknownPartitioning and every
+    downstream join re-shuffles the FULL frame. Built with AQE off, the
+    LogicalRDD carries hash(keys, n) + ascending order, so consuming
+    joins (AQE on) need no exchange and no sort on this side. The build
+    runs in a child session with AQE off; the checkpoint is rebound
+    into ``df``'s own session, which is never written."""
+    parent = df.sparkSession
+    out = rebind(df, scoped(parent, {"spark.sql.adaptive.enabled": "false"}))
+    out = out.repartition(n, *keys)
+    if shape is not None:
+        out = shape(out)
+    return rebind(_ckpt(out.sortWithinPartitions(*keys)), parent)
 
 
 def copartitioned(df: DataFrame, *keys: str, dedup_cols: list | None = None) -> DataFrame:
     """Checkpoint a loop-static frame hash-partitioned AND sorted on
-    ``keys`` so every per-round equi-join on those keys reads the stored
-    layout instead of re-exchanging (and re-sorting) the frame each round.
-
-    Why this needs care: ``localCheckpoint`` records the physical plan's
-    outputPartitioning/outputOrdering into the resulting LogicalRDD — but
-    under AQE the physical plan is an AdaptiveSparkPlanExec whose
-    partitioning is unknown at checkpoint time, so the checkpoint comes
-    out with UnknownPartitioning and every downstream join re-shuffles
-    the FULL frame. For a fixpoint loop that joins a static edge list
-    every round this is the dominant cost at scale: the sf10 supplier
-    co-location graph (~400 M directed edges) was shuffle-written 10×
-    inside the SSSP loop (measured 1372 s; VERDICT r8 "What's wrong #1").
-    Planning the checkpoint with AQE off makes the LogicalRDD carry
-    hash(keys, spark.sql.shuffle.partitions) + ascending order, so the
-    consuming sort-merge joins (AQE back on) exchange and sort only the
-    frontier side — the edge side is a bare block scan.
-
-    The AQE toggle is scoped to the one checkpoint-building query and
-    restored in a finally; a concurrent query planned inside the window
-    would merely plan non-adaptively (correct, possibly slower once).
+    ``keys`` (see ``_keyed_checkpoint``) so every per-round equi-join on
+    those keys reads the stored layout instead of re-exchanging (and
+    re-sorting) the frame each round. For a fixpoint loop that joins a
+    static edge list every round this is the dominant cost at scale:
+    without it the sf10 supplier co-location graph (~400 M directed
+    edges) was shuffle-written 10× inside the SSSP loop (measured
+    1372 s; VERDICT r8 "What's wrong #1").
 
     ``dedup_cols``: deduplicate rows on these columns INSIDE the build —
     AFTER the repartition, so the whole build is ONE exchange. A caller
@@ -240,28 +220,9 @@ def copartitioned(df: DataFrame, *keys: str, dedup_cols: list | None = None) -> 
             f"{keys} (dedup after repartition is only correct when equal "
             "dedup keys co-locate)"
         )
-    from pyspark.storagelevel import StorageLevel
-
-    spark = df.sparkSession
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        out = df.repartition(n, *keys)
-        if dedup_cols is not None:
-            out = out.dropDuplicates(dedup_cols)
-        return (
-            out.sortWithinPartitions(*keys)
-            # SERIALIZED memory+disk (PySpark's MEMORY_AND_DISK constant
-            # is the serialized variant): the JVM default stores
-            # deserialized object rows, ~3-4x the footprint — at sf10
-            # the ~400 M-row edge checkpoint plus 32 concurrent build
-            # sorts OOM'd a 64 g heap; serialized blocks fit, and the
-            # per-round scans decode Tungsten rows cheaply
-            .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    shape = None if dedup_cols is None else (lambda f: f.dropDuplicates(dedup_cols))
+    return _keyed_checkpoint(df, n, keys, shape)
 
 
 def _persistent_ids(spark) -> set[int]:
@@ -324,49 +285,26 @@ class RoundPins:
         self._ids: dict[int, set[int]] = {}
         self._frames: dict[int, DataFrame] = {}
 
-    def materialize(self, df: DataFrame) -> DataFrame:
+    def _track(self, step, df: DataFrame, *args):
+        """Run one module-level materialize step and record the RDD
+        blocks its checkpoint pinned against the returned frame."""
         if not self._classic:
-            return _ckpt(df)
+            return step(df, *args)
         before = _persistent_ids(self._spark)
-        out = _ckpt(df)
+        res = step(df, *args)
+        out = res[0] if isinstance(res, tuple) else res
         self._ids[id(out)] = _persistent_ids(self._spark) - before
         self._frames[id(out)] = out
-        return out
+        return res
+
+    def materialize(self, df: DataFrame) -> DataFrame:
+        return self._track(materialize, df)
 
     def materialize_count(self, df: DataFrame) -> tuple[DataFrame, int]:
-        """Tracked variant of module-level ``materialize_count`` — one
-        action materializes the round's frame and returns its row count
-        (replaces the per-round ``isEmpty()`` job); same pinned-block
-        bookkeeping as ``materialize``."""
-        if not self._classic:
-            return materialize_count(df)
-        before = _persistent_ids(self._spark)
-        out, n = materialize_count(df)
-        self._ids[id(out)] = _persistent_ids(self._spark) - before
-        self._frames[id(out)] = out
-        return out, n
+        return self._track(materialize_count, df)
 
     def materialize_agg(self, df: DataFrame, *aggs) -> tuple[DataFrame, tuple]:
-        """One action materializes the round's frame AND evaluates the
-        loop's convergence aggregates over it (e.g. the CC/SCC
-        sum-of-labels fixpoint test) — replaces the per-round
-        checkpoint job + separate scalar-aggregate job. Returns
-        (frame, agg row as tuple)."""
-        from pyspark.storagelevel import StorageLevel
-
-        if not self._classic:
-            out = df.localCheckpoint(
-                eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
-            )
-            return out, tuple(out.agg(*aggs).collect()[0])
-        before = _persistent_ids(self._spark)
-        out = df.localCheckpoint(
-            eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
-        row = tuple(out.agg(*aggs).collect()[0])
-        self._ids[id(out)] = _persistent_ids(self._spark) - before
-        self._frames[id(out)] = out
-        return out, row
+        return self._track(materialize_agg, df, *aggs)
 
     def forget(self, *dfs: DataFrame) -> None:
         """Stop tracking frames WITHOUT unpersisting them — for per-round
@@ -396,7 +334,10 @@ class RoundPins:
 
 def run_loop(impl: Callable[..., DataFrame], g, *args, **kwargs) -> DataFrame:
     """Run a fixpoint loop and free every block it pinned except the
-    result's. ``g`` is the PropertyGraph (first arg of every impl)."""
+    result's. ``g`` is the PropertyGraph (first arg of every impl). A
+    loop that ran in a child session (``wide_shuffle``) has its result
+    rebound into the caller's session before the final checkpoint, so
+    that last stage plans at the caller's width."""
     spark = g.vertices.sparkSession
     with _PIN_LOCK:
         try:
@@ -407,7 +348,7 @@ def run_loop(impl: Callable[..., DataFrame], g, *args, **kwargs) -> DataFrame:
         try:
             result = impl(g, *args, **kwargs)
             mid = _persistent_ids(spark)
-            final = _ckpt(result)
+            final = _ckpt(rebind(result, spark))
             final_ids = _persistent_ids(spark) - mid
             return final
         finally:

@@ -33,6 +33,7 @@ from dd_graphdb_spark.algorithms._iter import RoundPins, copartitioned, run_loop
 def _lpa_loop(
     g: PropertyGraph, max_iterations: int = 5, ckpt_every: int = 4
 ) -> DataFrame:
+    g = wide_shuffle(g)  # see label_propagation
     verts = g.vertices.select("id").localCheckpoint(eager=True)
     e = g.edges.select("src", "dst")
     # the per-round join reads the neighbor end's label. On a
@@ -89,12 +90,8 @@ def label_propagation(
 ) -> DataFrame:
     """(id, community) after ``max_iterations`` synchronized LPA rounds.
 
-    Runs under wide_shuffle: round 1's neighbor-label frequency frame
-    is EDGE-sized and its hash aggregate needs the wider reduce fan-out
-    (same-host sf10 A/B: 122 s at 32 initial partitions → 90 s at 256;
-    the pre-serialized-checkpoint form spilled to 1272 s)."""
-    def impl(g, *a, **kw):
-        with wide_shuffle(g.vertices.sparkSession, size_hint=g.edges):
-            return _lpa_loop(g, *a, **kw)
-
-    return run_loop(impl, g, max_iterations, ckpt_every)
+    Runs on a wide_shuffle graph: round 1's neighbor-label frequency
+    frame is EDGE-sized and its hash aggregate needs the wider reduce
+    fan-out (same-host sf10 A/B: 122 s at 32 initial partitions → 90 s
+    at 256; the pre-serialized-checkpoint form spilled to 1272 s)."""
+    return run_loop(_lpa_loop, g, max_iterations, ckpt_every)

@@ -49,6 +49,7 @@ from dd_graphdb_spark.algorithms._iter import run_loop, wide_shuffle
 def _connected_components_loop(g: PropertyGraph, max_iterations: int = 50) -> DataFrame:
     """Returns (id, component) with component = min vertex id reachable
     via undirected edges."""
+    g = wide_shuffle(g)  # see connected_components
     verts = g.vertices.select("id").distinct()
     e = g.edges.select("src", "dst")
     # partitioned on src — the per-round join key (gp.id == sym.src);
@@ -323,23 +324,18 @@ def connected_components(
 ) -> DataFrame:
     """Public entry; releases loop-intermediate checkpoint blocks.
 
-    Runs under wide_shuffle: FastSV's per-round neighbor-min reduction
-    is an EDGE-sized aggregate (same-host sf10 A/B on the derived-graph
-    gate query: 77 s at 32 initial partitions → 47 s at 256). SCC does
-    NOT take the raise — its peel rounds are many small stages and the
-    wider fan-out measured 1.7x slower (283 s vs 487 s).
+    Runs on a wide_shuffle graph: FastSV's per-round neighbor-min
+    reduction is an EDGE-sized aggregate (same-host sf10 A/B on the
+    derived-graph gate query: 77 s at 32 initial partitions → 47 s at
+    256). SCC does NOT take the raise — its peel rounds are many small
+    stages and the wider fan-out measured 1.7x slower (283 s vs 487 s).
 
     ``single_partition=True`` routes to the one-task union-find — ONLY
     for callers that measured the graph to be tiny (see
     _connected_components_single_partition)."""
     if single_partition:
         return _connected_components_single_partition(g)
-
-    def impl(g, *a, **kw):
-        with wide_shuffle(g.vertices.sparkSession, size_hint=g.edges):
-            return _connected_components_loop(g, *a, **kw)
-
-    return run_loop(impl, g, max_iterations)
+    return run_loop(_connected_components_loop, g, max_iterations)
 
 
 def strongly_connected_components(

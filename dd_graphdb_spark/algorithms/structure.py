@@ -27,14 +27,10 @@ from dd_graphdb_spark.algorithms._iter import RoundPins, run_loop, wide_shuffle
 def _k_core_loop(g: PropertyGraph, k: int, max_iterations: int = 50) -> DataFrame:
     """Vertices of the k-core (id). Undirected degrees.
 
-    Runs under wide_shuffle: the per-round degree recount is an
+    Runs on a wide_shuffle graph: the per-round degree recount is an
     EDGE-sized aggregate (same-host sf10 A/B: 164 s at 32 initial
     partitions → 119 s at 256)."""
-    with wide_shuffle(g.vertices.sparkSession, size_hint=g.edges):
-        return _k_core_body(g, k, max_iterations)
-
-
-def _k_core_body(g: PropertyGraph, k: int, max_iterations: int = 50) -> DataFrame:
+    g = wide_shuffle(g)
     e = g.edges.select("src", "dst")
     # per-round state here is EDGE-sized (the pruned edge list), so each
     # round's checkpoint must be released as soon as the next round's is

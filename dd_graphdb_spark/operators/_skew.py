@@ -53,12 +53,12 @@ def salted_self_pairs(
     hot/cold routing is a filter, not a separate size-probe aggregation
     plus two broadcast anti-joins (the r15 shape referenced its input
     five times, which is why every caller needed its own checkpoint).
-    The annotated frame is eagerly localCheckpoint'ed with AQE disabled
-    for that one job: under AQE the checkpointed plan reports
-    UnknownPartitioning, while with AQE off the checkpoint preserves
-    hashpartitioning(key_cols, n_parts) AND the window's sort order —
-    so the cold self-join below needs NO exchange and NO sort on either
-    side (both sides are the same pre-partitioned, pre-sorted blocks).
+    The annotated frame is the shared keyed checkpoint
+    (``algorithms._iter._keyed_checkpoint``, built with AQE off): it
+    preserves hashpartitioning(key_cols, n_ckpt) AND the window's sort
+    order — so the cold self-join below needs NO exchange and NO sort on
+    either side (both sides are the same pre-partitioned, pre-sorted
+    blocks).
 
     Contract notes: this operator is EAGER (the checkpoint runs a Spark
     job at DataFrame-construction time) and does not accept streaming
@@ -66,9 +66,7 @@ def salted_self_pairs(
     the returned frame is GC'd; on a multi-executor cluster they die
     with their executor (no recompute path) — for long jobs on
     preemptible nodes prefer ``df.checkpoint()`` semantics upstream (see
-    README "localCheckpoint durability"). The brief AQE toggle is
-    session-scoped: concurrent driver threads planning queries during
-    the (short, eager) checkpoint job would also plan without AQE.
+    README "localCheckpoint durability").
     """
     base = df.select(F.col(id_col).alias("_m"), *key_cols, *payload_cols, *carry_cols)
     spark = df.sparkSession
@@ -94,7 +92,7 @@ def salted_self_pairs(
     # (256 near-empty tasks per stage × 5 stages of pure scheduling
     # overhead) while large inputs still grow toward n_parts; an
     # unusable estimate keeps the conservative n_parts.
-    from dd_graphdb_spark.algorithms._iter import _env_int, plan_size_bytes
+    from dd_graphdb_spark.algorithms._iter import _env_int, _keyed_checkpoint, plan_size_bytes
 
     est = plan_size_bytes(base)
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -104,16 +102,12 @@ def salted_self_pairs(
     else:
         n_ckpt = n_parts
 
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        ann = (
-            base.repartition(n_ckpt, *key_cols)
-            .withColumn("_sz", F.count("*").over(Window.partitionBy(*key_cols)))
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    ann = _keyed_checkpoint(
+        base,
+        n_ckpt,
+        key_cols,
+        lambda f: f.withColumn("_sz", F.count("*").over(Window.partitionBy(*key_cols))),
+    )
 
     if annotated_out is not None:
         annotated_out.append(ann)

@@ -373,6 +373,11 @@ def semantic_dedup(
     """
     from dd_graphdb_spark.operators._skew import salted_self_pairs
 
+    if n_centroids < 1:
+        # an empty quantizer has no cell to assign: fail here instead of
+        # deep inside the probe fold (or dropping every id from the
+        # output via the NULL cell == cell0 filter below)
+        raise ValueError(f"semantic_dedup needs n_centroids >= 1, got {n_centroids}")
     cents = train_centroids(emb, n_centroids, train_iters, id_col, vec_col)
 
     # probe list exactly as ivf_topk: n_probe nearest centroids, sim

@@ -640,6 +640,7 @@ class GraphStore:
         e_df: DataFrame | None,
         v_touched: set[int] | None,
         e_touched: set[int] | None,
+        planned: int,
     ) -> int:
         """File-level copy-on-write commit. ``*_touched`` semantics:
         a set = the frame is the post-mutation content of exactly those
@@ -651,11 +652,12 @@ class GraphStore:
         the current version has no manifest to inherit from). Holds the
         store's writer lock across the manifest read → data write →
         pointer swap so a concurrent vacuum cannot relocate a layer this
-        commit is inheriting. Returns the new version."""
+        commit is inheriting. ``planned`` is the version ``_cow_plan``
+        read its base frames at; a store that has moved since raises
+        ConflictError. Returns the new version."""
         self._io.acquire_lock(self._lock_path, timeout_s=self.lock_timeout_s)
         try:
             cur = self.version
-            planned = getattr(self, "_plan_version", cur)
             if planned != cur:
                 raise ConflictError(
                     f"store moved to v{cur} while this commit's delta was "
@@ -708,7 +710,7 @@ class GraphStore:
 
     def _cow_plan(
         self, v_touched, e_touched
-    ) -> tuple[DataFrame, DataFrame, set[int] | None, set[int] | None]:
+    ) -> tuple[DataFrame, DataFrame, set[int] | None, set[int] | None, int]:
         """Bucket-restricted base frames + effective touched sets for a
         commit. Either touched argument may be a CALLABLE producing the
         set — touched-set computations that cost a Spark job (distinct-
@@ -716,24 +718,21 @@ class GraphStore:
         _cow_active gate so small stores never pay them. Below the size
         threshold (or on a pre-manifest legacy store) the plan degrades
         to full-table base + full rewrite — the pre-CoW behavior, which
-        is cheaper than the probes for stores a single task rewrites."""
-        # pin the base version the delta plan reads: _commit_version
-        # compares it against the version at commit time and raises
-        # ConflictError if a concurrent writer moved the store —
-        # otherwise a CoW commit would inherit the OTHER writer's
-        # buckets while its delta was computed against the old base
-        # (a silent lost update instead of a clean OCC failure)
-        self._plan_version = self.version
+        is cheaper than the probes for stores a single task rewrites.
+
+        The last element is the base version the plan reads, which the
+        caller hands to _commit_version: it raises ConflictError if a
+        concurrent writer moved the store — otherwise a CoW commit would
+        inherit the OTHER writer's buckets while its delta was computed
+        against the old base (a silent lost update instead of a clean
+        OCC failure). It is returned, not kept on the store, so two
+        statements sharing one store cannot overwrite each other's."""
+        planned = self.version
         if not self._cow_active():
-            return self.vertices(), self.edges(), None, None
+            return self.vertices(planned), self.edges(planned), None, None, planned
         tv = v_touched() if callable(v_touched) else v_touched
         te = e_touched() if callable(e_touched) else e_touched
-        return (
-            self.vertices(buckets=tv),
-            self.edges(buckets=te),
-            tv,
-            te,
-        )
+        return self.vertices(planned, tv), self.edges(planned, te), tv, te, planned
 
     # ---- reads (time travel via version=) ---------------------------------
     def vertices(
@@ -969,7 +968,7 @@ class GraphStore:
         except Exception:  # Spark Connect: ContextCleaner self-manages
             before = None
 
-        v_df, e_df, touched_v, touched_e = self._cow_plan(touched_v, e_scope)
+        v_df, e_df, touched_v, touched_e, planned = self._cow_plan(touched_v, e_scope)
         for i, (kind, ps) in enumerate(runs):
             v_df, e_df = self._apply_run(kind, ps, v_df, e_df)
             # long mixed batches: settle every 16 runs to bound plan depth
@@ -977,7 +976,7 @@ class GraphStore:
                 v_df = v_df.localCheckpoint(eager=True)
                 e_df = e_df.localCheckpoint(eager=True)
 
-        new_version = self._commit_version(v_df, e_df, touched_v, touched_e)
+        new_version = self._commit_version(v_df, e_df, touched_v, touched_e, planned)
         if before is not None:
             _unpersist(self.spark, _persistent_ids(self.spark) - before)
         return new_version
@@ -1066,26 +1065,26 @@ class GraphStore:
                 "src",
             )
 
-        v_base, e_base, touched_v, touched_e = self._cow_plan(v_scope, e_scope)
+        v_base, e_base, touched_v, touched_e, planned = self._cow_plan(v_scope, e_scope)
         v_df = v_base.join(ids, "id", "left_anti")
         e_df = (
             e_base
             .join(ids.withColumnRenamed("id", "src"), "src", "left_anti")
             .join(ids.withColumnRenamed("id", "dst"), "dst", "left_anti")
         )
-        return self._commit_version(v_df, e_df, touched_v, touched_e)
+        return self._commit_version(v_df, e_df, touched_v, touched_e, planned)
 
     def update_vertices(self, ids_df: DataFrame, props: dict) -> int:
         """Bulk per-key property update — the distributed MATCH..SET
         path. Cypher SET semantics: listed keys overwrite, other keys
         are KEPT (unlike update_vertex_props' whole-map replace,
         lib.rs:310-312). ``ids_df`` must have a single ``id`` column."""
-        v_base, _, touched_v, touched_e = self._cow_plan(
+        v_base, _, touched_v, touched_e, planned = self._cow_plan(
             lambda: self._collect_buckets(ids_df, "id"), set()
         )
         v_df = self._updated_vertices_df(v_base, ids_df, props)
         e_df = self.edges() if touched_e is None else None
-        return self._commit_version(v_df, e_df, touched_v, touched_e)
+        return self._commit_version(v_df, e_df, touched_v, touched_e, planned)
 
     @staticmethod
     def _updated_vertices_df(v_base: DataFrame, ids_df: DataFrame, props: dict) -> DataFrame:
@@ -1171,12 +1170,12 @@ class GraphStore:
     def update_edges(self, keys_df: DataFrame, props: dict) -> int:
         """Bulk per-key edge property update (Cypher SET semantics, like
         update_vertices). ``keys_df`` needs (src, dst, label) columns."""
-        _, e_base, touched_v, touched_e = self._cow_plan(
+        _, e_base, touched_v, touched_e, planned = self._cow_plan(
             set(), lambda: self._collect_buckets(keys_df, "src")
         )
         e_df = self._updated_edges_df(e_base, keys_df, props)
         v_df = self.vertices() if touched_v is None else None
-        return self._commit_version(v_df, e_df, touched_v, touched_e)
+        return self._commit_version(v_df, e_df, touched_v, touched_e, planned)
 
     @staticmethod
     def _updated_edges_df(e_base: DataFrame, keys_df: DataFrame, props: dict) -> DataFrame:
@@ -1446,7 +1445,7 @@ class GraphStore:
                 out |= self._collect_buckets(f, col)
             return out
 
-        v_df, e_df, touched_v_b, touched_e_b = self._cow_plan(
+        v_df, e_df, touched_v_b, touched_e_b, planned = self._cow_plan(
             (lambda: scope(v_frames, "id")) if v_frames else set(),
             (lambda: scope(e_frames, "src")) if e_frames else set(),
         )
@@ -1465,7 +1464,7 @@ class GraphStore:
                     v_df = self._updated_vertices_values_df(v_df, frame, list(props))
                 touched = frame.select("id")
             out = touched if out is None else out.unionByName(touched).distinct()
-        self._commit_version(v_df, e_df, touched_v_b, touched_e_b)
+        self._commit_version(v_df, e_df, touched_v_b, touched_e_b, planned)
         return out
 
     def _foreach_write(self, stmt, bindings, src, engine) -> DataFrame:
@@ -1656,7 +1655,7 @@ class GraphStore:
                     .distinct()
                     .localCheckpoint(eager=True)  # settle before rewrite
                 )
-                v_base, _, tv, te = self._cow_plan(
+                v_base, _, tv, te, planned = self._cow_plan(
                     lambda: self._collect_buckets(ids, "id"), set()
                 )
                 v_df = self._updated_vertices_df(v_base, ids, props)
@@ -1689,13 +1688,13 @@ class GraphStore:
                     .agg(*[F.max(f"_set_{k}").alias(f"_set_{k}") for k in props])
                     .localCheckpoint(eager=True)  # settle before rewrite
                 )
-                v_base, _, tv, te = self._cow_plan(
+                v_base, _, tv, te, planned = self._cow_plan(
                     lambda: self._collect_buckets(vals, "id"), set()
                 )
                 v_df = self._updated_vertices_values_df(v_base, vals, list(props))
                 ids = vals.select("id")
             e_df = self.edges() if te is None else None
-            self._commit_version(v_df, e_df, tv, te)
+            self._commit_version(v_df, e_df, tv, te, planned)
             return ids
 
         if isinstance(stmt, MatchDeleteStatement):
@@ -1749,7 +1748,7 @@ class GraphStore:
                     out |= self._collect_buckets(f, col)
                 return out
 
-            v_df, e_df, tv, te = self._cow_plan(
+            v_df, e_df, tv, te, planned = self._cow_plan(
                 (lambda: scope(v_frames, "id")) if v_frames else set(),
                 (lambda: scope(e_frames, "src")) if e_frames else set(),
             )
@@ -1762,7 +1761,7 @@ class GraphStore:
                     v_df = self._removed_vertex_props_df(v_df, hit, keys)
                     touched = hit
                 out = touched if out is None else out.unionByName(touched).distinct()
-            self._commit_version(v_df, e_df, tv, te)
+            self._commit_version(v_df, e_df, tv, te, planned)
             return out
 
         raise ValueError(f"unsupported mutation {type(stmt).__name__}")

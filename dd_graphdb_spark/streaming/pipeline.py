@@ -42,14 +42,6 @@ _SHUFFLE_TUNE_LOCK = threading.Lock()
 _STAGE_CACHE: dict[tuple, str] = {}
 _STAGE_LOCK = threading.Lock()
 
-#: source bytes of the most recent events_stream build, per session
-#: (id(spark) key): run_to_memory sizes the stream's STATE partitioning
-#: from it — see the state-width note there. Single-writer per session
-#: (the harness builds a stream then immediately runs it); a
-#: multi-threaded server should pass run_to_memory(state_partitions=...)
-#: explicitly instead of relying on this channel.
-_SOURCE_BYTES: dict[int, int] = {}
-
 
 def _purge_staged_dirs() -> None:
     for d in _STAGE_CACHE.values():
@@ -95,14 +87,6 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         if src_dir is None or not os.path.isdir(src_dir):
             src_dir = _stage_events_dir(spark, src, raw_schema)
             _STAGE_CACHE[key] = src_dir
-    # record the source size (already stat'd for the identity key) so
-    # run_to_memory can size state partitioning from the data; the key
-    # is (path, mtime, size) for a single file, (path, (name, mtime,
-    # size), ...) for a directory
-    if len(key) == 3 and isinstance(key[2], int):
-        _SOURCE_BYTES[id(spark)] = key[2]
-    else:
-        _SOURCE_BYTES[id(spark)] = sum(p[-1] for p in key[1:] if isinstance(p, tuple))
     stream = (
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", 1)  # source-side rate limit
@@ -194,6 +178,29 @@ def kafka_stream(
     )
 
 
+def _source_bytes(df: DataFrame) -> int:
+    """On-disk bytes of the distinct file-source paths ``df`` streams
+    from (the StreamingRelation leaves of its analyzed plan; symlinks
+    are followed). 0 when it has none."""
+    import os
+
+    paths = set()
+    it = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while it.hasNext():
+        leaf = it.next()
+        if leaf.getClass().getSimpleName() == "StreamingRelation":
+            p = leaf.dataSource().options().get("path")
+            if p.isDefined():
+                paths.add(p.get())
+    total = 0
+    for p in paths:
+        if os.path.isfile(p):
+            total += os.path.getsize(p)
+        for r, _, fs in os.walk(p):
+            total += sum(os.path.getsize(os.path.join(r, f)) for f in fs)
+    return total
+
+
 def run_to_memory(
     df: DataFrame,
     name: str | None = None,
@@ -214,18 +221,21 @@ def run_to_memory(
     # Python workers + stores for a single micro-batch. Right-size ONLY
     # untuned sessions (a caller who set the conf keeps their value
     # untouched — no mutation at all on tuned sessions, e.g. get_spark's
-    # 32), and hold a lock across the mutate→run→restore bracket so
-    # overlapping harness calls on one session can't plan against each
-    # other's temporary value. Production sinks size this explicitly.
+    # 32). ``start()`` snapshots the session conf into the query's own
+    # session clone, so the width, provider and changelog settings below
+    # are set around ``start()`` alone, under a lock so overlapping
+    # calls cannot plan against each other's temporary value. The query
+    # stays in the caller's session: a query started from a child
+    # session is invisible to the caller's StreamingQueryListeners.
+    # Production sinks size this explicitly.
     with _SHUFFLE_TUNE_LOCK:
         # read INSIDE the lock: reading before it could observe another
         # caller's temporary in-bracket value (e.g. the right-sized "8"),
         # classify the session as tuned, and skip the right-sizing
         prev = spark.conf.get("spark.sql.shuffle.partitions")
-        untuned = prev == "200"
-        width = (
-            spark.sparkContext.defaultParallelism if untuned else int(prev)
-        )
+        # a non-numeric value (e.g. "auto") sizes like an untuned session
+        untuned = prev == "200" or not prev.isdigit()
+        width = spark.sparkContext.defaultParallelism if untuned else int(prev)
         # STATE-WIDTH sizing (r16, guide §2.2 applied to state stores):
         # a stateful query creates one state store per shuffle partition
         # per stateful operator per micro-batch — a stream-stream join
@@ -234,8 +244,8 @@ def run_to_memory(
         # watermark-eviction batch of stream_live_left_outer_join runs
         # 3.4 s with ZERO input rows at 32 partitions; the whole gate is
         # 7.0–7.3 s at 32 vs 2.3 s at 8 vs 2.0 s at 4, identical
-        # results). Size the width from the MEASURED source bytes
-        # (events_stream records them): one state partition per
+        # results). Size the width from the MEASURED bytes of this
+        # stream's own file sources: one state partition per
         # SPARK_GRAFT_STREAM_STATE_BYTES of source (default 256 KB of
         # compressed source ≈ a few MB of state), never RAISED above
         # the session width — at sf1+ the derived width already hits
@@ -245,7 +255,7 @@ def run_to_memory(
         if state_partitions is not None:
             width = max(1, int(state_partitions))
         else:
-            src_bytes = _SOURCE_BYTES.get(id(spark))
+            src_bytes = _source_bytes(df)
             if src_bytes:
                 from dd_graphdb_spark.algorithms._iter import _env_int
 
@@ -296,9 +306,6 @@ def run_to_memory(
                 .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
                 .start()
             )
-            q.awaitTermination(timeout_s)
-            if q.isActive:
-                q.stop()
         finally:
             if retune:
                 spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -306,7 +313,10 @@ def run_to_memory(
                 spark.conf.set(_PROV, prev_prov)
                 if prev_clog is None:
                     spark.conf.unset(_CLOG)
-    return df.sparkSession.table(name)
+    q.awaitTermination(timeout_s)
+    if q.isActive:
+        q.stop()
+    return spark.table(name)
 
 
 def incremental_view_pipeline(

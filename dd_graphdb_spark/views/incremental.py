@@ -482,14 +482,15 @@ class _EdgeState:
     def edges(self) -> DataFrame:
         return self._edges.read()
 
-    def graph(self):
+    def graph(self, spark: SparkSession | None = None):
         """State as a PropertyGraph: vertices = explicit set ∪ edge
-        endpoints (vertex_properties ∪ adjacency keys, :1152-1158)."""
+        endpoints (vertex_properties ∪ adjacency keys, :1152-1158).
+        ``spark``: the session to read in (default the view's own)."""
         from dd_graphdb_spark.graph import PropertyGraph
 
-        e = self._edges.read()
+        e = self._edges.read(spark)
         verts = (
-            self._verts.read()
+            self._verts.read(spark)
             .unionByName(e.select(F.col("src").alias("id")))
             .unionByName(e.select(F.col("dst").alias("id")))
             .distinct()
@@ -529,8 +530,8 @@ class IncrementalConnectivity(_EdgeState):
     fixpoint over just the touched components. A tiny maintained state
     (measured on-disk bytes) additionally routes to the one-task
     union-find (``connected_components(single_partition=True)``) and
-    runs its diff/splice joins under ``narrow_shuffle`` — small-state
-    cost is task fan-out and round latency, not data.
+    runs its diff/splice joins in a ``narrow_shuffle`` session —
+    small-state cost is task fan-out and round latency, not data.
 
     Result: one row (component_count, vertex_count) — the value +
     metadata pair of :1104-1107.
@@ -559,7 +560,6 @@ class IncrementalConnectivity(_EdgeState):
         return connected_components(g, single_partition=small)
 
     def _refresh_labels(self) -> DataFrame:
-        g = self.graph()
         small = (
             self._edges.data_bytes() + self._verts.data_bytes()
         ) <= self.NARROW_BYTES
@@ -572,12 +572,14 @@ class IncrementalConnectivity(_EdgeState):
             and snap["verts_v"] == self._verts.version
         ):
             return self._labels.read()  # nothing changed since refresh
-        from contextlib import nullcontext
-
         from dd_graphdb_spark.algorithms._iter import narrow_shuffle
 
         # small state: the diff/splice joins below also run narrow —
-        # their cost is task fan-out, not data (scoped; restored after)
+        # their cost is task fan-out, not data. Every frame of the
+        # refresh is read in that child session; the view's own
+        # session is never written.
+        s = narrow_shuffle(self.spark) if small else self.spark
+        g = self.graph(s)
         if snap is not None:
             try:
                 # a crash between the labels write and the pin can lose
@@ -587,59 +589,57 @@ class IncrementalConnectivity(_EdgeState):
                 self._verts.read_version(snap["verts_v"])
             except ValueError:
                 snap = None
-        scope = narrow_shuffle(self.spark) if small else nullcontext()
-        with scope:
-            if snap is None:
-                comp = self._fixpoint(g, small)
+        if snap is None:
+            comp = self._fixpoint(g, small)
+        else:
+            cur_v = g.vertices.select("id")
+            labels = self._labels.read(s)
+            snap_e = self._edges.read_version(snap["edges_v"], s)
+            snap_vt = self._verts.read_version(snap["verts_v"], s)
+            cur_e = self._edges.read(s).select("src", "dst")
+            # dirty = endpoints of changed edges ∪ changed RAW vertex
+            # rows (a superset of truly-affected vertices is fine — it
+            # only widens the recomputed region; subtract = EXCEPT
+            # DISTINCT, both sides are key sets)
+            changed_e = cur_e.subtract(
+                snap_e.select("src", "dst")
+            ).unionByName(snap_e.select("src", "dst").subtract(cur_e))
+            dirty = (
+                changed_e.select(F.col("src").alias("id"))
+                .unionByName(changed_e.select(F.col("dst").alias("id")))
+                .unionByName(self._verts.read(s).subtract(snap_vt))
+                .unionByName(snap_vt.subtract(self._verts.read(s)))
+                .distinct()
+            )
+            if dirty.isEmpty():
+                # version bumped but content identical (e.g. an edge
+                # re-insert): keep labels, just advance the snapshot
+                comp = labels
             else:
-                cur_v = g.vertices.select("id")
-                labels = self._labels.read()
-                snap_e = self._edges.read_version(snap["edges_v"])
-                snap_vt = self._verts.read_version(snap["verts_v"])
-                cur_e = self._edges.read().select("src", "dst")
-                # dirty = endpoints of changed edges ∪ changed RAW vertex
-                # rows (a superset of truly-affected vertices is fine — it
-                # only widens the recomputed region; subtract = EXCEPT
-                # DISTINCT, both sides are key sets)
-                changed_e = cur_e.subtract(
-                    snap_e.select("src", "dst")
-                ).unionByName(snap_e.select("src", "dst").subtract(cur_e))
-                dirty = (
-                    changed_e.select(F.col("src").alias("id"))
-                    .unionByName(changed_e.select(F.col("dst").alias("id")))
-                    .unionByName(self._verts.read().subtract(snap_vt))
-                    .unionByName(snap_vt.subtract(self._verts.read()))
+                affected = (
+                    labels.join(dirty, "id", "left_semi")
+                    .select("component")
                     .distinct()
                 )
-                if dirty.isEmpty():
-                    # version bumped but content identical (e.g. an edge
-                    # re-insert): keep labels, just advance the snapshot
-                    comp = labels
-                else:
-                    affected = (
-                        labels.join(dirty, "id", "left_semi")
-                        .select("component")
-                        .distinct()
-                    )
-                    sub_ids = (
-                        labels.join(affected, "component", "left_semi")
-                        .select("id")
-                        .unionByName(dirty)
-                        .distinct()
-                        .join(cur_v, "id", "left_semi")  # drop removed vertices
-                    )
-                    # edge-closure invariant (see class docstring): either
-                    # endpoint in the subgraph implies both — one semi-join
-                    e_sub = g.edges.join(
-                        sub_ids, g.edges["src"] == sub_ids["id"], "left_semi"
-                    )
-                    from dd_graphdb_spark.graph import PropertyGraph
+                sub_ids = (
+                    labels.join(affected, "component", "left_semi")
+                    .select("id")
+                    .unionByName(dirty)
+                    .distinct()
+                    .join(cur_v, "id", "left_semi")  # drop removed vertices
+                )
+                # edge-closure invariant (see class docstring): either
+                # endpoint in the subgraph implies both — one semi-join
+                e_sub = g.edges.join(
+                    sub_ids, g.edges["src"] == sub_ids["id"], "left_semi"
+                )
+                from dd_graphdb_spark.graph import PropertyGraph
 
-                    sub = self._fixpoint(PropertyGraph(sub_ids, e_sub), small)
-                    comp = labels.join(
-                        affected, "component", "left_anti"
-                    ).unionByName(sub.select("id", "component"))
-            self._labels.write(comp)
+                sub = self._fixpoint(PropertyGraph(sub_ids, e_sub), small)
+                comp = labels.join(
+                    affected, "component", "left_anti"
+                ).unionByName(sub.select("id", "component"))
+        self._labels.write(comp)
         # return the READ-BACK of the version just written — comp's
         # lazy plan still references the OLD label/snapshot versions,
         # which the unpin below may delete (and a caller action would

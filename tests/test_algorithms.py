@@ -425,30 +425,88 @@ def test_kcore_bounds_pinned_blocks_per_round(spark):
     assert len(_persistent_ids(spark) - before) <= 1
 
 
-def test_wide_shuffle_scopes_and_restores(spark):
-    """wide_shuffle raises AQE's initial partition count only inside the
-    with-block and restores the prior value even on an exception."""
-    import pytest as _pytest
+def test_wide_shuffle_scopes_and_restores(spark, monkeypatch):
+    """wide_shuffle rebinds a loop's graph into a child session that
+    reads the raised initial partition count; the caller's session never
+    changes — not inside the loop, not after it, not when it raises —
+    and run_loop hands the result back in the caller's session."""
+    from dd_graphdb_spark.algorithms._iter import run_loop, wide_shuffle
 
-    from dd_graphdb_spark.algorithms._iter import wide_shuffle
-
+    monkeypatch.delenv("SPARK_GRAFT_WIDE_PARTITIONS", raising=False)
     key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    try:
-        before = spark.conf.get(key)
-    except Exception:
-        before = None
-    with wide_shuffle(spark):
-        assert spark.conf.get(key) == "256"
-    try:
-        after = spark.conf.get(key)
-    except Exception:
-        after = None
-    assert after == before
-    with _pytest.raises(RuntimeError, match="boom"):
-        with wide_shuffle(spark):
+    before = spark.conf.get(key, None)
+    g = PropertyGraph(spark.range(3), spark.createDataFrame([(0, 1)], "src long, dst long"))
+    seen = []
+
+    def loop(g, fail):
+        w = wide_shuffle(g)
+        seen.append((
+            w.vertices.sparkSession.conf.get(key),
+            w.edges.sparkSession.conf.get(key),
+            spark.conf.get(key, None),
+        ))
+        if fail:
             raise RuntimeError("boom")
-    try:
-        after = spark.conf.get(key)
-    except Exception:
-        after = None
-    assert after == before
+        return w.vertices
+
+    out = run_loop(loop, g, False)
+    assert out.sparkSession is spark and out.count() == 3
+    with pytest.raises(RuntimeError, match="boom"):
+        run_loop(loop, g, True)
+    assert seen == [("256", "256", before)] * 2
+    assert spark.conf.get(key, None) == before
+
+
+def test_scoped_sites_never_write_the_parent_session(spark, monkeypatch):
+    """Observed at every checkpoint job: inside a keyed-checkpoint build
+    (copartitioned, salted_self_pairs), a wide_shuffle loop (k-core) and
+    a narrow_shuffle scope, the frame being checkpointed reads the
+    scoped conf while the caller's session keeps its own values."""
+    from pyspark.sql import functions as F
+
+    from dd_graphdb_spark.algorithms import _iter
+    from dd_graphdb_spark.operators._skew import salted_self_pairs
+
+    monkeypatch.delenv("SPARK_GRAFT_WIDE_PARTITIONS", raising=False)
+    keys = (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        "spark.sql.shuffle.partitions",
+    )
+
+    def read(s):
+        return tuple(s.conf.get(k, None) for k in keys)
+
+    parent = read(spark)
+    seen = []
+    cls = type(spark.range(1))
+    real = cls.localCheckpoint
+
+    def spy(self, *a, **kw):
+        seen.append((read(self.sparkSession), read(spark)))
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+
+    df = spark.range(40).select((F.col("id") % 4).alias("k"), "id")
+    _iter.copartitioned(df, "k")
+    salted_self_pairs(df, "id", ["k"], salt_threshold=5, n_salts=2)
+    assert [c[0] for c, _ in seen] == ["false", "false"]
+    assert all(p == parent for _, p in seen)
+
+    seen.clear()
+    v = spark.createDataFrame([(i,) for i in range(6)], "id long")
+    e = spark.createDataFrame(
+        [(a, b, "x") for a in range(4) for b in range(a + 1, 4)] + [(3, 4, "x"), (4, 5, "x")],
+        "src long, dst long, label string",
+    )
+    assert sorted(r["id"] for r in A.k_core(PropertyGraph(v, e), k=3).collect()) == [0, 1, 2, 3]
+    *rounds, final = seen
+    assert rounds and all(c[1] == "256" for c, _ in rounds)
+    assert final[0] == parent  # run_loop's result checkpoint: caller's session
+    assert all(p == parent for _, p in seen)
+
+    seen.clear()
+    narrow = _iter.narrow_shuffle(spark, 2)
+    assert _iter.materialize(narrow.range(10)).count() == 10
+    assert seen == [((parent[0], "2", "2"), parent)]

@@ -220,6 +220,16 @@ def test_semantic_dedup_greedy_prune(spark):
     assert out[4] == (False, 1)
 
 
+def test_semantic_dedup_rejects_empty_quantizer(spark):
+    """n_centroids < 1 has no cell to assign any vector to: the operator
+    fails loudly at entry instead of deep in the probe fold."""
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="n_centroids >= 1"):
+        S.semantic_dedup(emb, n_centroids=0)
+
+
 def test_semantic_dedup_cells_bound_the_pairs(spark):
     """Near-dups split across different cells are NOT compared — the
     documented SemDeDup recall tradeoff (cell-locality is what makes

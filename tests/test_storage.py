@@ -530,12 +530,28 @@ def test_cow_commit_detects_concurrent_writer(spark, tmp_path):
     s1 = GraphStore(spark, path, n_buckets=4, cow_min_bytes=0)
     s1.apply_batch([add_vertex(i, "P") for i in range(8)])
     # plan a delta on s1, then let a second writer commit in between
-    v_base, e_base, tv, te = s1._cow_plan({1}, set())
+    v_base, e_base, tv, te, planned = s1._cow_plan({1}, set())
     GraphStore(spark, path, cow_min_bytes=0).apply_batch([add_vertex(100, "P")])
     with pytest.raises(ConflictError, match="moved to"):
-        s1._commit_version(v_base, None, tv, te)
+        s1._commit_version(v_base, None, tv, te, planned)
     # the interleaved writer's state is intact
     assert s1.vertices().count() == 9
+
+
+def test_cow_plans_on_one_store_do_not_share_state(spark, tmp_path):
+    """Two statements sharing ONE GraphStore instance: A plans, B
+    commits, B's successor replans on the same instance, then A commits.
+    A's plan read the old base, so A must fail with ConflictError — a
+    planned version kept on the instance would have been overwritten by
+    the replan and A would have committed a lost update."""
+    store = GraphStore(spark, str(tmp_path / "cow"), n_buckets=4, cow_min_bytes=0)
+    store.apply_batch([add_vertex(i, "P") for i in range(8)])
+    v_a, _, tv_a, te_a, planned_a = store._cow_plan({1}, set())
+    store.apply_batch([add_vertex(100, "P")])  # statement B commits
+    store._cow_plan({1}, set())  # a later statement replans
+    with pytest.raises(ConflictError, match="moved to"):
+        store._commit_version(v_a, None, tv_a, te_a, planned_a)
+    assert store.vertices().count() == 9
 
 
 def test_cow_commit_vacuum_mutual_exclusion(spark, tmp_path):

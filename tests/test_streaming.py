@@ -282,3 +282,45 @@ def test_events_stream_restage_is_cached(spark, tmp_path):
     assert stamps == {
         f: os.path.getmtime(os.path.join(staged, f)) for f in os.listdir(staged)
     }
+
+
+def test_run_to_memory_sizes_each_stream_from_its_own_source(spark, tmp_path, monkeypatch):
+    """Two file streams of different size, both built before either
+    runs, in one session: each gets the state width of its OWN source
+    bytes (one partition per SPARK_GRAFT_STREAM_STATE_BYTES, capped at
+    the session width of 4)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from dd_graphdb_spark.streaming.pipeline import run_to_memory
+
+    def table(name, n):
+        d = tmp_path / name
+        d.mkdir()
+        cols = {"k": [i % 7 for i in range(n)], "x": list(range(n))}
+        pq.write_table(pa.table(cols), d / "p.parquet")
+        return str(d), os.path.getsize(d / "p.parquet")
+
+    small, small_bytes = table("small", 10)
+    big, big_bytes = table("big", 5000)
+    assert big_bytes >= 3 * small_bytes
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_BYTES", str(small_bytes))
+    widths = []
+    real = DataStreamWriter.start
+
+    def spy(self, *a, **kw):
+        widths.append(spark.conf.get("spark.sql.shuffle.partitions"))
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(DataStreamWriter, "start", spy)
+    streams = [
+        spark.readStream.schema("k long, x long").parquet(d).groupBy("k").count()
+        for d in (small, big)
+    ]
+    counts = [sum(r["count"] for r in run_to_memory(s).collect()) for s in streams]
+    assert counts == [10, 5000]
+    assert widths == ["2", "4"]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"

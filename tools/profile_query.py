@@ -57,53 +57,55 @@ def main() -> None:
         )
         return b.getOrCreate()
 
-    # route suite-internal sessions through the UI-enabled factory, and
-    # restored at the end of main (ADVICE r15: was saved but never restored)
+    # route suite-internal sessions through the UI-enabled factory until
+    # main returns or raises
     orig = S.get_spark
-    S.get_spark = get_spark_ui
     spark = get_spark_ui()
-    qs, _ = all_queries(hygiene=False)
-    app_id = spark.sparkContext.applicationId
-    port = int(spark.sparkContext.uiWebUrl.rsplit(":", 1)[1])
+    S.get_spark = get_spark_ui
+    try:
+        qs, _ = all_queries(hygiene=False)
+        app_id = spark.sparkContext.applicationId
+        port = int(spark.sparkContext.uiWebUrl.rsplit(":", 1)[1])
 
-    def jobs_after(lo_time: float) -> list[dict]:
-        js = _rest(port, f"applications/{app_id}/jobs?status=succeeded") + _rest(
-            port, f"applications/{app_id}/jobs?status=failed"
-        )
-        out = []
-        for j in js:
-            sub = time.strptime(j["submissionTime"][:19], "%Y-%m-%dT%H:%M:%S")
-            if time.mktime(sub) >= lo_time - 1.5:
-                out.append(j)
-        return sorted(out, key=lambda j: j["jobId"])
-
-    for name in names:
-        if name not in qs:
-            print(f"unknown query: {name}")
-            continue
-        t_build0 = time.time()
-        df = qs[name](spark, sf_dir)
-        build_s = time.time() - t_build0
-        t0 = time.time()
-        df.write.mode("overwrite").format("noop").save()
-        exec_s = time.time() - t0
-        print(f"\n== {name}: build {build_s:.2f}s + execute {exec_s:.2f}s")
-        for j in jobs_after(t_build0):
-            sub = time.mktime(time.strptime(j["submissionTime"][:19], "%Y-%m-%dT%H:%M:%S"))
-            if "completionTime" in j:
-                end = time.mktime(
-                    time.strptime(j["completionTime"][:19], "%Y-%m-%dT%H:%M:%S")
-                )
-                dur = end - sub
-            else:
-                dur = -1
-            desc = (j.get("description") or j["name"])[:110]
-            print(
-                f"  job {j['jobId']:>4} {dur:6.1f}s stages={len(j['stageIds'])} "
-                f"tasks={j['numTasks']:>5} {desc}"
+        def jobs_after(lo_time: float) -> list[dict]:
+            js = _rest(port, f"applications/{app_id}/jobs?status=succeeded") + _rest(
+                port, f"applications/{app_id}/jobs?status=failed"
             )
-    spark.stop()
-    S.get_spark = orig
+            out = []
+            for j in js:
+                sub = time.strptime(j["submissionTime"][:19], "%Y-%m-%dT%H:%M:%S")
+                if time.mktime(sub) >= lo_time - 1.5:
+                    out.append(j)
+            return sorted(out, key=lambda j: j["jobId"])
+
+        for name in names:
+            if name not in qs:
+                print(f"unknown query: {name}")
+                continue
+            t_build0 = time.time()
+            df = qs[name](spark, sf_dir)
+            build_s = time.time() - t_build0
+            t0 = time.time()
+            df.write.mode("overwrite").format("noop").save()
+            exec_s = time.time() - t0
+            print(f"\n== {name}: build {build_s:.2f}s + execute {exec_s:.2f}s")
+            for j in jobs_after(t_build0):
+                sub = time.mktime(time.strptime(j["submissionTime"][:19], "%Y-%m-%dT%H:%M:%S"))
+                if "completionTime" in j:
+                    end = time.mktime(
+                        time.strptime(j["completionTime"][:19], "%Y-%m-%dT%H:%M:%S")
+                    )
+                    dur = end - sub
+                else:
+                    dur = -1
+                desc = (j.get("description") or j["name"])[:110]
+                print(
+                    f"  job {j['jobId']:>4} {dur:6.1f}s stages={len(j['stageIds'])} "
+                    f"tasks={j['numTasks']:>5} {desc}"
+                )
+    finally:
+        S.get_spark = orig
+        spark.stop()
 
 
 if __name__ == "__main__":
