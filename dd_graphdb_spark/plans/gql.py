@@ -458,9 +458,9 @@ class MatchDeleteStatement:
 class MatchRemoveStatement:
     """MATCH .. REMOVE v.prop [, e.prop ..] — drop property keys from
     matched vertices/edges (Cypher REMOVE; the reference's schemaless
-    property bags make this a map-key deletion). Removing ``type``
-    clears the vertex label (label IS the type property,
-    executor.rs:290-295)."""
+    property bags make this a map-key deletion); executes as ``SET
+    v.prop = null``. Removing ``type`` clears the vertex label (label IS
+    the type property, executor.rs:290-295)."""
 
     pattern: PathPattern
     where: object | None
@@ -472,16 +472,31 @@ class MatchSetStatement:
     """MATCH .. [WHERE] SET v.prop = <expr> [, ..] / SET v += {map}.
 
     ``assignments``: [(var, prop, value), ..] where value is a Python
-    literal (fast path: one shared map rewrite, no per-row compute) or
-    an expression AST evaluated per matched binding row against the
-    read side's lowering (UpdateVertexProperties contract,
-    graph/storage/src/lib.rs:310-318, extended with Cypher per-key
-    semantics and computed values). ``+=`` map merge desugars to
-    per-key entries at parse (_set_assignments)."""
+    literal, None (removes the key) or an expression AST evaluated per
+    matched binding row against the read side's lowering; all three
+    take one path, GraphStore._apply_set (UpdateVertexProperties
+    contract, graph/storage/src/lib.rs:310-318, extended with Cypher
+    per-key semantics and computed values). ``+=`` map merge desugars
+    to per-key entries at parse (_set_assignments)."""
 
     pattern: PathPattern
     where: object | None
     assignments: list  # [(var, prop, literal-or-expr-AST), ...]
+
+
+def _edge_vars(pattern: PathPattern) -> set[str]:
+    return {e.var for e in pattern.edges if e.var}
+
+
+def _reject_edge_label_set(pattern: PathPattern, assigns: list) -> None:
+    """SET (not REMOVE) refuses an edge variable's ``label``."""
+    edge_vars = _edge_vars(pattern)
+    if any(var in edge_vars and prop == "label" for var, prop, _ in assigns):
+        raise ValueError(
+            "GQL parse error: SET e.label is not supported: an edge's "
+            "label is part of its identity (src, dst, label) — delete "
+            "and re-create the edge instead"
+        )
 
 
 @dataclass
@@ -1853,6 +1868,8 @@ class _Parser:
                 assigns.append((var, prop, self.literal()))
                 if not self.accept("punct", ","):
                     break
+            if target == "on_match":
+                _reject_edge_label_set(stmt.pattern, assigns)
             setattr(stmt, target, assigns)
         return stmt
 
@@ -1867,8 +1884,7 @@ class _Parser:
         semantics coincide with per-key SET (both keep unlisted keys),
         so one execution path serves both spellings. Values are full
         scalar expressions (the read side's grammar — v.total + 1,
-        toUpper(v.name), CASE ..); a literal value keeps the existing
-        literal fast path at execution."""
+        toUpper(v.name), CASE ..)."""
         assigns = []
         while True:
             var = self.expect_name()
@@ -2035,7 +2051,9 @@ class _Parser:
                     break
             return MatchRemoveStatement(pattern, where, removals)
         if self.accept("SET"):
-            return MatchSetStatement(pattern, where, self._set_assignments())
+            assigns = self._set_assignments()
+            _reject_edge_label_set(pattern, assigns)
+            return MatchSetStatement(pattern, where, assigns)
         if self._ident_kw("FOREACH"):
             self.next()
             self.expect("punct", "(")

@@ -70,6 +70,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dd_graphdb_spark.algorithms._iter import _ckpt, _persistent_ids, _unpersist
 from dd_graphdb_spark.localrel import local_df
 
 from dd_graphdb_spark.storage.fsio import LocalFS, StorageIO
@@ -192,11 +193,27 @@ def _drop_key(key: str):
 
 
 def _is_set_literal(v) -> bool:
-    """True for plain Python literal SET values (the no-per-row-compute
-    fast path of _apply_set). None is NOT a fast-path literal: Cypher
-    ``SET v.p = null`` REMOVES the key, which the literal map rewrite
-    (json.dumps rendering) cannot express."""
-    return v is not None and isinstance(v, (str, int, float, bool))
+    """True for a plain Python property value — a GQL literal, or any
+    JSON value update_vertices/update_edges are given — as opposed to
+    an expression AST. None is not one: it removes the key
+    (_set_value)."""
+    return isinstance(v, (str, int, float, bool, list, tuple, dict))
+
+
+def _set_value(v) -> Column:
+    """The one value rule of every property write (_apply_set): a
+    rendered-JSON column. A literal renders with ``json.dumps`` (the
+    bytes apply_batch stores); None is NULL, which REMOVES the key
+    (Cypher ``SET v.p = null``, and REMOVE v.p); an expression AST
+    lowers against the bindings row with the READ side's expression
+    machinery and renders per row (render_json_value)."""
+    if v is None:
+        return F.lit(None).cast("string")
+    if _is_set_literal(v):
+        return F.lit(json.dumps(v))
+    from dd_graphdb_spark.plans.lower import _lower_expr
+
+    return render_json_value(_lower_expr(v))
 
 
 def cdc_to_deltas(changes: DataFrame) -> DataFrame:
@@ -271,8 +288,7 @@ class GraphStore:
         if self._io.exists(self._meta_path):
             # a reopened store keeps its creation-time bucket count
             # (bucket membership is id % B — changing B would orphan
-            # inherited buckets); pre-manifest stores have no key and
-            # fall back to full-rewrite commits anyway
+            # inherited buckets)
             meta = json.loads(self._io.read_text(self._meta_path))
             self.n_buckets = meta.get("n_buckets", n_buckets)
         else:
@@ -311,29 +327,23 @@ class GraphStore:
     #: checkpoint cadence applied to the same problem)
     _MANIFEST_CKPT_EVERY = 16
 
-    def _load_manifest(self, version: int) -> dict | None:
-        """Bucket→layer-chain map for a version; None = pre-manifest
-        legacy layout (whole-table ``vertices.parquet``/...). Delta
-        manifests reconstruct from their base (≤ _MANIFEST_CKPT_EVERY
-        tiny JSON reads — GETs on an object store, the standard
-        log+checkpoint read path)."""
-        p = self._manifest_path(version)
-        if not self._io.exists(p):
-            return None
-        doc = json.loads(self._io.read_text(p))
+    def _load_manifest(self, version: int) -> dict:
+        """Bucket→layer-chain map for a version. Delta manifests
+        reconstruct from their base (≤ _MANIFEST_CKPT_EVERY tiny JSON
+        reads — GETs on an object store, the standard log+checkpoint
+        read path)."""
+        doc = json.loads(self._io.read_text(self._manifest_path(version)))
         if "full" in doc:
             return doc["full"]
-        if "base" in doc:
-            base = self._load_manifest(doc["base"])
-            out = {t: dict(self._chains(base, t)) for t in ("vertices", "edges")}
-            for t, d in doc["delta"].items():
-                for b, ch in d.items():
-                    if ch is None:
-                        out[t].pop(b, None)  # bucket-absent shadow
-                    else:
-                        out[t][b] = ch
-            return out
-        return doc  # legacy raw full manifest (pre-r14 format)
+        base = self._load_manifest(doc["base"])
+        out = {t: dict(self._chains(base, t)) for t in ("vertices", "edges")}
+        for t, d in doc["delta"].items():
+            for b, ch in d.items():
+                if ch is None:
+                    out[t].pop(b, None)  # bucket-absent shadow
+                else:
+                    out[t][b] = ch
+        return out
 
     def _save_manifest(
         self, version: int, manifest: dict, prev: dict | None = None
@@ -361,18 +371,10 @@ class GraphStore:
 
     @staticmethod
     def _chains(man: dict, table: str) -> dict[str, list[dict]]:
-        """Normalized bucket→chain view of a manifest table. Chain
-        layers are ``{"p": relpath, "k": "b"(ase)|"d"(elta), "s": seq}``
-        applied in order, later seq wins per key. A legacy (pre-r14)
-        manifest maps bucket→relpath string = a single base layer owned
-        by the version dir in the path."""
-        out: dict[str, list[dict]] = {}
-        for b, v in man[table].items():
-            if isinstance(v, str):
-                out[b] = [{"p": v, "k": "b", "s": int(v.split("/", 1)[0][1:])}]
-            else:
-                out[b] = v
-        return out
+        """Bucket→chain view of a manifest table. Chain layers are
+        ``{"p": relpath, "k": "b"(ase)|"d"(elta), "s": seq}`` applied in
+        order, later seq wins per key."""
+        return man[table]
 
     def _bucket_col(self, col: str) -> Column:
         # pmod matches Python's % for negative ids too — driver-side
@@ -402,8 +404,6 @@ class GraphStore:
         if self._cow_active_memo:
             return True
         man = self._load_manifest(self.version)
-        if man is None:
-            return False  # pre-manifest layout: nothing to inherit
         if self.cow_min_bytes <= 0:
             self._cow_active_memo = True
             return True
@@ -430,16 +430,11 @@ class GraphStore:
         layers, and — only for buckets that carry delta layers — a
         latest-writer-wins merge (window over the tiny delta union +
         one anti-join against the base; AQE broadcasts the delta side).
-        Fully-compacted chains cost exactly the pre-r14 single scan.
-        Keys determine buckets (id % B / src % B), so one global merge
-        is safe across a mixed clean/dirty bucket selection."""
+        Fully-compacted chains cost one plain multi-path scan. Keys
+        determine buckets (id % B / src % B), so one global merge is
+        safe across a mixed clean/dirty bucket selection."""
         schema = VERTEX_SCHEMA if table == "vertices" else EDGE_SCHEMA
-        man = self._load_manifest(version)
-        if man is None:  # pre-manifest store: whole-table parquet
-            return self.spark.read.schema(schema).parquet(
-                os.path.join(self._vdir(version), f"{table}.parquet")
-            )
-        chains = self._chains(man, table)
+        chains = self._chains(self._load_manifest(version), table)
         if buckets is not None:
             chains = {b: c for b, c in chains.items() if int(b) in buckets}
         base_paths: list[str] = []
@@ -476,17 +471,6 @@ class GraphStore:
         cols = [f.name for f in base.schema.fields]
         live = latest.filter(F.col("_op") == "u").select(*cols)
         return base.join(latest.select(*key), key, "left_anti").unionByName(live)
-
-    def _write_version(self, version: int, vertices: DataFrame, edges: DataFrame) -> None:
-        """Full (all-bucket) snapshot write — initial load / legacy-store
-        upgrade path. Incremental commits go through _commit_version."""
-        manifest = {}
-        for table, df in (("vertices", vertices), ("edges", edges)):
-            entries = self._write_buckets(version, table, table, df, None)
-            manifest[table] = {
-                b: [{"p": p, "k": "b", "s": version}] for b, p in entries.items()
-            }
-        self._save_manifest(version, manifest)
 
     def _write_buckets(
         self,
@@ -592,8 +576,8 @@ class GraphStore:
             # table untouched: inherit every chain, no write job at all
             return {b: list(c) for b, c in self._chains(prev, table).items()}
         if touched is None:
-            # full rewrite (small store / pre-manifest upgrade): one
-            # base layer per bucket, all chains reset to length 1
+            # full rewrite (store below cow_min_bytes): one base layer
+            # per bucket, all chains reset to length 1
             entries = self._write_buckets(new_version, table, table, df, None)
             return {
                 b: [{"p": p, "k": "b", "s": new_version}]
@@ -648,8 +632,8 @@ class GraphStore:
         and persists only changed rows as a delta layer (compacting
         over-long chains); untouched buckets are inherited by manifest
         reference; empty set = table untouched (no write job at all);
-        None = full rewrite (the frame is the complete table — used when
-        the current version has no manifest to inherit from). Holds the
+        None = full rewrite (the frame is the complete table — used
+        below ``cow_min_bytes``, see _cow_plan). Holds the
         store's writer lock across the manifest read → data write →
         pointer swap so a concurrent vacuum cannot relocate a layer this
         commit is inheriting. ``planned`` is the version ``_cow_plan``
@@ -666,11 +650,6 @@ class GraphStore:
                 )
             new_version = cur + 1
             prev = self._load_manifest(cur)
-            if prev is None and not (v_touched is None and e_touched is None):
-                raise RuntimeError(
-                    "incremental commit over a pre-manifest store — callers "
-                    "must fall back to a full rewrite (see _cow_plan)"
-                )
             work = [
                 ("vertices", v_df, v_touched),
                 ("edges", e_df, e_touched),
@@ -716,9 +695,9 @@ class GraphStore:
         set — touched-set computations that cost a Spark job (distinct-
         bucket collects, the cascade dst-probe) are deferred behind the
         _cow_active gate so small stores never pay them. Below the size
-        threshold (or on a pre-manifest legacy store) the plan degrades
-        to full-table base + full rewrite — the pre-CoW behavior, which
-        is cheaper than the probes for stores a single task rewrites.
+        threshold the plan degrades to full-table base + full rewrite —
+        the pre-CoW behavior, which is cheaper than the probes for
+        stores a single task rewrites.
 
         The last element is the base version the plan reads, which the
         caller hands to _commit_version: it raises ConflictError if a
@@ -817,10 +796,9 @@ class GraphStore:
             *([F.col("label").alias("_new_label")] if table == "vertices" else []),
         )
         # presence markers survive the outer join even for all-null rows
-        j = (
+        j = _ckpt(  # 4 branches below read it once
             old.withColumn("_in_old", F.lit(True))
             .join(new.withColumn("_in_new", F.lit(True)), keys, "full_outer")
-            .localCheckpoint(eager=True)  # 4 branches below read it once
         )
         in_old, in_new = F.col("_in_old").isNotNull(), F.col("_in_new").isNotNull()
         label_old = [F.col("_old_label").alias("label")] if table == "vertices" else []
@@ -904,8 +882,6 @@ class GraphStore:
         - update_edge_props: REPLACE map where the edge exists, keep
           edge identity, no-op on a missing edge (:313-318)
         """
-        from dd_graphdb_spark.algorithms._iter import _persistent_ids, _unpersist
-
         runs: list[tuple[str, list[dict]]] = []
         for op in ops:
             # edge identity is the (src,dst,label) triple, and every
@@ -973,8 +949,7 @@ class GraphStore:
             v_df, e_df = self._apply_run(kind, ps, v_df, e_df)
             # long mixed batches: settle every 16 runs to bound plan depth
             if (i + 1) % 16 == 0 and i + 1 < len(runs):
-                v_df = v_df.localCheckpoint(eager=True)
-                e_df = e_df.localCheckpoint(eager=True)
+                v_df, e_df = _ckpt(v_df), _ckpt(e_df)
 
         new_version = self._commit_version(v_df, e_df, touched_v, touched_e, planned)
         if before is not None:
@@ -1075,148 +1050,37 @@ class GraphStore:
         return self._commit_version(v_df, e_df, touched_v, touched_e, planned)
 
     def update_vertices(self, ids_df: DataFrame, props: dict) -> int:
-        """Bulk per-key property update — the distributed MATCH..SET
-        path. Cypher SET semantics: listed keys overwrite, other keys
-        are KEPT (unlike update_vertex_props' whole-map replace,
+        """Bulk per-key property update — MATCH..SET's path
+        (_apply_set) with literal values. Cypher SET semantics: listed
+        keys overwrite, a None value removes its key, other keys are
+        KEPT (unlike update_vertex_props' whole-map replace,
         lib.rs:310-312). ``ids_df`` must have a single ``id`` column."""
-        v_base, _, touched_v, touched_e, planned = self._cow_plan(
-            lambda: self._collect_buckets(ids_df, "id"), set()
-        )
-        v_df = self._updated_vertices_df(v_base, ids_df, props)
-        e_df = self.edges() if touched_e is None else None
-        return self._commit_version(v_df, e_df, touched_v, touched_e, planned)
-
-    @staticmethod
-    def _updated_vertices_df(v_base: DataFrame, ids_df: DataFrame, props: dict) -> DataFrame:
-        """Pure transform behind update_vertices — composable so a
-        multi-variable MATCH..SET can fold several updates into ONE
-        snapshot version."""
-        ids = ids_df.select("id").distinct().withColumn("_hit", F.lit(True))
-        v = v_base.join(ids, "id", "left")
-        updated = F.coalesce(F.col("properties"), F.expr("map()"))
-
-        def drop_key(key):
-            return lambda mk, _mv: mk != F.lit(key)
-
-        for k, val in props.items():
-            updated = F.map_concat(
-                F.map_filter(updated, drop_key(k)),
-                F.create_map(F.lit(k), F.lit(json.dumps(val))),
-            )
-        # the store treats vertex label as the 'type' property (apply_batch
-        # derives the label column from props['type']) — keep the two in
-        # sync: SET v.type = 'X' must also rewrite the label column, else
-        # label filters see the stale value.
-        if "type" in props:
-            label_col = F.when(F.col("_hit"), F.lit(str(props["type"]))).otherwise(
-                F.col("label")
-            ).alias("label")
-        else:
-            label_col = F.col("label")
-        return v.select(
-            "id",
-            label_col,
-            F.when(F.col("_hit"), updated).otherwise(F.col("properties")).alias(
-                "properties"
-            ),
-        )
-
-    @staticmethod
-    def _removed_vertex_props_df(v_base: DataFrame, ids_df: DataFrame, keys: list[str]) -> DataFrame:
-        """Pure transform: drop property KEYS from matched vertices
-        (Cypher REMOVE — the schemaless bag makes this a map-key
-        deletion). Removing ``type`` also clears the label column
-        (label IS the type property, executor.rs:290-295)."""
-        ids = ids_df.select("id").distinct().withColumn("_hit", F.lit(True))
-        v = v_base.join(ids, "id", "left")
-        pruned = F.map_filter(
-            F.coalesce(F.col("properties"), F.expr("map()")),
-            lambda mk, _mv: ~mk.isin(*[F.lit(k) for k in keys]),
-        )
-        if "type" in keys:
-            label_col = F.when(F.col("_hit"), F.lit(None).cast("string")).otherwise(
-                F.col("label")
-            ).alias("label")
-        else:
-            label_col = F.col("label")
-        return v.select(
-            "id",
-            label_col,
-            F.when(F.col("_hit"), pruned).otherwise(F.col("properties")).alias(
-                "properties"
-            ),
-        )
-
-    @staticmethod
-    def _removed_edge_props_df(e_base: DataFrame, keys_df: DataFrame, keys: list[str]) -> DataFrame:
-        """Edge analogue of _removed_vertex_props_df."""
-        hit = keys_df.select("src", "dst", "label").distinct().withColumn(
-            "_hit", F.lit(True)
-        )
-        e = e_base.join(hit, ["src", "dst", "label"], "left")
-        pruned = F.map_filter(
-            F.coalesce(F.col("properties"), F.expr("map()")),
-            lambda mk, _mv: ~mk.isin(*[F.lit(k) for k in keys]),
-        )
-        return e.select(
-            "src",
-            "dst",
-            "label",
-            F.when(F.col("_hit"), pruned).otherwise(F.col("properties")).alias(
-                "properties"
-            ),
-        )
+        bindings = ids_df.select(F.col("id").alias("v__id"))
+        return self._apply_set(bindings, [("v", k, x) for k, x in props.items()])[1]
 
     def update_edges(self, keys_df: DataFrame, props: dict) -> int:
         """Bulk per-key edge property update (Cypher SET semantics, like
         update_vertices). ``keys_df`` needs (src, dst, label) columns."""
-        _, e_base, touched_v, touched_e, planned = self._cow_plan(
-            set(), lambda: self._collect_buckets(keys_df, "src")
+        bindings = keys_df.select(
+            *[F.col(c).alias(f"e__{c}") for c in self._KEY_COLS["edges"]]
         )
-        e_df = self._updated_edges_df(e_base, keys_df, props)
-        v_df = self.vertices() if touched_v is None else None
-        return self._commit_version(v_df, e_df, touched_v, touched_e, planned)
+        assigns = [("e", k, x) for k, x in props.items()]
+        return self._apply_set(bindings, assigns, {"e"})[1]
 
-    @staticmethod
-    def _updated_edges_df(e_base: DataFrame, keys_df: DataFrame, props: dict) -> DataFrame:
-        """Pure transform behind update_edges (see _updated_vertices_df)."""
-        keys = keys_df.select("src", "dst", "label").distinct().withColumn(
-            "_hit", F.lit(True)
-        )
-        e = e_base.join(keys, ["src", "dst", "label"], "left")
-        updated = F.coalesce(F.col("properties"), F.expr("map()"))
-
-        def drop_key(key):
-            return lambda mk, _mv: mk != F.lit(key)
-
-        for k, val in props.items():
-            updated = F.map_concat(
-                F.map_filter(updated, drop_key(k)),
-                F.create_map(F.lit(k), F.lit(json.dumps(val))),
-            )
-        return e.select(
-            "src",
-            "dst",
-            "label",
-            F.when(F.col("_hit"), updated).otherwise(F.col("properties")).alias(
-                "properties"
-            ),
-        )
-
-    @staticmethod
-    def _updated_vertices_values_df(
-        v_base: DataFrame, vals_df: DataFrame, keys: list[str]
+    def _updated_values_df(
+        self, table: str, base: DataFrame, vals_df: DataFrame, keys: list[str]
     ) -> DataFrame:
-        """Per-ROW computed property update (the expression-SET path):
-        ``vals_df`` carries one row per touched vertex id with a
-        ``_set_{key}`` rendered-JSON column per assigned key. A non-null
-        value overwrites the key, a NULL value REMOVES it (Cypher
-        ``SET v.p = null``); unlisted keys are kept. Rows not in
-        ``vals_df`` are untouched. ``type`` in ``keys`` also rewrites
+        """Apply a values frame to ``table``'s rows: ``vals_df`` carries
+        one row per touched entity (its _KEY_COLS) with a ``_set_{key}``
+        rendered-JSON column per assigned key. A non-null value
+        overwrites the key, a NULL value REMOVES it (Cypher ``SET v.p =
+        null`` / ``REMOVE v.p``); unlisted keys are kept. Rows not in
+        ``vals_df`` are untouched. A vertex ``type`` key also rewrites
         the label column (label IS the type property,
-        executor.rs:290-295) — NULL clears it, like REMOVE."""
-        vals = vals_df.withColumn("_hit", F.lit(True))
-        v = v_base.join(vals, "id", "left")
+        executor.rs:290-295) — NULL clears it."""
+        j = base.join(
+            vals_df.withColumn("_hit", F.lit(True)), self._KEY_COLS[table], "left"
+        )
         updated = F.coalesce(F.col("properties"), F.expr("map()"))
         for k in keys:
             vcol = F.col(f"_set_{k}")
@@ -1224,43 +1088,13 @@ class GraphStore:
             updated = F.when(vcol.isNull(), pruned).otherwise(
                 F.map_concat(pruned, F.create_map(F.lit(k), vcol))
             )
-        if "type" in keys:
-            label_col = F.when(
-                F.col("_hit"), _json_unquote(F.col("_set_type"))
-            ).otherwise(F.col("label")).alias("label")
-        else:
-            label_col = F.col("label")
-        return v.select(
-            "id",
-            label_col,
-            F.when(F.col("_hit"), updated).otherwise(F.col("properties")).alias(
-                "properties"
-            ),
-        )
-
-    @staticmethod
-    def _updated_edges_values_df(
-        e_base: DataFrame, vals_df: DataFrame, keys: list[str]
-    ) -> DataFrame:
-        """Edge analogue of _updated_vertices_values_df — ``vals_df``
-        keyed by the edge identity triple (src, dst, label)."""
-        vals = vals_df.withColumn("_hit", F.lit(True))
-        e = e_base.join(vals, ["src", "dst", "label"], "left")
-        updated = F.coalesce(F.col("properties"), F.expr("map()"))
-        for k in keys:
-            vcol = F.col(f"_set_{k}")
-            pruned = F.map_filter(updated, _drop_key(k))
-            updated = F.when(vcol.isNull(), pruned).otherwise(
-                F.map_concat(pruned, F.create_map(F.lit(k), vcol))
-            )
-        return e.select(
-            "src",
-            "dst",
-            "label",
-            F.when(F.col("_hit"), updated).otherwise(F.col("properties")).alias(
-                "properties"
-            ),
-        )
+        hit = F.col("_hit")
+        out = {"properties": F.when(hit, updated).otherwise(F.col("properties"))}
+        if table == "vertices" and "type" in keys:
+            out["label"] = F.when(
+                hit, _json_unquote(F.col("_set_type"))
+            ).otherwise(F.col("label"))
+        return j.select(*[out.get(c, F.col(c)).alias(c) for c in base.columns])
 
     def _create_pattern(self, pattern) -> list[int]:
         """Create a path pattern's nodes (ids max+1.., one per DISTINCT
@@ -1311,161 +1145,85 @@ class GraphStore:
             ops.append(add_edge(src, dst, e.label or "related", dict(e.props)))
         return ops, node_ids, next_id
 
-    def _apply_set(self, bindings, pattern, assignments) -> DataFrame:
-        """Apply ``[(var, prop, value), ..]`` property SETs to the
-        bound vertices/edges — ONE snapshot version for the whole
-        statement: per-variable transforms compose on the pending frames
-        and commit once, so a crash or concurrent reader can never
-        observe a half-applied SET. Shared by MATCH..SET and MERGE's ON
-        MATCH SET. Returns the touched-id frame.
+    def _apply_set(
+        self, bindings: DataFrame, assignments, edge_vars=frozenset()
+    ) -> tuple[DataFrame, int]:
+        """The one property-write path: MATCH..SET, MERGE's ON MATCH
+        SET, MATCH..REMOVE (a NULL value), FOREACH..SET and
+        update_vertices/update_edges all apply ``[(var, prop, value),
+        ..]`` here as ONE snapshot version: per-variable transforms
+        compose on the pending frames and commit once, so a crash or
+        concurrent reader can never observe a half-applied write.
+        ``bindings`` carries ``{var}__id`` per vertex variable and
+        ``{var}__src/__dst/__label`` per edge variable (``edge_vars``);
+        a later assignment to the same key wins. Returns the touched-id
+        frame and the committed version; no assignments at all (``SET
+        v += {}``) is a Cypher no-op that commits nothing.
 
-        Values: plain literals take the shared-map fast path (no per-row
-        compute); expression ASTs (``SET v.total = v.total + 1``,
-        ``+= {map}`` entries) are lowered with the READ side's
-        expression machinery against the bindings frame, rendered to
-        the store's JSON encoding per matched row (render_json_value),
-        reduced to one value per entity (max of the rendered value — a
-        deterministic pick where Cypher leaves multi-binding writes
-        unordered), and applied distributively via
-        _updated_*_values_df. A NULL value (literal or computed)
-        removes the key. The whole computation is declarative: one
-        join + hash-aggregate over the touched ids, no driver-side
+        Every value becomes a rendered-JSON ``_set_<key>`` column
+        (_set_value) evaluated per binding row, is reduced to one value
+        per entity (a deterministic pick where Cypher leaves
+        multi-binding writes unordered) and applied distributively by
+        _updated_values_df. The whole computation is declarative: one
+        join + hash-aggregate over the touched keys, no driver-side
         rows — the same 100 TB posture as the read path."""
-        from dd_graphdb_spark.plans.lower import _lower_expr
-
-        edge_vars = {e.var for e in pattern.edges if e.var}
         by_var: dict[str, dict] = {}
         for var, prop, val in assignments:
             by_var.setdefault(var, {})[prop] = val
-        if not by_var:  # SET v += {} — Cypher no-op, no version commit
-            return local_df(self.spark, [], "id long")
-        # pass 1: settle each variable's key/value frame and fold its
-        # bucket footprint into the commit scope — the bases are read
-        # AFTER the scope is known so the rewrite only scans touched
-        # buckets (CoW commit; see _commit_version)
-        plans: list[tuple[str, dict, bool, DataFrame]] = []
-        v_frames: list[DataFrame] = []
-        e_frames: list[DataFrame] = []
+        if not by_var:
+            return local_df(self.spark, [], "id long"), self.version
+        # pass 1: settle each variable's key/value frame; its bucket
+        # footprint is the commit scope, and the bases are read AFTER
+        # the scope is known so the rewrite only scans touched buckets
+        # (CoW commit; see _commit_version)
+        plans: list[tuple[str, list[str], DataFrame]] = []
         for var, props in by_var.items():
-            all_literal = all(_is_set_literal(v) for v in props.values())
-            if var in edge_vars and "label" in props:
-                raise ValueError(
-                    "SET e.label is not supported: an edge's label is "
-                    "part of its identity (src, dst, label) — delete "
-                    "and re-create the edge instead"
+            table = "edges" if var in edge_vars else "vertices"
+            key = self._KEY_COLS[table]
+            cols = [f"_set_{k}" for k in props]
+            # ONE witness binding row per entity: all assigned keys
+            # must come from the SAME row (Cypher's sequential
+            # last-row-wins keeps a row's full assignment; an
+            # independent max per key could mix values from
+            # different rows — a combination no row produced). The
+            # witness is the max_by of the whole value struct keyed
+            # by a total order over the rendered tuple (NUL
+            # sentinel keeps null fields distinct from absent).
+            wkey = F.concat_ws(
+                "\x1f", *[F.coalesce(F.col(c), F.lit("\x00")) for c in cols]
+            )
+            vals = _ckpt(  # settle before rewrite
+                bindings.select(
+                    *[F.col(f"{var}__{k}").alias(k) for k in key],
+                    *[_set_value(v).alias(c) for v, c in zip(props.values(), cols)],
                 )
-            # (a computed `type` value flows through
-            # _updated_vertices_values_df's label sync — both paths keep
-            # label == properties['type'])
-            if all_literal:
-                if var in edge_vars:
-                    keys = (
-                        bindings.select(
-                            F.col(f"{var}__src").alias("src"),
-                            F.col(f"{var}__dst").alias("dst"),
-                            F.col(f"{var}__label").alias("label"),
-                        )
-                        .distinct()
-                        .localCheckpoint(eager=True)  # settle before rewrite
-                    )
-                    e_frames.append(keys)
-                else:
-                    keys = (
-                        bindings.select(F.col(f"{var}__id").alias("id"))
-                        .distinct()
-                        .localCheckpoint(eager=True)  # settle before rewrite
-                    )
-                    v_frames.append(keys)
-                plans.append((var, props, True, keys))
-            else:
-                val_cols = []
-                for k, v in props.items():
-                    if _is_set_literal(v):
-                        c = F.lit(json.dumps(v))
-                    elif v is None:
-                        c = F.lit(None).cast("string")  # explicit removal
-                    else:
-                        c = render_json_value(_lower_expr(v))
-                    val_cols.append(c.alias(f"_set_{k}"))
-                # ONE witness binding row per entity: all assigned keys
-                # must come from the SAME row (Cypher's sequential
-                # last-row-wins keeps a row's full assignment; an
-                # independent max per key could mix values from
-                # different rows — a combination no row produced). The
-                # witness is the max_by of the whole value struct keyed
-                # by a total order over the rendered tuple (NUL
-                # sentinel keeps null fields distinct from absent).
-                row_struct = F.struct(
-                    *[F.col(f"_set_{k}") for k in props]
-                )
-                wkey = F.concat_ws(
-                    "\x1f",
-                    *[
-                        F.coalesce(F.col(f"_set_{k}"), F.lit("\x00"))
-                        for k in props
-                    ],
-                )
-                witness = F.max_by(row_struct, wkey).alias("_set_row")
-                unpack = [
-                    F.col("_set_row").getField(f"_set_{k}").alias(f"_set_{k}")
-                    for k in props
-                ]
-                if var in edge_vars:
-                    vals = (
-                        bindings.select(
-                            F.col(f"{var}__src").alias("src"),
-                            F.col(f"{var}__dst").alias("dst"),
-                            F.col(f"{var}__label").alias("label"),
-                            *val_cols,
-                        )
-                        .groupBy("src", "dst", "label")
-                        .agg(witness)
-                        .select("src", "dst", "label", *unpack)
-                        .localCheckpoint(eager=True)  # settle before rewrite
-                    )
-                    e_frames.append(vals)
-                else:
-                    vals = (
-                        bindings.select(
-                            F.col(f"{var}__id").alias("id"), *val_cols
-                        )
-                        .groupBy("id")
-                        .agg(witness)
-                        .select("id", *unpack)
-                        .localCheckpoint(eager=True)  # settle before rewrite
-                    )
-                    v_frames.append(vals)
-                plans.append((var, props, False, vals))
+                .groupBy(*key)
+                .agg(F.max_by(F.struct(*cols), wkey).alias("_set_row"))
+                .select(*key, *[F.col("_set_row").getField(c).alias(c) for c in cols])
+            )
+            plans.append((table, list(props), vals))
 
         # pass 2: compose the per-variable transforms over the
         # bucket-restricted bases and commit ONE version
-        def scope(frames, col):
-            out: set[int] = set()
-            for f in frames:
-                out |= self._collect_buckets(f, col)
-            return out
+        def scope(table):
+            col = self._BUCKET_KEY[table]
+            return set().union(
+                *(self._collect_buckets(f, col) for t, _, f in plans if t == table)
+            )
 
-        v_df, e_df, touched_v_b, touched_e_b, planned = self._cow_plan(
-            (lambda: scope(v_frames, "id")) if v_frames else set(),
-            (lambda: scope(e_frames, "src")) if e_frames else set(),
+        v_df, e_df, tv, te, planned = self._cow_plan(
+            lambda: scope("vertices"), lambda: scope("edges")
         )
+        frames = {"vertices": v_df, "edges": e_df}
         out = None
-        for var, props, all_literal, frame in plans:
-            if var in edge_vars:
-                if all_literal:
-                    e_df = self._updated_edges_df(e_df, frame, props)
-                else:
-                    e_df = self._updated_edges_values_df(e_df, frame, list(props))
-                touched = frame.select(F.col("src").alias("id"))
-            else:
-                if all_literal:
-                    v_df = self._updated_vertices_df(v_df, frame, props)
-                else:
-                    v_df = self._updated_vertices_values_df(v_df, frame, list(props))
-                touched = frame.select("id")
+        for table, keys, vals in plans:
+            frames[table] = self._updated_values_df(table, frames[table], vals, keys)
+            touched = vals.select(F.col(self._BUCKET_KEY[table]).alias("id"))
             out = touched if out is None else out.unionByName(touched).distinct()
-        self._commit_version(v_df, e_df, touched_v_b, touched_e_b, planned)
-        return out
+        version = self._commit_version(
+            frames["vertices"], frames["edges"], tv, te, planned
+        )
+        return out, version
 
     def _foreach_write(self, stmt, bindings, src, engine) -> DataFrame:
         """FOREACH CREATE/MERGE bodies (the Cypher bulk-create idiom —
@@ -1541,12 +1299,15 @@ class GraphStore:
         return local_df(self.spark, [(i,) for i in all_ids], "id long")
 
     def execute_mutation(self, stmt, engine) -> DataFrame:
-        """Apply a parsed GQL CREATE / MATCH..DELETE statement.
+        """Apply a parsed GQL write statement: CREATE, MERGE,
+        MATCH..DELETE, or a property write — MATCH..SET, MATCH..REMOVE
+        and FOREACH..SET all go through _apply_set (REMOVE v.p is SET
+        v.p = null).
 
-        Lifetime note: the MERGE/SET/DELETE paths localCheckpoint their
-        matched-key frames (load-bearing: the ids must settle BEFORE the
-        snapshot rewrite reads the store, and the returned frame
-        references those blocks). The blocks free once the caller drops
+        Lifetime note: the MERGE/SET/REMOVE/FOREACH/DELETE paths
+        checkpoint their matched-key frames (load-bearing: the ids must
+        settle BEFORE the snapshot rewrite reads the store, and the
+        returned frame references those blocks). The blocks free once the caller drops
         the result (ContextCleaner after GC — the suites' session
         hygiene runs both GCs between queries); they are deliberately
         NOT eagerly unpersisted here, which would invalidate the
@@ -1559,15 +1320,22 @@ class GraphStore:
 
         MATCH..DELETE (execute_match_delete, :569-615): match the
         pattern + WHERE, delete the bound variable's vertices (cascade).
-        Returns the deleted ids.
+        Returns the deleted ids. The property writes return the touched
+        ids (an edge variable's touched src ids).
         """
-        from dd_graphdb_spark.plans.gql import CreateStatement, MatchDeleteStatement
+        from dd_graphdb_spark.plans.gql import (
+            CreateStatement,
+            ForeachStatement,
+            MatchDeleteStatement,
+            MatchRemoveStatement,
+            MatchSetStatement,
+            MergeStatement,
+            _edge_vars,
+        )
 
         if isinstance(stmt, CreateStatement):
             node_ids = self._create_pattern(stmt.pattern)
             return local_df(self.spark, [(i,) for i in node_ids], "id long")
-
-        from dd_graphdb_spark.plans.gql import MatchSetStatement, MergeStatement
 
         if isinstance(stmt, MergeStatement):
             # Cypher MERGE: match the WHOLE pattern (exact label +
@@ -1583,17 +1351,15 @@ class GraphStore:
             pattern = stmt.pattern
             uniq_vars = list(dict.fromkeys(n.var for n in pattern.nodes))
             bindings = engine.match_bindings(pattern)
-            ids = (
+            ids = _ckpt(
                 bindings.select(
                     *[F.col(f"{v}__id").alias("id" if len(uniq_vars) == 1 else v)
                       for v in uniq_vars]
-                )
-                .distinct()
-                .localCheckpoint(eager=True)
+                ).distinct()
             )
             if not ids.isEmpty():
                 if stmt.on_match:
-                    self._apply_set(bindings, pattern, stmt.on_match)
+                    self._apply_set(bindings, stmt.on_match, _edge_vars(pattern))
                 return ids
             if stmt.on_create:
                 # fold into a COPY — programmatic ASTs may be reused
@@ -1620,19 +1386,19 @@ class GraphStore:
 
         if isinstance(stmt, MatchSetStatement):
             bindings = engine.match_bindings(stmt.pattern, stmt.where)
-            return self._apply_set(bindings, stmt.pattern, stmt.assignments)
-
-        from dd_graphdb_spark.plans.gql import ForeachStatement
+            return self._apply_set(
+                bindings, stmt.assignments, _edge_vars(stmt.pattern)
+            )[0]
 
         if isinstance(stmt, ForeachStatement):
-            # FOREACH (x IN <id-list> | SET x.p = lit, ..): bind the
+            # FOREACH (x IN <id-list> | SET x.p = <expr>, ..): bind the
             # pattern, lower the list expression per row (path functions
-            # over a bound path variable rewrite to p__nodes etc.),
-            # explode to the touched vertex-id set, apply the literal
-            # updates in ONE snapshot version. Cypher's per-element
-            # sequential semantics coincide with the set-at-once form
-            # because values are literals (last write of a duplicate
-            # prop wins via the dict fold below, same as Cypher).
+            # over a bound path variable rewrite to p__nodes etc.) and
+            # explode it into x__id beside the OUTER row, so values
+            # lowered against that row (SET n.depth = length(p)) reach
+            # every element; then MATCH..SET's path. The loop variable
+            # binds only x__id: x.<prop> in a value raises the read
+            # side's missing-column error.
             from dd_graphdb_spark.plans.lower import (
                 _lower_expr,
                 _rewrite_path_funcs,
@@ -1647,122 +1413,26 @@ class GraphStore:
                 src = _rewrite_path_funcs(src, stmt.pattern.pvar, has_varlen)
             if stmt.body_kind in ("create", "merge"):
                 return self._foreach_write(stmt, bindings, src, engine)
-            props = dict(stmt.assignments)
-            if all(_is_set_literal(v) for v in props.values()):
-                ids = (
-                    bindings.select(F.explode(_lower_expr(src)).alias("id"))
-                    .select(F.col("id").cast("long").alias("id"))
-                    .distinct()
-                    .localCheckpoint(eager=True)  # settle before rewrite
-                )
-                v_base, _, tv, te, planned = self._cow_plan(
-                    lambda: self._collect_buckets(ids, "id"), set()
-                )
-                v_df = self._updated_vertices_df(v_base, ids, props)
-            else:
-                # expression values: lowered against the OUTER bindings
-                # row (e.g. SET n.depth = length(p)), rendered alongside
-                # the exploded id so each list element carries its own
-                # row's computed values; one value per id via max of the
-                # rendered JSON (same determinism contract as
-                # _apply_set). The loop variable itself is not a frame
-                # column — referencing it in a value raises the read
-                # side's bare-name error.
-                val_cols = []
-                for k, v in props.items():
-                    if _is_set_literal(v):
-                        c = F.lit(json.dumps(v))
-                    elif v is None:
-                        c = F.lit(None).cast("string")
-                    else:
-                        c = render_json_value(_lower_expr(v))
-                    val_cols.append(c.alias(f"_set_{k}"))
-                vals = (
-                    bindings.select(
-                        F.explode(_lower_expr(src)).alias("id"), *val_cols
-                    )
-                    .select(F.col("id").cast("long").alias("id"), *[
-                        f"_set_{k}" for k in props
-                    ])
-                    .groupBy("id")
-                    .agg(*[F.max(f"_set_{k}").alias(f"_set_{k}") for k in props])
-                    .localCheckpoint(eager=True)  # settle before rewrite
-                )
-                v_base, _, tv, te, planned = self._cow_plan(
-                    lambda: self._collect_buckets(vals, "id"), set()
-                )
-                v_df = self._updated_vertices_values_df(v_base, vals, list(props))
-                ids = vals.select("id")
-            e_df = self.edges() if te is None else None
-            self._commit_version(v_df, e_df, tv, te, planned)
-            return ids
+            lid = f"{stmt.lvar}__id"
+            elems = bindings.select(
+                "*", F.explode(_lower_expr(src)).alias(lid)
+            ).withColumn(lid, F.col(lid).cast("long"))
+            assigns = [(stmt.lvar, k, v) for k, v in stmt.assignments]
+            return self._apply_set(elems, assigns)[0]
 
         if isinstance(stmt, MatchDeleteStatement):
             bindings = engine.match_bindings(stmt.pattern, stmt.where)
             var = stmt.delete_var
-            ids = bindings.select(F.col(f"{var}__id").alias("id")).distinct()
-            ids = ids.localCheckpoint(eager=True)  # settle before rewrite
+            # settle before rewrite
+            ids = _ckpt(bindings.select(F.col(f"{var}__id").alias("id")).distinct())
             self.delete_vertices(ids)
             return ids
 
-        from dd_graphdb_spark.plans.gql import MatchRemoveStatement
-
         if isinstance(stmt, MatchRemoveStatement):
-            # one snapshot version for the whole statement (same contract
-            # as MATCH..SET): fold per-variable key removals over the
-            # pending frames, commit once
+            # REMOVE v.p is SET v.p = null
             bindings = engine.match_bindings(stmt.pattern, stmt.where)
-            edge_vars = {e.var for e in stmt.pattern.edges if e.var}
-            by_var: dict[str, list[str]] = {}
-            for var, prop in stmt.removals:
-                by_var.setdefault(var, []).append(prop)
-            # same two-pass CoW shape as _apply_set: settle key frames +
-            # bucket scope first, then compose over restricted bases
-            plans = []
-            v_frames = []
-            e_frames = []
-            for var, keys in by_var.items():
-                if var in edge_vars:
-                    hit = (
-                        bindings.select(
-                            F.col(f"{var}__src").alias("src"),
-                            F.col(f"{var}__dst").alias("dst"),
-                            F.col(f"{var}__label").alias("label"),
-                        )
-                        .distinct()
-                        .localCheckpoint(eager=True)  # settle before rewrite
-                    )
-                    e_frames.append(hit)
-                else:
-                    hit = (
-                        bindings.select(F.col(f"{var}__id").alias("id"))
-                        .distinct()
-                        .localCheckpoint(eager=True)  # settle before rewrite
-                    )
-                    v_frames.append(hit)
-                plans.append((var, keys, hit))
-
-            def scope(frames, col):
-                out: set[int] = set()
-                for f in frames:
-                    out |= self._collect_buckets(f, col)
-                return out
-
-            v_df, e_df, tv, te, planned = self._cow_plan(
-                (lambda: scope(v_frames, "id")) if v_frames else set(),
-                (lambda: scope(e_frames, "src")) if e_frames else set(),
-            )
-            out = None
-            for var, keys, hit in plans:
-                if var in edge_vars:
-                    e_df = self._removed_edge_props_df(e_df, hit, keys)
-                    touched = hit.select(F.col("src").alias("id"))
-                else:
-                    v_df = self._removed_vertex_props_df(v_df, hit, keys)
-                    touched = hit
-                out = touched if out is None else out.unionByName(touched).distinct()
-            self._commit_version(v_df, e_df, tv, te, planned)
-            return out
+            assigns = [(var, prop, None) for var, prop in stmt.removals]
+            return self._apply_set(bindings, assigns, _edge_vars(stmt.pattern))[0]
 
         raise ValueError(f"unsupported mutation {type(stmt).__name__}")
 
@@ -1809,12 +1479,13 @@ class GraphStore:
         dead = {v for v in versions if v <= cur - keep_last}
         if not dead:
             return
-        kept = [v for v in versions if v not in dead]
+        # dirs above ``cur`` are crashed, uncommitted commits (no
+        # manifest, or one no pointer names): the next commit reuses
+        # their number, so they are neither kept nor dropped here
+        kept = [v for v in versions if v not in dead and v <= cur]
         moves: dict[str, str] = {}  # old relpath -> new relpath
         for v in kept:  # ascending: relocate into the OLDEST referencer
             man = self._load_manifest(v)
-            if man is None:
-                continue
             patched = {}
             for table in ("vertices", "edges"):
                 chains = self._chains(man, table)

@@ -2322,6 +2322,20 @@ def test_set_edge_label_rejected(spark, tmp_path):
         engine().execute("MATCH (x)-[e:r]->(y) SET e.label = toUpper('z')")
 
 
+def test_merge_on_match_set_edge_label_rejected_remove_accepted(spark, tmp_path):
+    # the refusal is SET's alone: REMOVE e.label shares the write path
+    # and stays a no-op on the identity label
+    store, engine = _set_store(spark, tmp_path, {"name": "string"}, {})
+    engine().execute("CREATE (a:P {name: 'a'})-[:r]->(b:P {name: 'b'})")
+    with pytest.raises(ValueError, match="part of its identity"):
+        engine().execute(
+            "MERGE (x:P {name: 'a'})-[e:r]->(y:P {name: 'b'}) "
+            "ON MATCH SET e.label = 'z'"
+        )
+    engine().execute("MATCH (x)-[e:r]->(y) REMOVE e.label")
+    assert [r["label"] for r in store.edges().collect()] == ["r"]
+
+
 def test_set_string_escapes_roundtrip(spark, tmp_path):
     # render_json_value must produce json.dumps-compatible escapes so
     # prop_typed decodes computed strings exactly
@@ -2345,6 +2359,20 @@ def test_set_computed_type_resyncs_label(spark, tmp_path):
     assert store.vertices().collect()[0]["label"] == "PERSON"
 
 
+def test_set_literal_bool_type_label_matches_property(spark, tmp_path):
+    # a literal and a computed value take one path: the label is the
+    # unquoted stored `type`, 'true' — not Python's str(True)
+    from dd_graphdb_spark.storage.store import prop_typed
+
+    store, engine = _set_store(spark, tmp_path)
+    engine().execute("CREATE (a:P {name: 'ann', age: 40})")
+    engine().execute("MATCH (v:P) SET v.type = true")
+    row = store.vertices().select(
+        "label", prop_typed("properties", "type").alias("t")
+    ).collect()[0]
+    assert row["label"] == row["t"] == "true"
+
+
 def test_foreach_expression_body_from_outer_binding(spark, tmp_path):
     from dd_graphdb_spark.storage.store import prop_typed
 
@@ -2364,6 +2392,35 @@ def test_foreach_expression_body_from_outer_binding(spark, tmp_path):
         .collect()
     }
     assert got == {"ANN": "ann", "BEN": "ann"}
+
+
+def test_foreach_multi_key_set_takes_one_binding_row(spark, tmp_path):
+    # b is on two paths, a->b (s.k=1: x=1, y=9) and b->c (s.k=2: x=2,
+    # y=8); both keys must come from ONE of them, the same pair that
+    # MATCH..SET's witness picks over the same binding rows
+    from dd_graphdb_spark.storage.store import prop_typed
+
+    def pairs(name, stmt):
+        store, engine = _set_store(spark, tmp_path / name, {"k": "long"})
+        engine().execute("CREATE (a:P {k: 1})-[:r]->(b:P {k: 2})-[:r]->(c:P {k: 3})")
+        engine().execute(stmt)
+        got = store.vertices().select(
+            *[prop_typed("properties", c, "long").alias(c) for c in ("k", "x", "y")]
+        )
+        return {r["k"]: (r["x"], r["y"]) for r in got.collect()}
+
+    fe = pairs(
+        "foreach",
+        "MATCH p = (s:P)-[:r]->(t:P) "
+        "FOREACH (n IN nodes(p) | SET n.x = s.k, n.y = 10 - s.k)",
+    )
+    assert fe[2] in {(1, 9), (2, 8)}
+    ms = pairs(
+        "match_set",
+        "MATCH (s:P)-[:r*0..1]->(n:P) WHERE s.k < 3 "
+        "SET n.x = s.k, n.y = 10 - s.k",
+    )
+    assert fe == ms == {1: (1, 9), 2: (2, 8), 3: (2, 8)}
 
 
 # -------------------------------------------- COUNT{} in post-WITH positions

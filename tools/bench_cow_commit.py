@@ -57,8 +57,7 @@ def main() -> None:
             F.lit("knows").alias("label"),
             F.create_map().cast("map<string,string>").alias("properties"),
         )
-        store._write_version(1, v, e)
-        store._set_version(1)
+        store._commit_version(v, e, None, None, store.version)
 
         def du(p):
             import os
