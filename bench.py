@@ -170,7 +170,7 @@ def main() -> None:
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from dd_graphdb_spark import get_spark
-    from dd_graphdb_spark.suites import all_queries
+    from dd_graphdb_spark.suites import _hygiene, all_queries
 
     spark = get_spark("dd-graphdb-bench")
     # hygiene=False: scrub() below is the ONE GC pass, run OUTSIDE the
@@ -256,16 +256,13 @@ def main() -> None:
         queries are independent and collected eagerly, so nothing live is
         lost; this keeps per-query timings from measuring the *previous*
         query's leftover block/shuffle state."""
-        import gc
-
-        gc.collect()
         try:
             it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
             while it.hasNext():
                 it.next()._2().unpersist(False)
-            spark.sparkContext._jvm.System.gc()
         except Exception:
             pass
+        _hygiene(spark)
 
     # Fixed synthetic probe: machine-speed calibration. Headline timings
     # on a shared host drift ±60% between rounds (measured: identical

@@ -26,17 +26,19 @@ from __future__ import annotations
 import os
 import threading
 from collections.abc import Callable
+from contextlib import contextmanager
 from dataclasses import replace
 
 from pyspark.sql import DataFrame
 
 from dd_graphdb_spark.session import rebind, scoped
 
-#: serializes the snapshot→loop→unpersist bracket: the diff-based
-#: bookkeeping sees SESSION-global pinned-RDD state, so a second loop
-#: (e.g. another thread of an embedding HTTP server) pinning checkpoints
-#: between this loop's snapshots would have its blocks unpersisted —
-#: and a localCheckpoint cannot be recomputed after unpersist
+#: serializes the snapshot→block→unpersist brackets (``pin_scope``):
+#: the diff-based bookkeeping sees SESSION-global pinned-RDD state, so a
+#: second bracket (e.g. another thread of an embedding HTTP server)
+#: pinning checkpoints between this one's snapshots would have its
+#: blocks unpersisted — and a localCheckpoint cannot be recomputed
+#: after unpersist
 _PIN_LOCK = threading.RLock()
 
 
@@ -332,28 +334,60 @@ class RoundPins:
         _unpersist(self._spark, dead - live_ids)
 
 
-def run_loop(impl: Callable[..., DataFrame], g, *args, **kwargs) -> DataFrame:
-    """Run a fixpoint loop and free every block it pinned except the
-    result's. ``g`` is the PropertyGraph (first arg of every impl). A
-    loop that ran in a child session (``wide_shuffle``) has its result
-    rebound into the caller's session before the final checkpoint, so
-    that last stage plans at the caller's width."""
-    spark = g.vertices.sparkSession
+class _PinScope:
+    """The RDD blocks a ``pin_scope`` block keeps pinned past its exit."""
+
+    def __init__(self, spark, classic: bool) -> None:
+        self._spark = spark
+        self.classic = classic  # False on Spark Connect: no bookkeeping
+        self.kept: set[int] = set()
+
+    def keep(self, make: Callable[[], DataFrame]) -> DataFrame:
+        """Run ``make()`` (a result checkpoint the caller returns) and
+        keep the RDD blocks it pins."""
+        if not self.classic:
+            return make()
+        before = _persistent_ids(self._spark)
+        out = make()
+        self.kept |= _persistent_ids(self._spark) - before
+        return out
+
+
+@contextmanager
+def pin_scope(spark):
+    """Bracket a block that pins localCheckpoint blocks — a fixpoint
+    loop, a store batch's settle checkpoints, a view refresh. Under
+    ``_PIN_LOCK`` it snapshots the session's persistent RDD ids, and on
+    exit, also when the block raises, unpersists every RDD pinned
+    inside except those ``scope.keep`` recorded. Holding the lock for
+    the whole block keeps another thread's bracket from freeing blocks
+    this one just checkpointed. On Spark Connect (no gateway) the block
+    just runs."""
     with _PIN_LOCK:
         try:
             before = _persistent_ids(spark)
-        except Exception:  # non-classic gateway (Spark Connect) — just run
-            return impl(g, *args, **kwargs)
-        final_ids: set[int] = set()
+        except Exception:  # Spark Connect: ContextCleaner self-manages
+            before = None
+        scope = _PinScope(spark, before is not None)
         try:
-            result = impl(g, *args, **kwargs)
-            mid = _persistent_ids(spark)
-            final = _ckpt(rebind(result, spark))
-            final_ids = _persistent_ids(spark) - mid
-            return final
+            yield scope
         finally:
-            # also on a raising loop (e.g. a non-convergence guard):
-            # everything the aborted loop pinned is garbage — leaving it
-            # pinned is the 12s→400s same-session degradation this
-            # bracket exists to prevent
-            _unpersist(spark, (_persistent_ids(spark) - before) - final_ids)
+            if before is not None:
+                _unpersist(spark, (_persistent_ids(spark) - before) - scope.kept)
+
+
+def run_loop(impl: Callable[..., DataFrame], g, *args, **kwargs) -> DataFrame:
+    """Run a fixpoint loop and free every block it pinned except the
+    result's — also on a raising loop (e.g. a non-convergence guard):
+    left pinned, an aborted loop's blocks are the 12s→400s
+    same-session degradation this bracket exists to prevent. ``g`` is
+    the PropertyGraph (first arg of every impl). A loop that ran in a
+    child session (``wide_shuffle``) has its result rebound into the
+    caller's session before the final checkpoint, so that last stage
+    plans at the caller's width."""
+    spark = g.vertices.sparkSession
+    with pin_scope(spark) as pins:
+        result = impl(g, *args, **kwargs)
+        if not pins.classic:
+            return result
+        return pins.keep(lambda: _ckpt(rebind(result, spark)))

@@ -178,9 +178,6 @@ class PropertyGraph:
 
     # -- degree / stats (graph/collection/src/lib.rs:210-223;
     #    graph/storage/src/lib.rs:571-579) --------------------------------
-    def out_degrees(self) -> DataFrame:
-        return self.edges.groupBy("src").agg(F.count("*").alias("out_degree"))
-
     def in_degrees(self) -> DataFrame:
         return self.edges.groupBy("dst").agg(F.count("*").alias("in_degree"))
 

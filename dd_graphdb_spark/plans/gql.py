@@ -343,17 +343,15 @@ class UnwindClause:
 
 @dataclass
 class WithStage:
-    """One additional ``WITH`` pipeline stage after the first — native
-    multi-WITH chains ``MATCH .. WITH .. [WITH ..]* RETURN`` (Cypher's
-    everyday linear pipeline; beyond the reference, whose grammar has
-    no WITH at all — graph/query/src/gql.pest:28-42 covers only
-    MATCH/WHERE/RETURN). Field semantics mirror the first stage's
-    ``with_*`` fields on MatchStatement: items project/aggregate the
-    previous stage's scope (bare aliases + passed-through variables),
-    then DISTINCT → WHERE → ORDER BY → SKIP → LIMIT apply in Cypher
-    clause order, then the stage's own post-WITH MATCH clauses join on
-    passed-through variables, then a trailing UNWIND feeds the next
-    stage (or the RETURN)."""
+    """One ``WITH`` stage of a read pipeline ``MATCH .. [WITH ..]*
+    RETURN`` — every stage, the first included (Cypher's everyday linear
+    pipeline; beyond the reference, whose grammar has no WITH at all —
+    graph/query/src/gql.pest:28-42 covers only MATCH/WHERE/RETURN).
+    Items project/aggregate the previous stage's scope (bare aliases +
+    passed-through variables), then DISTINCT → WHERE → ORDER BY → SKIP
+    → LIMIT apply in Cypher clause order, then the stage's own post-WITH
+    MATCH clauses join on passed-through variables, then a trailing
+    UNWIND feeds the next stage (or the RETURN)."""
 
     items: list
     distinct: bool = False
@@ -370,6 +368,11 @@ class WithStage:
 
 @dataclass
 class MatchStatement:
+    """A read statement: MATCH pattern + WHERE, further MATCH clauses,
+    an optional correlated CALL, the WITH pipeline (``with_stages``,
+    first WITH at index 0) and the RETURN with its DISTINCT / ORDER BY /
+    SKIP / LIMIT. Also the body of a correlated CALL (CallSubClause)."""
+
     pattern: PathPattern
     where: object | None
     returns: list[ReturnItem]
@@ -381,35 +384,17 @@ class MatchStatement:
     # ("match", clause) inner-joins on shared variables, ("optional",
     # clause) left-joins (clause.where applies within the pattern)
     clauses: list = field(default_factory=list)
-    # restricted WITH pipeline: project/aggregate, then filter (HAVING
-    # idiom), then RETURN references the WITH output by bare alias;
-    # WITH DISTINCT dedups the projected intermediate (Cypher)
-    with_items: list[ReturnItem] | None = None
-    with_distinct: bool = False
-    with_where: object | None = None
-    # MATCH / OPTIONAL MATCH clauses AFTER the WITH (only for
-    # non-aggregating WITH; they join on passed-through variables)
-    post_clauses: list = field(default_factory=list)
-    # WITH-pipeline result modifiers (Cypher `WITH .. ORDER BY .. SKIP
-    # .. LIMIT ..` — the pipeline top-k idiom): applied to the WITH
-    # intermediate BEFORE post-WITH MATCH clauses / UNWIND / RETURN
-    with_order: list[OrderItem] = field(default_factory=list)
-    with_skip: int | None = None
-    with_limit: int | None = None
     # UNWIND at statement start (pattern may be None for the pure
     # `UNWIND [..] AS x RETURN ..` form); values must be a list literal
     unwind_first: UnwindClause | None = None
-    # UNWIND between the MATCH clauses / WITH pipeline and RETURN;
-    # values may be a WITH alias (post-WITH only) or a list literal
+    # UNWIND right before RETURN in a statement WITHOUT a WITH pipeline
+    # (a stage's trailing UNWIND is WithStage.unwind); a list literal
     unwind: UnwindClause | None = None
     # correlated CALL { WITH x .. } between the MATCH clauses and the
     # WITH/UNWIND/RETURN; its output columns join the scope as bare names
     call_sub: CallSubClause | None = None
-    # additional WITH pipeline stages AFTER the first (multi-WITH
-    # chains); the first stage stays on the with_* fields above
+    # the WITH pipeline, one WithStage per WITH in source order
     with_stages: list = field(default_factory=list)
-    # first stage is `WITH * [, extra items]` (see WithStage.star)
-    with_star: bool = False
 
 
 @dataclass
@@ -552,20 +537,18 @@ class CallSubClause:
     INNER join (Cypher drops outer rows whose subquery produced
     nothing). Body ORDER BY / SKIP / LIMIT rank per imported-id group
     (one row_number window — per-outer-row top-k), and the body may
-    carry a WITH pipeline of one or MORE chained stages (aggregating
-    or projecting, each with its own WHERE / ORDER BY / SKIP / LIMIT /
-    DISTINCT, post-WITH MATCH clauses and a trailing UNWIND) — each
-    stage evaluates per
-    imported binding, so the pipeline composes like Cypher's per-row
-    execution without re-executing the body. A leading UNWIND (before
-    the body MATCH) explodes its list per body binding; a nested CALL
-    may appear alone or composed with the WITH pipeline (nested
-    outputs enter the pipeline scope as bare names); WITH stages
-    CHAIN inside the body exactly as at statement scope (each stage
-    evaluates per imported binding). Scope: every imported variable
-    must be reused in the body pattern (the id witness IS the
-    correlation). WITH * chains inside bodies (r13: keeps the whole
-    body frame per imported binding, extras collision-checked);
+    carry a WITH pipeline (``inner.with_stages``) with the same grammar
+    and the same stage lowering as statement scope; each stage
+    evaluates per imported binding, so the pipeline composes like
+    Cypher's per-row execution without re-executing the body. A
+    leading UNWIND (before the body MATCH) explodes its list per body
+    binding; a nested CALL may appear alone or composed with the WITH
+    pipeline (nested outputs enter the pipeline scope as bare names).
+    A body UNWIND after the MATCH needs a WITH stage before it.
+    Scope: every imported variable must be reused in the body pattern
+    (the id witness IS the correlation). WITH * chains inside bodies
+    (r13: keeps the whole body frame per imported binding, extras
+    collision-checked);
     RETURN * is supported once a WITH stage has reduced the scope to
     named scalar columns — while entity bindings remain in scope it
     stays rejected, because * would re-export the imported variables
@@ -1760,7 +1743,7 @@ class _Parser:
                 f"GQL parse error: the CALL body's UNWIND alias "
                 f"{lead_unwind.alias!r} shadows an imported variable"
             )
-        if inner.with_items is None and inner.unwind is not None:
+        if inner.unwind is not None:
             raise ValueError(
                 "GQL parse error: UNWIND inside a correlated CALL body "
                 "needs a WITH pipeline before it — "
@@ -1774,27 +1757,22 @@ class _Parser:
                 "body needs ORDER BY — per-outer-row top-k is undefined "
                 "on unordered rows"
             )
-        if inner.with_items is not None:
-            body_stages = [
-                (inner.with_items, inner.with_order,
-                 inner.with_skip, inner.with_limit)
-            ] + [(s.items, s.order, s.skip, s.limit) for s in inner.with_stages]
-            for s_items, s_order, s_skip, s_limit in body_stages:
-                if (s_skip is not None or s_limit is not None) and not (
-                    s_order or all(i.agg for i in s_items)
-                ):
+        for st in inner.with_stages:
+            if (st.skip is not None or st.limit is not None) and not (
+                st.order or all(i.agg for i in st.items)
+            ):
+                raise ValueError(
+                    "GQL parse error: WITH SKIP/LIMIT inside a "
+                    "correlated CALL body needs ORDER BY — "
+                    "per-outer-row top-k is undefined on unordered "
+                    "rows"
+                )
+            for it in st.items:
+                if it.agg and not it.alias:
                     raise ValueError(
-                        "GQL parse error: WITH SKIP/LIMIT inside a "
-                        "correlated CALL body needs ORDER BY — "
-                        "per-outer-row top-k is undefined on unordered "
-                        "rows"
+                        "GQL parse error: aggregates in a CALL "
+                        "body's WITH need an explicit AS alias"
                     )
-                for it in s_items:
-                    if it.agg and not it.alias:
-                        raise ValueError(
-                            "GQL parse error: aggregates in a CALL "
-                            "body's WITH need an explicit AS alias"
-                        )
         body_vars = {n.var for n in inner.pattern.nodes} | {
             n.var for _, c in inner.clauses for n in c.pattern.nodes
         }
@@ -1806,7 +1784,7 @@ class _Parser:
                 "correlation"
             )
         for it in inner.returns:
-            if it.var == "*" and not it.agg and inner.with_items is None:
+            if it.var == "*" and not it.agg and not inner.with_stages:
                 # bare RETURN * only — count(*) is an aggregate item.
                 # Directly after the body MATCH the scope is entity
                 # bindings, and * would re-export the imported
@@ -2172,34 +2150,26 @@ class _Parser:
                 )
             call_sub = self._call_sub_clause(pattern, clauses)
         # WITH pipeline stages — a chain `WITH .. [WITH ..]*` parses one
-        # stage per iteration; the first stage maps onto the legacy
-        # with_* fields, the rest become WithStage entries (each stage
-        # may carry its own modifiers, post-WITH MATCH clauses and a
-        # trailing UNWIND feeding the next stage)
-        with_items = with_where = None
-        post_clauses = []
-        with_order: list[OrderItem] = []
-        with_skip = with_limit = None
-        with_distinct = False
-        with_star = False
+        # WithStage per WITH (each stage may carry its own modifiers,
+        # post-WITH MATCH clauses and a trailing UNWIND feeding the next
+        # stage)
         with_stages: list[WithStage] = []
         unwind = None
-        first_stage = True
         if call_sub is not None and self.peek()[0] in ("MATCH", "OPTIONAL"):
             # MATCH / OPTIONAL MATCH directly after CALL { .. } (r13):
             # Cypher's free clause order — sugar for an implicit
             # `WITH *` stage carrying the clauses (the star keeps the
             # CALL outputs, bare and entity alike, in scope)
-            with_items, with_star = [], True
-            post_clauses = self._match_clauses()
-            first_stage = False
+            with_stages.append(
+                WithStage([], post_clauses=self._match_clauses(), star=True)
+            )
         while self.accept("WITH"):
             st_distinct = self.accept("DISTINCT")
             # later stages aggregate over the previous stage's bare
             # aliases; the first stage sees bare names only from a
             # leading UNWIND or a CALL subquery's outputs
             st_items = self.return_items(
-                bare_ok=not first_stage
+                bare_ok=bool(with_stages)
                 or unwind_first is not None
                 or call_sub is not None
                 or bare_returns
@@ -2266,38 +2236,26 @@ class _Parser:
             st_unwind = None
             if self.accept("UNWIND"):
                 st_unwind = self._unwind_clause(allow_name=True)
-            if first_stage:
-                with_items, with_distinct, with_where = st_items, st_distinct, st_where
-                with_order, with_skip, with_limit = st_order, st_skip, st_limit
-                post_clauses, unwind = st_post, st_unwind
-                with_star = st_star
-                first_stage = False
-            else:
-                with_stages.append(
-                    WithStage(
-                        st_items, st_distinct, st_where, st_order,
-                        st_skip, st_limit, st_post, st_unwind,
-                        star=st_star,
-                    )
+            with_stages.append(
+                WithStage(
+                    st_items, st_distinct, st_where, st_order,
+                    st_skip, st_limit, st_post, st_unwind, star=st_star,
                 )
-        if with_items is None and self.accept("UNWIND"):
+            )
+        if not with_stages and self.accept("UNWIND"):
             unwind = self._unwind_clause(allow_name=False)
         self.expect("RETURN")
         distinct = self.accept("DISTINCT")
         stmt = MatchStatement(
             pattern, where,
             self.return_items(
-                bare_ok=with_items is not None
+                bare_ok=bool(with_stages)
                 or unwind is not None
                 or call_sub is not None
                 or bare_returns
             ),
-            distinct=distinct,
-            clauses=clauses, with_items=with_items, with_where=with_where,
-            post_clauses=post_clauses, unwind_first=unwind_first, unwind=unwind,
-            with_order=with_order, with_skip=with_skip, with_limit=with_limit,
-            with_distinct=with_distinct, call_sub=call_sub,
-            with_stages=with_stages, with_star=with_star,
+            distinct=distinct, clauses=clauses, unwind_first=unwind_first,
+            unwind=unwind, call_sub=call_sub, with_stages=with_stages,
         )
         return self._result_modifiers(stmt)
 

@@ -595,6 +595,78 @@ def _lower_order_expr(o, cols) -> F.Column:
     return col.desc() if o.desc else col.asc()
 
 
+def _order_col(o, cols, clause: str) -> str:
+    """The column a plain ``var[.prop]`` ORDER BY item sorts on: the
+    projected name (an alias or ``var_prop``), else the ``var__prop``
+    binding column of a variable still in scope (a WITH passthrough, an
+    entity a CALL body exports)."""
+    name = o.var if o.prop is None else f"{o.var}_{o.prop}"
+    if name in cols:
+        return name
+    alt = f"{o.var}__{o.prop}" if o.prop else None
+    if alt in cols:
+        return alt
+    ref = o.var + (f".{o.prop}" if o.prop else "")
+    raise ValueError(f"ORDER BY {ref} is not projected by the {clause}")
+
+
+def _order_slice(df, order, skip, limit, resolve, keys=(), hidden=()):
+    """ORDER BY → SKIP → LIMIT over a projected frame — the one result
+    slice of every scope (statement and CALL RETURN, WITH stages, CALL
+    body RETURN). ``resolve(o, cols)`` names the column a plain
+    ``var[.prop]`` item sorts on; scopes differ only there.
+
+    Without ``keys`` the slice is a global orderBy / offset / limit, and
+    the ``hidden`` sort-only columns drop right after the sort. With
+    ``keys`` (a correlated CALL scope's witness columns) it ranks inside
+    each witness group with ONE row_number window — per-outer-row
+    top-k; SKIP/LIMIT without ORDER BY ranks a pure-aggregate body's
+    single row per group."""
+    exprs = []
+    cols = df.columns if order else []
+    for o in order:
+        if o.expr is not None:
+            exprs.append(_lower_order_expr(o, cols))
+            continue
+        name = resolve(o, cols)
+        exprs.append(F.col(name).desc() if o.desc else F.col(name).asc())
+    if keys:
+        if not exprs and skip is None and limit is None:
+            return df
+        w = Window.partitionBy(*keys).orderBy(*(exprs or [F.lit(1).asc()]))
+        cond = F.col("_rn") > (skip or 0)
+        if limit is not None:
+            cond &= F.col("_rn") <= (skip or 0) + limit
+        return (
+            df.withColumn("_rn", F.row_number().over(w)).filter(cond).drop("_rn")
+        )
+    if exprs:
+        df = df.orderBy(*exprs)
+        if hidden:
+            df = df.drop(*hidden)
+    if skip is not None:
+        df = df.offset(skip)
+    if limit is not None:
+        df = df.limit(limit)
+    return df
+
+
+def _fill_empty_groups(df, items):
+    """Cypher's empty-group identities on a pure aggregate LEFT-joined
+    back onto its outer rows: count/sum → 0, collect → []; min/max/avg
+    over zero rows stay NULL."""
+    for i in items:
+        if i.agg == "count":
+            df = df.withColumn(
+                i.alias, F.coalesce(F.col(i.alias), F.lit(0)).cast("long")
+            )
+        elif i.agg in ("sum", "collect"):
+            typ = df.schema[i.alias].dataType
+            empty = F.lit(0).cast(typ) if i.agg == "sum" else F.array().cast(typ)
+            df = df.withColumn(i.alias, F.coalesce(F.col(i.alias), empty))
+    return df
+
+
 def _lower_expr(node, bare: bool = False, bare_names: tuple = ()) -> F.Column:
     """Scalar expression → Column. Operands: literals, PropRef (prop
     None → bare column), FuncCall (allow-listed 1:1 Spark/ANSI
@@ -1076,25 +1148,10 @@ class GQLEngine:
             )
         if stmt.distinct:
             df = _safe_distinct(df)
-        if stmt.order_by:
-            exprs = []
-            for o in stmt.order_by:
-                if o.expr is not None:
-                    exprs.append(_lower_order_expr(o, df.columns))
-                    continue
-                name = o.var if o.prop is None else f"{o.var}_{o.prop}"
-                if name not in df.columns:
-                    raise ValueError(
-                        f"ORDER BY {name} is not in the CALL output "
-                        f"(columns: {df.columns})"
-                    )
-                exprs.append(F.col(name).desc() if o.desc else F.col(name).asc())
-            df = df.orderBy(*exprs)
-        if stmt.skip is not None:
-            df = df.offset(stmt.skip)
-        if stmt.limit is not None:
-            df = df.limit(stmt.limit)
-        return df
+        return _order_slice(
+            df, stmt.order_by, stmt.skip, stmt.limit,
+            lambda o, cols: _order_col(o, cols, "RETURN"),
+        )
 
     def _execute_union(self, stmt: UnionStatement) -> DataFrame:
         """UNION [ALL] between read queries (Cypher semantics; beyond the
@@ -1585,43 +1642,23 @@ class GQLEngine:
         self, sub: DataFrame, inner, ivars: list, keys: list, bound: DataFrame,
         bnames: tuple = (),
     ) -> tuple:
-        """The WITH pipeline inside a correlated CALL body — one or
-        MORE chained stages (r12: multi-WITH composes inside bodies
-        too). Every stage evaluates PER IMPORTED BINDING — the id
-        witness columns ride through each projection, so the derived
-        table keeps computing all outer rows' subqueries at once
-        (never per-row re-execution):
-
-        - aggregating WITH: implicit grouping keyed by (witnesses +
-          non-aggregated items); a PURE-aggregate WITH additionally
-          seeds from the outer witnesses (LEFT join + identity
-          coalesce) because Cypher's per-row execution yields exactly
-          one row per outer row even over empty input — downstream
-          stages (WHERE, post-clauses, further WITHs, RETURN) then
-          compose naturally;
-        - WITH ORDER BY / SKIP / LIMIT rank per witness group (one
-          row_number window per stage), NOT globally — the pipeline's
-          top-k is per outer row;
-        - post-WITH MATCH clauses and a trailing UNWIND apply on the
-          intermediate (witness columns tag along untouched), feeding
-          the next stage or the body RETURN.
+        """The WITH pipeline inside a correlated CALL body
+        (``inner.with_stages``, one or more chained stages). Every stage
+        lowers through _apply_with_stage, the statement-scope stage
+        lowering, with the imported witnesses as ``keys`` and the outer
+        bindings ``bound`` as the pure-aggregate seed: each stage
+        evaluates PER IMPORTED BINDING, so the derived table keeps
+        computing all outer rows' subqueries at once (never per-row
+        re-execution). ``bnames``: bare names in scope before the first
+        stage (a leading UNWIND's alias, nested CALL outputs).
 
         Returns (frame, passthrough_vars); the caller projects the
         body RETURN in bare mode against it."""
-        from dd_graphdb_spark.plans.gql import WithStage
-
-        stages = [
-            WithStage(
-                inner.with_items, inner.with_distinct, inner.with_where,
-                inner.with_order, inner.with_skip, inner.with_limit,
-                inner.post_clauses, inner.unwind, star=inner.with_star,
-            )
-        ] + list(inner.with_stages)
         pvars: list = ivars
         bare = bnames
-        for idx, st in enumerate(stages):
-            sub, pvars, bare = self._apply_call_body_stage(
-                sub, st, pvars, keys, bound, bare, idx
+        for idx, st in enumerate(inner.with_stages):
+            sub, pvars, bare = self._apply_with_stage(
+                sub, pvars, st, bare, idx, "_csw", keys, bound
             )
         # RETURN-item count subqueries attach to the LAST intermediate
         ret_post: list = []
@@ -1637,229 +1674,6 @@ class GQLEngine:
                 )
             sub = self._attach_count_subs(sub, ret_post)
         return sub, pvars
-
-    def _apply_call_body_stage(
-        self, sub: DataFrame, st, pvars: list, keys: list,
-        bound: DataFrame, bare: tuple, idx: int
-    ) -> tuple:
-        """One WITH stage of a correlated CALL body pipeline (see
-        _call_body_with for the per-imported-binding contract).
-        ``bare``: bare column names in scope (leading-UNWIND aliases,
-        nested CALL outputs, previous stages' aliases)."""
-        vcols = self.graph.vertices.columns
-        w_csubs: list = []
-        for it in st.items:
-            if it.expr is not None:
-                it.expr = _rewrite_count_subs(
-                    it.expr, w_csubs, prefix=f"_csew{idx}"
-                )
-        if w_csubs:
-            sub = self._attach_count_subs(sub, w_csubs)
-        w_aggs = any(i.agg for i in st.items)
-        passthrough = [
-            i.var
-            for i in st.items
-            if i.prop is None and i.agg is None and i.expr is None
-            and i.var not in bare
-        ]
-        if getattr(st, "star", False) and w_aggs:
-            # WITH *, <agg> AS c inside the body (r14): implicit
-            # grouping by the whole star scope, still per imported
-            # binding — expand * to explicit items (variables keep
-            # binding columns, bare aliases group as keys; the witness
-            # keys ride via extra_keys) and reuse the aggregating
-            # projection branch below.
-            star_vars = [v for v in pvars if not v.startswith("_anon")]
-            star_bares = [b for b in bare if b in sub.columns]
-            # witness keys already covered by a kept variable's binding
-            # columns must not repeat in the grouping (duplicate output
-            # column) — the same dedupe the non-agg branch applies
-            covered = {f"{v}__{c}" for v in star_vars for c in vcols}
-            inter = self._project(
-                sub,
-                [ReturnItem(v, None) for v in star_vars]
-                + [ReturnItem(b, None) for b in star_bares]
-                + _star_agg_extras(st.items, star_vars, star_bares),
-                pvars, vcols,
-                extra_keys=[F.col(k) for k in keys if k not in covered],
-                bare_names=bare,
-                keep_binding=frozenset(star_vars),
-            )
-            pvars = star_vars
-        elif getattr(st, "star", False):
-            # WITH * [, extras] inside the body (r13): keep the whole
-            # body frame — witness keys, passthrough binding columns,
-            # bare aliases — dropping only the engine's reserved "_"
-            # namespace (anonymous edge/count bindings); extras append
-            # with the same collision check as statement scope
-            keep = [c for c in sub.columns if not c.startswith("_")]
-            cols = [F.col(c) for c in keep]
-            names = set(keep)
-            for i in st.items:
-                if i.expr is not None:
-                    alias = i.alias
-                    col = _lower_expr(i.expr, bare_names=bare).alias(alias)
-                elif i.prop is not None:
-                    src = f"{i.var}__{i.prop}"
-                    if src not in sub.columns:
-                        raise ValueError(
-                            f"WITH *, {i.var}.{i.prop}: {i.var} is not "
-                            "in scope"
-                        )
-                    alias = i.alias or f"{i.var}_{i.prop}"
-                    col = F.col(src).alias(alias)
-                else:
-                    continue  # whole-variable extras: * already keeps them
-                if alias in names:
-                    raise ValueError(
-                        f"WITH *, ..: alias {alias!r} duplicates a kept "
-                        "column — rename the alias"
-                    )
-                names.add(alias)
-                cols.append(col)
-            inter = sub.select(*cols)
-            pvars = [v for v in pvars if not v.startswith("_anon")]
-        elif w_aggs:
-            # passthrough + aggregate (r13): group by (witness keys +
-            # the entity's binding columns) — Cypher's implicit
-            # grouping by the entity, still per imported binding
-            inter = self._project(
-                sub, st.items, pvars, vcols,
-                extra_keys=[F.col(k) for k in keys], bare_names=bare,
-                keep_binding=frozenset(passthrough),
-            )
-            if all(i.agg for i in st.items):
-                # pure-aggregate WITH: one row per outer binding even
-                # over empty input — seed from the outer witnesses and
-                # coalesce the empty-group identities (count/sum → 0,
-                # collect → []; min/max/avg stay NULL, Cypher)
-                inter = bound.select(*keys).distinct().join(
-                    inter, on=keys, how="left"
-                )
-                for i in st.items:
-                    if i.agg == "count":
-                        inter = inter.withColumn(
-                            i.alias,
-                            F.coalesce(F.col(i.alias), F.lit(0)).cast("long"),
-                        )
-                    elif i.agg == "sum":
-                        zero = F.lit(0).cast(inter.schema[i.alias].dataType)
-                        inter = inter.withColumn(
-                            i.alias, F.coalesce(F.col(i.alias), zero)
-                        )
-                    elif i.agg == "collect":
-                        empty = F.array().cast(inter.schema[i.alias].dataType)
-                        inter = inter.withColumn(
-                            i.alias, F.coalesce(F.col(i.alias), empty)
-                        )
-            pvars = list(passthrough)
-        else:
-            skip_keys = {f"{v}__id" for v in passthrough}
-            cols = [F.col(k) for k in keys if k not in skip_keys]
-            for i in st.items:
-                if i.expr is not None:
-                    cols.append(
-                        _lower_expr(i.expr, bare_names=bare).alias(i.alias)
-                    )
-                elif i.prop is None and i.agg is None:
-                    if i.var in bare:
-                        # a leading-UNWIND alias, a nested CALL output
-                        # or a previous stage's alias
-                        cols.append(F.col(i.var).alias(i.alias or i.var))
-                    elif i.var not in pvars:
-                        raise ValueError(f"WITH {i.var}: unknown variable")
-                    else:
-                        cols.extend(F.col(f"{i.var}__{c}") for c in vcols)
-                else:
-                    if i.var not in pvars:
-                        raise ValueError(
-                            f"WITH {i.var}.{i.prop}: {i.var} was not "
-                            "passed through the previous WITH"
-                        )
-                    cols.append(
-                        F.col(f"{i.var}__{i.prop}").alias(
-                            i.alias or f"{i.var}_{i.prop}"
-                        )
-                    )
-            inter = sub.select(*cols)
-            pvars = passthrough
-        if st.distinct:
-            # dedup includes the witness columns — per-outer-row
-            # DISTINCT, exactly Cypher's per-row execution scope
-            inter = _safe_distinct(inter)
-        # COUNT{} / comprehensions in WITH..WHERE attach to the
-        # intermediate, correlating on passthrough binding columns
-        # (after an aggregating WITH there are none)
-        w_post: list = []
-        has_pat = False
-        if st.where is not None:
-            has_pat = _has_pattern_pred(st.where)
-            if has_pat and not pvars:
-                raise ValueError(
-                    "EXISTS pattern predicates are not supported after "
-                    "an AGGREGATING WITH — filter in the MATCH WHERE "
-                    "clause instead"
-                )
-            st.where = _rewrite_count_subs(
-                st.where, w_post, prefix=f"_csewp{idx}"
-            )
-        if w_post:
-            if w_aggs:
-                raise ValueError(
-                    "COUNT { } / pattern comprehensions after an "
-                    "AGGREGATING WITH are not supported — compute them "
-                    "in the WITH items instead"
-                )
-            inter = self._attach_count_subs(inter, w_post)
-        if st.where is not None:
-            if has_pat:
-                inter = self._apply_where(
-                    inter, st.where, anon_prefix=f"_cswp{idx}",
-                    bare=True, pattern_vars=tuple(pvars),
-                )
-            else:
-                inter = inter.filter(
-                    _lower_condition(
-                        st.where, bare=True, pattern_vars=tuple(pvars)
-                    )
-                )
-        if st.order or st.skip is not None or st.limit is not None:
-            exprs = []
-            for o in st.order:
-                if o.expr is not None:
-                    exprs.append(_lower_order_expr(o, inter.columns))
-                    continue
-                name = o.var if o.prop is None else f"{o.var}_{o.prop}"
-                if name not in inter.columns:
-                    alt = f"{o.var}__{o.prop}" if o.prop else None
-                    if alt and alt in inter.columns:
-                        name = alt  # passthrough variable's property
-                    else:
-                        raise ValueError(
-                            f"WITH ORDER BY {o.var}"
-                            f"{'.' + o.prop if o.prop else ''} is not "
-                            "projected by the CALL body's WITH"
-                        )
-                exprs.append(
-                    F.col(name).desc() if o.desc else F.col(name).asc()
-                )
-            if not exprs:  # pure-agg SKIP/LIMIT: one row per group
-                exprs = [F.lit(1).asc()]
-            rn = F.row_number().over(Window.partitionBy(*keys).orderBy(*exprs))
-            inter = inter.withColumn("_csw_rn", rn)
-            cond = F.col("_csw_rn") > (st.skip or 0)
-            if st.limit is not None:
-                cond &= F.col("_csw_rn") <= (st.skip or 0) + st.limit
-            inter = inter.filter(cond).drop("_csw_rn")
-        inter, pvars = self._apply_clauses(
-            inter, pvars, st.post_clauses, f"_csp{idx}"
-        )
-        bare = tuple(
-            c for c in inter.columns if "__" not in c and c not in keys
-        )
-        if st.unwind is not None:
-            inter, bare = self._apply_unwind(inter, st.unwind, bare, bare=True)
-        return inter, pvars, bare
 
     def _apply_call_sub(
         self, bound: DataFrame, cs: CallSubClause, bare_names: tuple
@@ -1925,7 +1739,7 @@ class GQLEngine:
         vcols = self.graph.vertices.columns
         key_cols = [F.col(k) for k in keys]
         out_aliases = {i.alias for i in inner.returns if i.alias} | {
-            i.alias for i in (inner.with_items or []) if i.alias
+            i.alias for st in inner.with_stages for i in st.items if i.alias
         }
         if out_aliases & set(keys):
             raise ValueError(
@@ -1944,7 +1758,7 @@ class GQLEngine:
             )
             ivars = ivars + nested_ents  # nested entity exports in scope
         body_bnames = lead_bare + nested_bare
-        if inner.with_items is not None:
+        if inner.with_stages:
             sub, body_vars = self._call_body_with(
                 sub, inner, ivars, keys, bound, bnames=body_bnames
             )
@@ -2019,64 +1833,29 @@ class GQLEngine:
         out_names = [
             c for c in proj.columns if c not in keys and c not in ent_cols
         ]
-        skip = inner.skip or 0
-        if inner.order_by or inner.skip is not None or inner.limit is not None:
-            # per-outer-row ORDER BY / SKIP / LIMIT (top-k per binding):
-            # rank inside each imported-id group with ONE windowed pass
-            # over the derived table — never per-row body re-execution.
-            # ORDER BY keys resolve against the body's RETURN output.
-            exprs = []
-            for o in inner.order_by:
-                if o.expr is not None:
-                    exprs.append(_lower_order_expr(o, proj.columns))
-                    continue
-                nm = o.var if o.prop is None else f"{o.var}_{o.prop}"
-                if nm not in out_names:
-                    alt = f"{o.var}__{o.prop}" if o.prop else None
-                    if alt and alt in ent_cols:
-                        nm = alt  # exported entity's property
-                    else:
-                        raise ValueError(
-                            f"ORDER BY {nm} is not in the CALL body "
-                            f"output (columns: {out_names})"
-                        )
-                exprs.append(F.col(nm).desc() if o.desc else F.col(nm).asc())
-            if not exprs:  # pure-agg SKIP/LIMIT: one row per group
-                exprs = [F.lit(1).asc()]
-            rn = F.row_number().over(Window.partitionBy(*keys).orderBy(*exprs))
-            proj = proj.withColumn("_cs_rn", rn)
-            cond = F.col("_cs_rn") > skip
-            if inner.limit is not None:
-                cond &= F.col("_cs_rn") <= skip + inner.limit
-            proj = proj.filter(cond).drop("_cs_rn")
+        # per-outer-row ORDER BY / SKIP / LIMIT (top-k per binding):
+        # ranked inside each imported-id group with ONE windowed pass
+        # over the derived table — never per-row body re-execution.
+        # ORDER BY keys resolve against the body's RETURN output and
+        # the exported entities' binding columns.
+        scope = set(out_names) | ent_cols
+        proj = _order_slice(
+            proj, inner.order_by, inner.skip, inner.limit,
+            lambda o, _cols: _order_col(o, scope, "RETURN"), keys=keys,
+        )
         # A pure-aggregate body yields one row per outer row even over
         # empty input; that virtual row survives the body's ORDER BY /
         # SKIP / LIMIT only when nothing skips it
-        empty_row_survives = skip == 0 and (
+        empty_row_survives = not inner.skip and (
             inner.limit is None or inner.limit >= 1
         )
         if pure_agg and empty_row_survives:
             # Cypher: an all-aggregate body yields exactly ONE row per
-            # outer row even over empty input — LEFT join, then coalesce
-            # the empty-group identities (count→0, sum→0, collect→[];
-            # min/max/avg over zero rows are NULL, left as-is)
-            bound = bound.join(proj, on=keys, how="left")
-            for i in inner.returns:
-                if i.agg == "count":
-                    bound = bound.withColumn(
-                        i.alias,
-                        F.coalesce(F.col(i.alias), F.lit(0)).cast("long"),
-                    )
-                elif i.agg == "sum":
-                    zero = F.lit(0).cast(proj.schema[i.alias].dataType)
-                    bound = bound.withColumn(
-                        i.alias, F.coalesce(F.col(i.alias), zero)
-                    )
-                elif i.agg == "collect":
-                    empty = F.array().cast(proj.schema[i.alias].dataType)
-                    bound = bound.withColumn(
-                        i.alias, F.coalesce(F.col(i.alias), empty)
-                    )
+            # outer row even over empty input — LEFT join, then the
+            # empty-group identities
+            bound = _fill_empty_groups(
+                bound.join(proj, on=keys, how="left"), inner.returns
+            )
         else:
             # streaming bodies AND mixed grouped-aggregate bodies
             # (RETURN x.t AS t, count(*) AS c): grouped aggregation over
@@ -2090,11 +1869,13 @@ class GQLEngine:
         return bound, bare_names + tuple(out_names), ent_vars
 
     def _apply_with_stage(
-        self, inter: DataFrame, pvars: list, st, bare_aliases: tuple, idx: int
+        self, inter: DataFrame, pvars: list, st, bare_aliases: tuple, idx: int,
+        prefix: str, keys: list | tuple = (), outer: DataFrame | None = None,
     ) -> tuple:
-        """One WITH stage of a statement-level pipeline — EVERY stage,
-        including the first, lowers through here (stage 0's input is
-        the bound pattern frame with UNWIND aliases as bare names).
+        """One WITH stage — EVERY stage of a statement pipeline and of a
+        correlated CALL body's pipeline lowers through here (stage 0's
+        input is the bound pattern frame with UNWIND aliases / CALL
+        outputs as bare names).
 
         The stage input is the previous intermediate: bare alias columns
         plus passed-through variables' ``var__col`` binding columns. The
@@ -2102,6 +1883,23 @@ class GQLEngine:
         → WHERE → ORDER BY → SKIP → LIMIT → post-WITH MATCH clauses →
         trailing UNWIND — and returns (frame, passthrough_vars,
         bare_alias_names) for the next stage or the RETURN.
+
+        ``keys``: the scope's correlation witness columns — a CALL
+        body's imported ``{var}__id`` columns, empty at statement scope.
+        They ride through every projection and lead the implicit
+        grouping keys, so the stage evaluates PER IMPORTED BINDING
+        (never per-row re-execution). Two steps branch on them: a
+        PURE-aggregate stage seeds from the distinct witnesses of
+        ``outer`` (the CALL's outer bindings — LEFT join plus the
+        empty-group identities, since Cypher's per-row execution yields
+        one row per outer row even over empty input), and ORDER BY /
+        SKIP / LIMIT rank per witness group (one row_number window)
+        instead of slicing globally.
+
+        ``prefix``: the scope's synthetic-column prefix (``_w`` at
+        statement scope, ``_csw`` in CALL bodies) — COUNT{} columns and
+        the anonymous bindings of the stage's EXISTS predicates and
+        post-WITH clauses derive from it, so nested scopes never collide.
 
         Spark shape: a non-aggregating stage is a pure projection
         (no exchange); an aggregating stage shuffles once on its
@@ -2113,7 +1911,9 @@ class GQLEngine:
         pre: list = []
         for it in st.items:
             if it.expr is not None:
-                it.expr = _rewrite_count_subs(it.expr, pre, prefix=f"_ws{idx}i")
+                it.expr = _rewrite_count_subs(
+                    it.expr, pre, prefix=f"{prefix}s{idx}i"
+                )
         if pre:
             inter = self._attach_count_subs(inter, pre)
         has_aggs = any(i.agg for i in st.items)
@@ -2140,17 +1940,21 @@ class GQLEngine:
                 + [ReturnItem(b, None) for b in star_bares]
                 + extras
             )
+            # witness keys already covered by a kept variable's binding
+            # columns must not repeat in the grouping (duplicate column)
+            covered = {f"{v}__{c}" for v in star_vars for c in vcols}
             nxt = self._project(
-                inter, expanded, pvars, vcols, bare_names=bare_aliases,
-                keep_binding=frozenset(star_vars),
+                inter, expanded, pvars, vcols,
+                extra_keys=[F.col(k) for k in keys if k not in covered],
+                bare_names=bare_aliases, keep_binding=frozenset(star_vars),
             )
             pvars = star_vars
         elif st.star:
             # WITH * [, extras]: keep the whole previous intermediate
-            # (bare aliases + passthrough binding columns), drop any
-            # consumed synthetic columns and anonymous bindings — the
-            # "_" prefix is the engine's reserved namespace (see the
-            # statement-level star branch)
+            # (bare aliases + passthrough binding columns + witness
+            # keys), drop any consumed synthetic columns and anonymous
+            # bindings — the "_" prefix is the engine's reserved
+            # namespace (see the statement-level star branch)
             keep = [c for c in inter.columns if not c.startswith("_")]
             cols = [F.col(c) for c in keep]
             names = set(keep)
@@ -2190,12 +1994,23 @@ class GQLEngine:
             # by the ENTITY — the passthrough variable's binding
             # columns become grouping keys and x STAYS in scope
             nxt = self._project(
-                inter, st.items, pvars, vcols, bare_names=bare_aliases,
+                inter, st.items, pvars, vcols,
+                extra_keys=[F.col(k) for k in keys], bare_names=bare_aliases,
                 keep_binding=frozenset(passthrough),
             )
+            if keys and all(i.agg for i in st.items):
+                # pure-aggregate stage in a CALL body: one row per outer
+                # binding even over empty input
+                nxt = _fill_empty_groups(
+                    outer.select(*keys).distinct().join(nxt, on=keys, how="left"),
+                    st.items,
+                )
             pvars = list(passthrough)
         else:
-            cols = []
+            # witness keys a passthrough variable's binding columns
+            # already carry are not repeated
+            skip_keys = {f"{v}__id" for v in passthrough}
+            cols = [F.col(k) for k in keys if k not in skip_keys]
             for i in st.items:
                 if i.expr is not None:
                     cols.append(
@@ -2227,6 +2042,8 @@ class GQLEngine:
             pvars = passthrough
         inter = nxt
         if st.distinct:
+            # in a CALL body the dedup includes the witness columns —
+            # per-outer-row DISTINCT, Cypher's per-row execution scope
             inter = _safe_distinct(inter)
         post: list = []
         has_pat = False
@@ -2238,7 +2055,9 @@ class GQLEngine:
                     "an AGGREGATING WITH — filter in the MATCH WHERE "
                     "clause instead"
                 )
-            st.where = _rewrite_count_subs(st.where, post, prefix=f"_ws{idx}w")
+            st.where = _rewrite_count_subs(
+                st.where, post, prefix=f"{prefix}s{idx}w"
+            )
         if post:
             if has_aggs:
                 raise ValueError(
@@ -2250,7 +2069,7 @@ class GQLEngine:
         if st.where is not None:
             if has_pat:
                 inter = self._apply_where(
-                    inter, st.where, anon_prefix=f"_ww{idx}",
+                    inter, st.where, anon_prefix=f"{prefix}w{idx}",
                     bare=True, pattern_vars=tuple(pvars),
                 )
             else:
@@ -2259,30 +2078,13 @@ class GQLEngine:
                         st.where, bare=True, pattern_vars=tuple(pvars)
                     )
                 )
-        if st.order:
-            exprs = []
-            for o in st.order:
-                if o.expr is not None:
-                    exprs.append(_lower_order_expr(o, inter.columns))
-                    continue
-                name = o.var if o.prop is None else f"{o.var}_{o.prop}"
-                if name not in inter.columns:
-                    alt = f"{o.var}__{o.prop}" if o.prop else None
-                    if alt and alt in inter.columns:
-                        name = alt  # passthrough variable's property
-                    else:
-                        raise ValueError(
-                            f"WITH ORDER BY {o.var}"
-                            f"{'.' + o.prop if o.prop else ''} is not "
-                            "projected by the WITH"
-                        )
-                exprs.append(F.col(name).desc() if o.desc else F.col(name).asc())
-            inter = inter.orderBy(*exprs)
-        if st.skip is not None:
-            inter = inter.offset(st.skip)
-        if st.limit is not None:
-            inter = inter.limit(st.limit)
-        inter, pvars = self._apply_clauses(inter, pvars, st.post_clauses, f"_w{idx}p")
+        inter = _order_slice(
+            inter, st.order, st.skip, st.limit,
+            lambda o, cols: _order_col(o, cols, "WITH"), keys=keys,
+        )
+        inter, pvars = self._apply_clauses(
+            inter, pvars, st.post_clauses, f"{prefix}{idx}p"
+        )
         bare_aliases = tuple(c for c in inter.columns if "__" not in c)
         if st.unwind is not None:
             inter, bare_aliases = self._apply_unwind(
@@ -2300,16 +2102,12 @@ class GQLEngine:
             hv = any(e.min_hops is not None for e in stmt.pattern.edges)
             if stmt.where is not None:
                 stmt.where = _rewrite_path_funcs(stmt.where, pv, hv)
-            if stmt.with_where is not None:
-                stmt.with_where = _rewrite_path_funcs(stmt.with_where, pv, hv)
             for st in stmt.with_stages:
                 if st.where is not None:
                     st.where = _rewrite_path_funcs(st.where, pv, hv)
-            for it in (
-                list(stmt.returns)
-                + (stmt.with_items or [])
-                + [i for st in stmt.with_stages for i in st.items]
-            ):
+            for it in list(stmt.returns) + [
+                i for st in stmt.with_stages for i in st.items
+            ]:
                 if it.expr is not None:
                     it.expr = _rewrite_path_funcs(it.expr, pv, hv)
                 elif it.var == pv and it.prop is None and it.agg is None:
@@ -2324,7 +2122,6 @@ class GQLEngine:
             pats = [stmt.pattern] + [
                 opt.pattern
                 for _, opt in (stmt.clauses or [])
-                + (stmt.post_clauses or [])
                 + [c for st in stmt.with_stages for c in st.post_clauses]
             ]
             vv = {n.var for p in pats for n in p.nodes}
@@ -2336,16 +2133,12 @@ class GQLEngine:
 
             if stmt.where is not None:
                 stmt.where = _pm(stmt.where)
-            if stmt.with_where is not None:
-                stmt.with_where = _pm(stmt.with_where)
             for st in stmt.with_stages:
                 if st.where is not None:
                     st.where = _pm(st.where)
-            for it in (
-                list(stmt.returns)
-                + (stmt.with_items or [])
-                + [i for st in stmt.with_stages for i in st.items]
-            ):
+            for it in list(stmt.returns) + [
+                i for st in stmt.with_stages for i in st.items
+            ]:
                 if it.expr is not None:
                     it.expr = _pm(it.expr)
         # COUNT { .. } subqueries: rewrite to synthetic count columns.
@@ -2366,7 +2159,7 @@ class GQLEngine:
             if stmt.where is not None:
                 stmt.where = _rewrite_count_subs(stmt.where, csubs)
                 where_csubs = len(csubs)
-            if stmt.with_items is None:
+            if not stmt.with_stages:
                 ret_out, ret_prefix = csubs, "_csub"
             else:
                 ret_out, ret_prefix = final_csubs, "_fcsub"
@@ -2409,31 +2202,20 @@ class GQLEngine:
             )
             # entity exports join the outer pattern scope (r13)
             vertex_vars = list(vertex_vars) + call_ents
-        if stmt.unwind is not None and stmt.with_items is None:
+        if stmt.unwind is not None:
             # MATCH .. UNWIND [..] AS x RETURN .. (no WITH pipeline)
             bound, unwound = self._apply_unwind(bound, stmt.unwind, unwound)
-        if stmt.with_items is not None:
-            # WITH pipeline chain: the first stage (legacy with_*
-            # fields) and every further stage lower through ONE
-            # machinery — _apply_with_stage — over the evolving
-            # (frame, passthrough_vars, bare_aliases) scope. Stage 0's
-            # input is the bound pattern frame (vertex_vars in scope,
-            # UNWIND aliases as bare names); each stage applies
-            # project/aggregate → DISTINCT → WHERE → ORDER → SKIP/
-            # LIMIT → post-MATCH clauses → trailing UNWIND.
-            from dd_graphdb_spark.plans.gql import WithStage
-
-            stages = [
-                WithStage(
-                    stmt.with_items, stmt.with_distinct, stmt.with_where,
-                    stmt.with_order, stmt.with_skip, stmt.with_limit,
-                    stmt.post_clauses, stmt.unwind, star=stmt.with_star,
-                )
-            ] + list(stmt.with_stages)
+        hidden: dict = {}  # sort-only column name → binding column
+        if stmt.with_stages:
+            # WITH pipeline chain: every stage lowers through
+            # _apply_with_stage over the evolving (frame,
+            # passthrough_vars, bare_aliases) scope. Stage 0's input is
+            # the bound pattern frame (vertex_vars in scope, UNWIND
+            # aliases and CALL outputs as bare names).
             inter, pvars, bare_aliases = bound, list(vertex_vars), unwound
-            for k, st in enumerate(stages):
+            for k, st in enumerate(stmt.with_stages):
                 inter, pvars, bare_aliases = self._apply_with_stage(
-                    inter, pvars, st, bare_aliases, k
+                    inter, pvars, st, bare_aliases, k, "_w"
                 )
             if final_csubs:
                 # RETURN-position subqueries attach to the LAST
@@ -2443,7 +2225,7 @@ class GQLEngine:
                 # clear error; a non-aggregating projection that merely
                 # dropped the witness gets _attach_count_subs' accurate
                 # share-a-variable error instead.
-                if not pvars and any(i.agg for i in stages[-1].items):
+                if not pvars and any(i.agg for i in stmt.with_stages[-1].items):
                     raise ValueError(
                         "COUNT { } / pattern comprehensions after an "
                         "AGGREGATING WITH are not supported — compute "
@@ -2460,7 +2242,6 @@ class GQLEngine:
             # DISTINCT nor aggregating (after those, only outputs are in
             # scope). Project them as hidden sort columns, dropped after
             # the sort.
-            hidden: list[F.Column] = []
             if (
                 stmt.order_by
                 and not stmt.distinct
@@ -2477,42 +2258,35 @@ class GQLEngine:
                     name = f"{o.var}_{o.prop}"
                     src = f"{o.var}__{o.prop}"
                     if name not in projected and src in bound.columns:
-                        hidden.append(F.col(src).alias(f"__sort_{name}"))
+                        hidden[f"__sort_{name}"] = src
             df = self._project(
                 bound, stmt.returns, vertex_vars, vcols,
-                extra_cols=hidden, bare_names=unwound,
+                extra_cols=[F.col(src).alias(h) for h, src in hidden.items()],
+                bare_names=unwound,
             )
         if stmt.distinct:
             df = _safe_distinct(df)
-        if stmt.order_by:
-            # ORDER BY references projected output names (v_prop / v_id …)
-            # or, pre-DISTINCT/aggregation, hidden sort columns
-            exprs = []
-            for o in stmt.order_by:
-                if o.expr is not None:
-                    exprs.append(_lower_order_expr(o, df.columns))
-                    continue
-                if o.prop is None and o.var in df.columns:
-                    name = o.var  # a RETURN ... AS alias
-                else:
-                    name = f"{o.var}_{o.prop}" if o.prop else f"{o.var}_id"
-                if name not in df.columns:
-                    if f"__sort_{name}" in df.columns:
-                        name = f"__sort_{name}"
-                    else:
-                        raise ValueError(
-                            f"ORDER BY {o.var}.{o.prop or 'id'} is not projected"
-                        )
-                exprs.append(F.col(name).desc() if o.desc else F.col(name).asc())
-            df = df.orderBy(*exprs)
-            drop_hidden = [c for c in df.columns if c.startswith("__sort_")]
-            if drop_hidden:
-                df = df.drop(*drop_hidden)
-        if stmt.skip is not None:
-            df = df.offset(stmt.skip)
-        if stmt.limit is not None:
-            df = df.limit(stmt.limit)
-        return df
+
+        def resolve(o, cols):
+            # ORDER BY references projected output names (v_prop / v_id
+            # …) or, pre-DISTINCT/aggregation, hidden sort columns
+            if o.prop is None and o.var in cols:
+                name = o.var  # a RETURN ... AS alias
+            else:
+                name = f"{o.var}_{o.prop}" if o.prop else f"{o.var}_id"
+            if name in cols:
+                return name
+            if f"__sort_{name}" in cols:
+                return f"__sort_{name}"
+            raise ValueError(
+                f"ORDER BY {o.var}.{o.prop or 'id'} is not projected by "
+                "the RETURN"
+            )
+
+        return _order_slice(
+            df, stmt.order_by, stmt.skip, stmt.limit, resolve,
+            hidden=list(hidden),
+        )
 
     def _apply_clauses(self, bound, vertex_vars, clauses, prefix):
         """Additional MATCH / OPTIONAL MATCH clauses, in source order.

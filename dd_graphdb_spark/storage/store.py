@@ -70,7 +70,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dd_graphdb_spark.algorithms._iter import _ckpt, _persistent_ids, _unpersist
+from dd_graphdb_spark.algorithms._iter import _ckpt, pin_scope
 from dd_graphdb_spark.localrel import local_df
 
 from dd_graphdb_spark.storage.fsio import LocalFS, StorageIO
@@ -730,14 +730,6 @@ class GraphStore:
         """Point lookup (graph/storage/src/lib.rs:504-507)."""
         return self.vertices().filter(F.col("id") == vertex_id)
 
-    def get_edge(self, src: int, dst: int, label: str | None = None) -> DataFrame:
-        """Point lookup; without label = first matching edge semantics
-        (:510-528)."""
-        e = self.edges().filter((F.col("src") == src) & (F.col("dst") == dst))
-        if label is not None:
-            e = e.filter(F.col("label") == label)
-        return e.limit(1) if label is None else e
-
     def as_property_graph(
         self,
         vertex_props: dict[str, str] | None = None,
@@ -939,22 +931,16 @@ class GraphStore:
         # bracket the settle checkpoints (the run_loop pattern): once the
         # version is parquet, every block this batch pinned is garbage —
         # left pinned they accumulate and degrade later queries
-        try:
-            before = _persistent_ids(self.spark)
-        except Exception:  # Spark Connect: ContextCleaner self-manages
-            before = None
-
-        v_df, e_df, touched_v, touched_e, planned = self._cow_plan(touched_v, e_scope)
-        for i, (kind, ps) in enumerate(runs):
-            v_df, e_df = self._apply_run(kind, ps, v_df, e_df)
-            # long mixed batches: settle every 16 runs to bound plan depth
-            if (i + 1) % 16 == 0 and i + 1 < len(runs):
-                v_df, e_df = _ckpt(v_df), _ckpt(e_df)
-
-        new_version = self._commit_version(v_df, e_df, touched_v, touched_e, planned)
-        if before is not None:
-            _unpersist(self.spark, _persistent_ids(self.spark) - before)
-        return new_version
+        with pin_scope(self.spark):
+            v_df, e_df, touched_v, touched_e, planned = self._cow_plan(
+                touched_v, e_scope
+            )
+            for i, (kind, ps) in enumerate(runs):
+                v_df, e_df = self._apply_run(kind, ps, v_df, e_df)
+                # long mixed batches: settle every 16 runs to bound plan depth
+                if (i + 1) % 16 == 0 and i + 1 < len(runs):
+                    v_df, e_df = _ckpt(v_df), _ckpt(e_df)
+            return self._commit_version(v_df, e_df, touched_v, touched_e, planned)
 
     def _apply_run(
         self, kind: str, ps: list[dict], v_df: DataFrame, e_df: DataFrame

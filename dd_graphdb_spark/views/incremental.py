@@ -888,21 +888,10 @@ class IncrementalPageRank:
         are released before returning (the result is persisted to the
         ranks table and re-read, so no returned frame references them) —
         the same bracket discipline as run_loop/apply_batch."""
-        from dd_graphdb_spark.algorithms._iter import (
-            _PIN_LOCK,
-            _persistent_ids,
-            _unpersist,
-        )
+        from dd_graphdb_spark.algorithms._iter import pin_scope
 
-        with _PIN_LOCK:
-            try:
-                before = _persistent_ids(self.spark)
-            except Exception:  # Spark Connect: no gateway — just run
-                return self._refresh_impl()
-            try:
-                return self._refresh_impl()
-            finally:
-                _unpersist(self.spark, _persistent_ids(self.spark) - before)
+        with pin_scope(self.spark):
+            return self._refresh_impl()
 
     def _refresh_impl(self) -> DataFrame:
         # serialized checkpoints throughout (_ckpt): the edge-sized

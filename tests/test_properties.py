@@ -1424,7 +1424,8 @@ def test_gql_statement_roundtrip_r11_shapes(
     thresh=st.integers(0, 2),
     shape=st.sampled_from(
         ["with_count_seed", "with_having", "with_topk_collect",
-         "with_passthrough_post", "with_unwind", "optional_stream"]
+         "with_passthrough_post", "with_unwind", "optional_stream",
+         "with_edge_prop"]
     ),
 )
 def test_gql_call_body_with_pipeline_shapes(
@@ -1495,6 +1496,15 @@ def test_gql_call_body_with_pipeline_shapes(
             (i, _G_VERTS[d][1]) for i, _ in verts for d in out(i, e1)
         )
         got = [(r["vid"], r["ua"]) for r in eng.execute(q).collect()]
+        assert got == want, q
+    elif shape == "with_edge_prop":
+        # an edge variable's property projects in the body's WITH the
+        # same way it does at statement scope
+        q = (f"MATCH {pat} CALL {{ WITH v MATCH (v)-[r:{e1}]->(u) "
+             f"WITH r.dst AS w RETURN collect(w) AS l }} "
+             f"RETURN v.id AS vid, l ORDER BY vid")
+        want = {i: sorted(out(i, e1)) for i, _ in verts}
+        got = {r["vid"]: list(r["l"]) for r in eng.execute(q).collect()}
         assert got == want, q
     else:  # optional_stream: OPTIONAL CALL NULL-fills empty bodies
         q = (f"MATCH {pat} OPTIONAL CALL {{ WITH v "

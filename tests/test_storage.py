@@ -826,3 +826,63 @@ def test_apply_batch_rejects_null_edge_label(store):
         store.apply_batch([add_edge(1, 2, None)])
     with pytest.raises(ValueError, match="non-null label"):
         store.apply_batch([update_edge_props(1, 2, None, {"w": 1})])
+
+
+def test_apply_batch_never_frees_a_concurrent_loops_checkpoint(store, monkeypatch):
+    """A fixpoint loop on another thread checkpoints a frame while an
+    ``apply_batch`` is between its pin snapshots: the batch's bracket
+    must not unpersist that (unrecomputable) checkpoint. The batch is
+    started first; its plan step signals, then waits briefly for the
+    loop's checkpoint."""
+    import threading
+
+    from dd_graphdb_spark.algorithms._iter import _ckpt, _persistent_ids, run_loop
+
+    spark = store.spark
+    in_batch, loop_ckpt, batch_done = (threading.Event() for _ in range(3))
+    plan = store._cow_plan
+
+    def slow_plan(*args, **kwargs):
+        in_batch.set()
+        loop_ckpt.wait(timeout=8)
+        return plan(*args, **kwargs)
+
+    monkeypatch.setattr(store, "_cow_plan", slow_plan)
+    seen, errors = {}, []
+
+    def impl(g):
+        before = _persistent_ids(spark)
+        x = _ckpt(g.vertices.select("id"))
+        seen["ids"] = _persistent_ids(spark) - before
+        loop_ckpt.set()
+        batch_done.wait(timeout=60)
+        seen["pinned"] = seen["ids"] <= _persistent_ids(spark)
+        seen["count"] = x.count()
+        return x
+
+    def batch():
+        try:
+            store.apply_batch([add_vertex(3, "Person", {"name": "C"})])
+        except Exception as ex:  # noqa: BLE001
+            errors.append(ex)
+        finally:
+            batch_done.set()
+
+    def loop():
+        try:
+            run_loop(impl, store.as_property_graph())
+        except Exception as ex:  # noqa: BLE001
+            errors.append(ex)
+
+    b = threading.Thread(target=batch)
+    b.start()
+    assert in_batch.wait(timeout=60)
+    a = threading.Thread(target=loop)
+    a.start()
+    for t in (a, b):
+        t.join(timeout=180)
+    assert not a.is_alive() and not b.is_alive()
+    assert not errors, errors
+    assert seen["ids"] and seen["pinned"]
+    assert seen["count"] == 2
+    assert store.stats()["vertex_count"] == 3
