@@ -2109,6 +2109,13 @@ class _Parser:
             return ForeachStatement(pattern, where, lvar, source, assigns)
         return self._read_tail(pattern, where, unwind_first, bare_returns)
 
+    def _stage_unwind(self) -> UnwindClause | None:
+        """A WITH stage's optional trailing ``UNWIND``, feeding the next
+        stage or the RETURN."""
+        if self.accept("UNWIND"):
+            return self._unwind_clause(allow_name=True)
+        return None
+
     def _read_tail(
         self,
         pattern,
@@ -2158,10 +2165,13 @@ class _Parser:
         if call_sub is not None and self.peek()[0] in ("MATCH", "OPTIONAL"):
             # MATCH / OPTIONAL MATCH directly after CALL { .. } (r13):
             # Cypher's free clause order — sugar for an implicit
-            # `WITH *` stage carrying the clauses (the star keeps the
-            # CALL outputs, bare and entity alike, in scope)
+            # `WITH *` stage carrying the clauses and, like any stage, a
+            # trailing UNWIND (the star keeps the CALL outputs, bare and
+            # entity alike, in scope)
+            post = self._match_clauses()
             with_stages.append(
-                WithStage([], post_clauses=self._match_clauses(), star=True)
+                WithStage([], post_clauses=post, unwind=self._stage_unwind(),
+                          star=True)
             )
         while self.accept("WITH"):
             st_distinct = self.accept("DISTINCT")
@@ -2233,13 +2243,10 @@ class _Parser:
                     "GQL parse error: MATCH after an aggregating WITH is "
                     "not supported — aggregate in the final RETURN instead"
                 )
-            st_unwind = None
-            if self.accept("UNWIND"):
-                st_unwind = self._unwind_clause(allow_name=True)
             with_stages.append(
                 WithStage(
-                    st_items, st_distinct, st_where, st_order,
-                    st_skip, st_limit, st_post, st_unwind, star=st_star,
+                    st_items, st_distinct, st_where, st_order, st_skip,
+                    st_limit, st_post, self._stage_unwind(), star=st_star,
                 )
             )
         if not with_stages and self.accept("UNWIND"):

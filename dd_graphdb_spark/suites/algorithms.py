@@ -449,7 +449,7 @@ def _colocation_capped_graph(
 ) -> PropertyGraph:
     """DEGREE-CAPPED co-location graph — the documented 100 TB path for
     the colocation family. The full pair frame grows ×100 edges per
-    decade (|S|²/|nations|: ~409 M at sf10 → ~40 B at sf100 — README
+    decade (|S|²/|nations|: ~409 M at sf10 → ~40 B at sf100 — HISTORY.md
     sf100 notes); the cap replaces each nation's clique with a ring-K
     lattice: every supplier connects to the next ``k`` suppliers in
     s_suppkey rank order within its nation (cyclic), symmetrized.

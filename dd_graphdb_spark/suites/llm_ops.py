@@ -640,7 +640,7 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r15: the PRIMARY gate now runs the Lloyd-TRAINED coarse quantizer
     (train_iters=2) — the recommended 100 TB configuration (measured
-    recall 45/53 trained vs 41/53 seeded-multiprobe, README) — so the
+    recall 45/53 trained vs 41/53 seeded-multiprobe, HISTORY.md) — so the
     headline measures the recommended path. The seeded quantizer stays
     covered by dedup_semantic_multiprobe; the multiprobe axis of the
     trained config by dedup_semantic_trained (an exact trained+p2
@@ -683,7 +683,7 @@ def dedup_semantic_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_semantic_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup under a Lloyd-TRAINED coarse quantizer (2 refinement
-    rounds) + multi-probe — the full 100 TB posture the README's
+    rounds) + multi-probe — the full 100 TB posture HISTORY.md's
     flat-quantizer analysis prescribes, oracle-checked end to end: the
     DuckDB side replays the identical training (argmax-cosine
     assignment, exact decimal-sum element means, empty-cell carry-

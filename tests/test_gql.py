@@ -3126,6 +3126,30 @@ def test_call_body_with_parse_errors(people_edges_graph):
     assert all(r["n"] == 1 for r in rows) and len(rows) >= 1
 
 
+def test_match_after_call_takes_trailing_unwind(people_graph):
+    """MATCH written directly after a correlated CALL is an implicit
+    ``WITH *`` stage; like an explicit stage it takes a trailing UNWIND
+    and returns the rows the explicit form returns."""
+    eng = _engine(people_graph)
+    call = "MATCH (a) CALL { WITH a MATCH (a)-->(b) RETURN b.name AS bn } "
+    tail = (
+        "MATCH (a)-->(c) UNWIND [1, 2] AS k "
+        "RETURN a.name AS an, bn, c.name AS cn, k ORDER BY an, k"
+    )
+
+    def rows(q):
+        return [tuple(r) for r in eng.execute(q).collect()]
+
+    implicit = rows(call + tail)
+    assert implicit == rows(call + "WITH * " + tail)
+    assert implicit == [
+        ("Alice", "Bob", "Bob", 1),
+        ("Alice", "Bob", "Bob", 2),
+        ("Bob", "Charlie", "Charlie", 1),
+        ("Bob", "Charlie", "Charlie", 2),
+    ]
+
+
 # --------------------------------------------------- FOREACH write bodies
 def test_multi_key_expression_set_single_witness_row(spark, tmp_path):
     """Multi-key expression SET takes ALL assigned keys from ONE binding
