@@ -99,10 +99,7 @@ def wide_shuffle(g):
     pay per-round fan-out overhead for nothing (same-host sf10 A/B:
     7.9 s at 32 → 33.5 s at 256) — so the raise is scoped to the loops
     that need it."""
-    s = scoped(
-        g.vertices.sparkSession,
-        {_INITIAL: os.environ.get("SPARK_GRAFT_WIDE_PARTITIONS", "256")},
-    )
+    s = scoped(g.vertices.sparkSession, {_INITIAL: "256"})
     return replace(g, vertices=rebind(g.vertices, s), edges=rebind(g.edges, s))
 
 

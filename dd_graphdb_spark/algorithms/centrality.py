@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dd_graphdb_spark.graph import PropertyGraph
-from dd_graphdb_spark.algorithms._iter import RoundPins, copartitioned
+from dd_graphdb_spark.algorithms._iter import RoundPins, _ckpt, copartitioned
 from dd_graphdb_spark.algorithms._iter import materialize as _materialize
 from dd_graphdb_spark.algorithms._iter import run_loop
 
@@ -38,7 +38,7 @@ from dd_graphdb_spark.algorithms._iter import run_loop
 def _eigenvector_loop(
     g: PropertyGraph, max_iterations: int = 10, round_to: int | None = None
 ) -> DataFrame:
-    verts = g.vertices.select("id").distinct().localCheckpoint(eager=True)
+    verts = _ckpt(g.vertices.select("id").distinct())
     edges = (
         g.edges.select("src", "dst")
         if g.edges_layout == "src"  # declared layout: unique + partitioned + sorted

@@ -27,14 +27,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dd_graphdb_spark.graph import PropertyGraph
-from dd_graphdb_spark.algorithms._iter import RoundPins, copartitioned, run_loop, wide_shuffle
+from dd_graphdb_spark.algorithms._iter import RoundPins, _ckpt, copartitioned
+from dd_graphdb_spark.algorithms._iter import run_loop, wide_shuffle
 
 
 def _lpa_loop(
     g: PropertyGraph, max_iterations: int = 5, ckpt_every: int = 4
 ) -> DataFrame:
     g = wide_shuffle(g)  # see label_propagation
-    verts = g.vertices.select("id").localCheckpoint(eager=True)
+    verts = _ckpt(g.vertices.select("id"))
     e = g.edges.select("src", "dst")
     # the per-round join reads the neighbor end's label. On a
     # declared-symmetric src-layout graph the symmetrize-union is a

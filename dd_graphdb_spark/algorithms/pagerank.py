@@ -11,9 +11,10 @@ decays), matching the reference's recurrence.
 
 Spark shape: ranks ⋈ edges on src → groupBy dst sum → left join back onto
 the vertex universe. Each iteration is one shuffle on the join key plus an
-aggregation with map-side partial sums. The rank state is eagerly
-localCheckpoint'ed every iteration: each job then reads a materialized
-RDD instead of re-executing the whole chained-join lineage (lazily
+aggregation with map-side partial sums (``_power_iterate``, the one step
+PageRank, personalized PageRank and the incremental PageRank view share).
+The rank state is localCheckpoint'ed on a cadence: each job then reads a
+materialized RDD instead of re-executing the whole chained-join lineage (lazily
 cached inputs re-run their plan once per downstream job until first
 materialization — that, not the joins, is what dominates a naive loop).
 At 100 TB: pre-partition edges and ranks by the same key so the per-iter
@@ -23,7 +24,7 @@ for reliable checkpoint(dir) when executors can be lost.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dd_graphdb_spark.graph import PropertyGraph
@@ -34,6 +35,65 @@ from dd_graphdb_spark.algorithms._iter import (
     materialize_count,
     run_loop,
 )
+
+
+def _power_iterate(
+    verts: DataFrame, contrib_edges: DataFrame, ranks: DataFrame, base: Column,
+    damping: float, iterations: int, ckpt_every: int = 8,
+    tolerance: float | None = None, contrib: Column | None = None,
+) -> DataFrame:
+    """The PageRank power step all variants share, ``iterations`` times
+    from ``ranks`` (id, rank): rank'(v) = base + d·Σ_{u→v} contrib over
+    ``contrib_edges`` (src, dst, …), left-joined onto ``verts`` (id).
+    ``contrib`` defaults to rank/outdeg; ``base`` may vary per vertex.
+    Ranks checkpoint through ``RoundPins`` every ``ckpt_every`` rounds, on
+    the last, and every round under a ``tolerance`` (L1 stop, whose delta
+    job materializes each round anyway); each checkpoint releases the
+    rounds it supersedes. Callers run under ``run_loop``/``pin_scope``."""
+    if contrib is None:
+        contrib = F.col("rank") / F.col("outdeg")
+    pins = RoundPins(verts.sparkSession)
+    ranks = pins.materialize(ranks)
+    for i in range(iterations):
+        contribs = (
+            ranks.join(contrib_edges, ranks.id == contrib_edges.src)
+            .select(F.col("dst").alias("id"), contrib.alias("contrib"))
+            .groupBy("id")
+            .agg(F.sum("contrib").alias("msum"))
+        )
+        new_ranks = verts.join(contribs, "id", "left").select(
+            "id",
+            (base + F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))).alias("rank"),
+        )
+        if tolerance is None and (i + 1) % ckpt_every and i < iterations - 1:
+            # lazy round: keep every pin — `ranks` still READS the last
+            # checkpoint's blocks (which can't recompute)
+            ranks = new_ranks
+            continue
+        new_ranks = pins.materialize(new_ranks)
+        l1 = None
+        if tolerance is not None:
+            l1 = (
+                new_ranks.alias("n")
+                .join(ranks.alias("o"), "id")
+                .agg(F.sum(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("l1"))
+                .collect()[0]["l1"]
+            )
+        ranks = new_ranks
+        pins.release_except(ranks)
+        if l1 is not None and l1 < tolerance:
+            break
+    return ranks
+
+
+def _outdeg_edges(g: PropertyGraph) -> DataFrame:
+    """(src, dst, outdeg): each edge's share denominator computed once,
+    materialized partitioned on the per-round join key (copartitioned)."""
+    edges = g.edges.select("src", "dst")
+    outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
+    return copartitioned(
+        edges.join(outdeg, "src").select("src", "dst", "outdeg"), "src"
+    )
 
 
 def _pagerank_loop(
@@ -53,9 +113,8 @@ def _pagerank_loop(
     so materializing every iteration just buys per-iteration job
     overhead — checkpoint on a cadence instead (measured at sf0.1 ×20
     iterations: every-1 9.6 s, every-10 7.2 s, never 7.8 s — plan
-    depth starts costing past ~10 chained join-aggs). With a tolerance
-    the per-iteration delta job forces materialization anyway, so the
-    loop checkpoints every iteration there."""
+    depth starts costing past ~10 chained join-aggs); see
+    ``_power_iterate`` for the tolerance case."""
     # one action: checkpoint the vertex set AND count it (r16)
     verts, n = materialize_count(g.vertices.select("id"))
     if n == 0:
@@ -84,53 +143,12 @@ def _pagerank_loop(
         )
         contrib_expr = F.col("rank") * F.col("share")
     else:
-        edges = g.edges.select("src", "dst")
-        outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-        # pre-compute each edge's share denominator once, materialized
-        # partitioned on the per-iteration join key (copartitioned)
-        contrib_edges = copartitioned(
-            edges.join(outdeg, "src").select("src", "dst", "outdeg"), "src"
-        )
-        contrib_expr = F.col("rank") / F.col("outdeg")
-    base = float((1.0 - damping) / n)
-
-    pins = RoundPins(g.vertices.sparkSession)
-    ranks = pins.materialize(verts.withColumn("rank", F.lit(1.0 / n)))
-    for i in range(max_iterations):
-        contribs = (
-            ranks.join(contrib_edges, ranks.id == contrib_edges.src)
-            .select(F.col("dst").alias("id"), contrib_expr.alias("contrib"))
-            .groupBy("id")
-            .agg(F.sum("contrib").alias("msum"))
-        )
-        new_ranks = verts.join(contribs, "id", "left").select(
-            "id",
-            (F.lit(base) + F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))).alias("rank"),
-        )
-        ck = (
-            tolerance is not None
-            or (i + 1) % ckpt_every == 0
-            or i == max_iterations - 1
-        )
-        if ck:
-            new_ranks = pins.materialize(new_ranks)
-        if tolerance is not None:
-            delta = (
-                new_ranks.alias("n")
-                .join(ranks.alias("o"), "id")
-                .agg(F.sum(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("l1"))
-                .collect()[0]["l1"]
-            )
-            ranks = new_ranks
-            pins.release_except(ranks)
-            if delta is not None and delta < tolerance:
-                break
-        else:
-            ranks = new_ranks
-            # release only on checkpointing rounds: a lazy `ranks` still
-            # READS the last checkpoint's blocks (which can't recompute)
-            if ck:
-                pins.release_except(ranks)
+        contrib_edges, contrib_expr = _outdeg_edges(g), None
+    ranks = _power_iterate(
+        verts, contrib_edges, verts.withColumn("rank", F.lit(1.0 / n)),
+        F.lit(float((1.0 - damping) / n)), damping, max_iterations, ckpt_every,
+        tolerance, contrib_expr,
+    )
     if round_to is not None:
         ranks = ranks.select("id", F.round("rank", round_to).alias("rank"))
     return ranks
@@ -197,31 +215,13 @@ def _ppr_loop(
             f"{len(sources) - n_found} of {len(sources)} source ids are not "
             "vertices of the graph"
         )
-    edges = g.edges.select("src", "dst")
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    contrib_edges = copartitioned(
-        edges.join(outdeg, "src").select("src", "dst", "outdeg"), "src"
-    )
     restart = F.when(
         F.col("id").isin([int(s) for s in sources]), F.lit(1.0 / len(sources))
     ).otherwise(F.lit(0.0))
-    base = restart * F.lit(1.0 - damping)
-    pins = RoundPins(g.vertices.sparkSession)
-    ranks = pins.materialize(verts.withColumn("rank", restart))
-    for i in range(max_iterations):
-        contribs = (
-            ranks.join(contrib_edges, ranks.id == contrib_edges.src)
-            .select(F.col("dst").alias("id"), (F.col("rank") / F.col("outdeg")).alias("contrib"))
-            .groupBy("id")
-            .agg(F.sum("contrib").alias("msum"))
-        )
-        ranks = verts.join(contribs, "id", "left").select(
-            "id",
-            (base + F.lit(damping) * F.coalesce(F.col("msum"), F.lit(0.0))).alias("rank"),
-        )
-        if (i + 1) % ckpt_every == 0 or i == max_iterations - 1:
-            ranks = pins.materialize(ranks)
-            pins.release_except(ranks)
+    ranks = _power_iterate(
+        verts, _outdeg_edges(g), verts.withColumn("rank", restart),
+        restart * F.lit(1.0 - damping), damping, max_iterations, ckpt_every,
+    )
     if round_to is not None:
         ranks = ranks.select("id", F.round("rank", round_to).alias("rank"))
     return ranks

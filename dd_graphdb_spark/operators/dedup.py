@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dd_graphdb_spark.algorithms._iter import _ckpt
 from dd_graphdb_spark.operators._skew import salted_self_pairs
 from dd_graphdb_spark.operators.text import tokens
 
@@ -203,7 +204,7 @@ def duplicate_spans(
     # window (r15: min-of-3 1.92 s -> 1.45 s at sf0.1). The checkpoint
     # is (id, digest) rows — the same bytes both downstream shuffles
     # already write to disk per pass, paid once instead of recomputed
-    spans = _span_table(df, window, text_col, id_col).localCheckpoint(eager=True)
+    spans = _ckpt(_span_table(df, window, text_col, id_col))
     dup = (
         spans.groupBy("h")
         .agg(F.countDistinct("id").alias("nd"))
@@ -270,12 +271,12 @@ def ngram_jaccard_pairs(
     quadratic in the carrier count per shingle — but the exact operator
     no longer serializes a hot key into a single straggler task.
     """
-    # eager localCheckpoint, NOT .persist(): sh is read twice (sizes +
+    # eager checkpoint, NOT .persist(): sh is read twice (sizes +
     # pair generation) within one action, but CacheManager entries from
     # persist() survive until explicit unpersist — repeated calls would
     # pin shingle tables for the session lifetime. Checkpoint blocks
     # free via GC once the result frame is dropped.
-    sh = shingle_table(df, text_col, id_col, n).localCheckpoint(eager=True)
+    sh = _ckpt(shingle_table(df, text_col, id_col, n))
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
     inter = (
         salted_self_pairs(
@@ -350,16 +351,15 @@ def minhash_lsh_pairs(
     # twice more — the plan is referenced 4×, so cache/checkpoint here is
     # a 4× saving, not a micro-optimization. Arrays are longs, not
     # shingle strings — ~10× smaller in cache and in the verify join.
-    # localCheckpoint, not persist — same CacheManager-leak rationale
+    # checkpoint, not persist — same CacheManager-leak rationale
     # as ngram_jaccard_pairs
-    sh_arr = with_shingle_hashes(df, text_col, id_col, n).localCheckpoint(eager=True)
+    sh_arr = _ckpt(with_shingle_hashes(df, text_col, id_col, n))
     sh = sh_arr.select("id", F.explode("sh").alias("x"))
-    sig = sh.groupBy("id").agg(
-        *[
-            F.min((F.lit(a) * F.col("x") + F.lit(b)) % MOD).alias(f"h{i}")
-            for i, (a, b) in enumerate(MINHASH_PARAMS)
-        ]
-    ).localCheckpoint(eager=True)
+    mins = [
+        F.min((F.lit(a) * F.col("x") + F.lit(b)) % MOD).alias(f"h{i}")
+        for i, (a, b) in enumerate(MINHASH_PARAMS)
+    ]
+    sig = _ckpt(sh.groupBy("id").agg(*mins))
     k = len(MINHASH_PARAMS)
     bands = []
     for band_i in range(k // BAND_SIZE):
@@ -422,9 +422,7 @@ def near_dup_clusters(
     # materialization each reference re-executes the WHOLE LSH
     # candidate+verify pipeline (r15 optimization — same
     # localCheckpoint-not-persist rationale as minhash_lsh_pairs)
-    pairs = minhash_lsh_pairs(df, threshold, text_col, id_col, n).localCheckpoint(
-        eager=True
-    )
+    pairs = _ckpt(minhash_lsh_pairs(df, threshold, text_col, id_col, n))
     verts = (
         pairs.select(F.col("a").alias("id"))
         .union(pairs.select(F.col("b").alias("id")))

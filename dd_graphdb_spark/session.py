@@ -40,11 +40,8 @@ def get_spark(
         # (LPA 122 → 90 s, k-core 164 → 119 s, FastSV CC 77 → 47 s).
         # The raise is therefore SCOPED to those loops (a child session
         # from algorithms._iter.wide_shuffle); the session default stays
-        # at the shuffle-partition count. Env knob kept for A/B studies.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", str(shuffle)),
-        )
+        # at the shuffle-partition count.
+        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", str(shuffle))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # local_df (localrel.py) depends on Arrow createDataFrame(pandas)

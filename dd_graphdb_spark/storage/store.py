@@ -513,14 +513,28 @@ class GraphStore:
     #: edge identity = (src,dst,label), graph/storage/src/lib.rs:171)
     _KEY_COLS = {"vertices": ["id"], "edges": ["src", "dst", "label"]}
 
-    def _delta_rows(self, table: str, base: DataFrame, new: DataFrame) -> DataFrame:
-        """Row-level diff ``new`` vs ``base`` (both already restricted
-        to the same buckets): upserts = rows inserted or changed
-        (``_op='u'``), tombstones = keys present only in base
-        (``_op='d'``). One full-outer key join; property maps compare as
-        sorted entries (map columns have no comparable order)."""
+    def _diff(
+        self, table: str, old: DataFrame, new: DataFrame
+    ) -> tuple[DataFrame, Column, Column, Column]:
+        """Row-level diff of two snapshots of ``table`` (whole, or the same
+        buckets of each) as ONE full-outer key join. Returns the joined
+        frame (keys, ``_old_props``/``_new_props``, for vertices also
+        ``_old_label``/``_new_label``, and presence markers that survive
+        the outer join even for all-null rows) with its ``in_old``,
+        ``in_new`` and ``changed`` predicates; ``changed`` holds only where
+        both sides have the key. Maps compare as sorted entries (map
+        columns have no comparable order); every write path stores a map,
+        never NULL, so a NULL map reads as ``map()``."""
         key = self._KEY_COLS[table]
         is_v = table == "vertices"
+
+        def side(df: DataFrame, tag: str) -> DataFrame:
+            return df.select(
+                *key,
+                F.col("properties").alias(f"_{tag}_props"),
+                *([F.col("label").alias(f"_{tag}_label")] if is_v else []),
+                F.lit(True).alias(f"_in_{tag}"),
+            )
 
         def canon(col: str) -> Column:
             return F.to_json(
@@ -529,27 +543,24 @@ class GraphStore:
                 )
             )
 
-        o = base.select(
-            *key,
-            *([F.col("label").alias("_lo")] if is_v else []),
-            F.col("properties").alias("_po"),
-            F.lit(True).alias("_io_"),
-        )
-        n = new.select(
-            *key,
-            *([F.col("label").alias("_ln")] if is_v else []),
-            F.col("properties").alias("_pn"),
-            F.lit(True).alias("_in_"),
-        )
-        j = o.join(n, key, "full_outer")
-        in_o, in_n = F.col("_io_").isNotNull(), F.col("_in_").isNotNull()
-        changed = ~canon("_po").eqNullSafe(canon("_pn"))
+        changed = ~canon("_old_props").eqNullSafe(canon("_new_props"))
         if is_v:
-            changed = changed | ~F.col("_lo").eqNullSafe(F.col("_ln"))
+            changed = changed | ~F.col("_old_label").eqNullSafe(F.col("_new_label"))
+        j = side(old, "old").join(side(new, "new"), key, "full_outer")
+        return j, F.col("_in_old").isNotNull(), F.col("_in_new").isNotNull(), changed
+
+    def _delta_rows(self, table: str, base: DataFrame, new: DataFrame) -> DataFrame:
+        """Delta layer of ``new`` over ``base`` (both already restricted
+        to the same buckets): upserts = rows inserted or changed
+        (``_op='u'``), tombstones = keys present only in base
+        (``_op='d'``)."""
+        key = self._KEY_COLS[table]
+        is_v = table == "vertices"
+        j, in_o, in_n, changed = self._diff(table, base, new)
         ups = j.filter(in_n & (~in_o | changed)).select(
             *key,
-            *([F.col("_ln").alias("label")] if is_v else []),
-            F.col("_pn").alias("properties"),
+            *([F.col("_new_label").alias("label")] if is_v else []),
+            F.col("_new_props").alias("properties"),
             F.lit("u").alias("_op"),
         )
         tombs = j.filter(in_o & ~in_n).select(
@@ -762,70 +773,47 @@ class GraphStore:
                            update_postimage,  _commit_version
 
         ``table``: "vertices" (key: id) or "edges" (key: src,dst,label).
-        Computed as a single full-outer key join of the two snapshots —
-        one shuffle, O(|old|+|new|), no per-version replay. Update
-        detection canonicalizes the property map as sorted entries
-        (map column order is not comparable directly). The diff spans
-        the endpoints; per-commit granularity = call once per adjacent
-        version pair."""
+        Computed as the single full-outer key join of the two snapshots
+        (``_diff``) — one shuffle, O(|old|+|new|), no per-version replay.
+        The diff spans the endpoints; per-commit granularity = call once
+        per adjacent version pair. Raises ValueError for an inverted
+        span, or an endpoint that is above the current version or whose
+        manifest was vacuumed."""
         if table not in ("vertices", "edges"):
             raise ValueError(f"unknown table {table!r}")
-        to_v = self.version if to_version is None else to_version
-        read = self.vertices if table == "vertices" else self.edges
-        keys = ["id"] if table == "vertices" else ["src", "dst", "label"]
+        cur = self.version
+        to_v = cur if to_version is None else to_version
+        span = f"changes({table!r}, {from_version}, {to_v})"
+        if from_version > to_v:
+            raise ValueError(f"{span}: from_version is after to_version")
+        for v in (from_version, to_v):
+            if v > cur or not self._io.exists(self._manifest_path(v)):
+                raise ValueError(
+                    f"{span}: v{v} is not a readable version of this store "
+                    f"(current v{cur}; vacuumed or never committed)"
+                )
+        keys = self._KEY_COLS[table]
+        j, in_old, in_new, changed = self._diff(
+            table, self._read_table(from_version, table), self._read_table(to_v, table)
+        )
+        j = _ckpt(j)  # 4 branches below read it once
+        changed = in_old & in_new & changed
 
-        def canon(col: str):
-            return F.to_json(F.array_sort(F.map_entries(F.col(col))))
-
-        old = read(version=from_version).select(
-            *keys,
-            F.col("properties").alias("_old_props"),
-            *([F.col("label").alias("_old_label")] if table == "vertices" else []),
-        )
-        new = read(version=to_v).select(
-            *keys,
-            F.col("properties").alias("_new_props"),
-            *([F.col("label").alias("_new_label")] if table == "vertices" else []),
-        )
-        # presence markers survive the outer join even for all-null rows
-        j = _ckpt(  # 4 branches below read it once
-            old.withColumn("_in_old", F.lit(True))
-            .join(new.withColumn("_in_new", F.lit(True)), keys, "full_outer")
-        )
-        in_old, in_new = F.col("_in_old").isNotNull(), F.col("_in_new").isNotNull()
-        label_old = [F.col("_old_label").alias("label")] if table == "vertices" else []
-        label_new = [F.col("_new_label").alias("label")] if table == "vertices" else []
-        # eqNullSafe: a null↔non-null property map (or label) IS a change
-        changed = in_old & in_new & (
-            ~canon("_old_props").eqNullSafe(canon("_new_props"))
-            | (
-                ~F.col("_old_label").eqNullSafe(F.col("_new_label"))
-                if table == "vertices"
-                else F.lit(False)
+        def image(tag: str, pred: Column, change_type: str) -> DataFrame:
+            return j.filter(pred).select(
+                *keys,
+                *([F.col(f"_{tag}_label").alias("label")] if table == "vertices" else []),
+                F.col(f"_{tag}_props").alias("properties"),
+                F.lit(change_type).alias("_change_type"),
             )
+
+        return (
+            image("new", in_new & ~in_old, "insert")
+            .unionByName(image("old", in_old & ~in_new, "delete"))
+            .unionByName(image("old", changed, "update_preimage"))
+            .unionByName(image("new", changed, "update_postimage"))
+            .withColumn("_commit_version", F.lit(to_v).cast("long"))
         )
-        frames = [
-            j.filter(in_new & ~in_old).select(
-                *keys, *label_new, F.col("_new_props").alias("properties"),
-                F.lit("insert").alias("_change_type"),
-            ),
-            j.filter(in_old & ~in_new).select(
-                *keys, *label_old, F.col("_old_props").alias("properties"),
-                F.lit("delete").alias("_change_type"),
-            ),
-            j.filter(changed).select(
-                *keys, *label_old, F.col("_old_props").alias("properties"),
-                F.lit("update_preimage").alias("_change_type"),
-            ),
-            j.filter(changed).select(
-                *keys, *label_new, F.col("_new_props").alias("properties"),
-                F.lit("update_postimage").alias("_change_type"),
-            ),
-        ]
-        out = frames[0]
-        for fr in frames[1:]:
-            out = out.unionByName(fr)
-        return out.withColumn("_commit_version", F.lit(to_v).cast("long"))
 
     def stats(self) -> dict[str, int]:
         """get_stats parity (:571-579)."""
@@ -968,36 +956,31 @@ class GraphStore:
             e_df = e_df.join(ids.withColumnRenamed("id", "src"), "src", "left_anti").join(
                 ids.withColumnRenamed("id", "dst"), "dst", "left_anti"
             )
-        elif kind == "add_edge":
-            last_e: dict[tuple, tuple] = {}
-            for p in ps:
-                key = (p["src"], p["dst"], p["label"])
-                last_e[key] = (*key, _render_props(p["props"]))
-            rows = local_df(spark, list(last_e.values()), EDGE_SCHEMA)
-            e_df = e_df.join(
-                rows.select("src", "dst", "label"), ["src", "dst", "label"], "left_anti"
-            ).unionByName(rows)
         elif kind == "remove_edge":
             keys = local_df(spark, 
                 [(p["src"], p["dst"], p["label"]) for p in ps],
                 "src long, dst long, label string",
             ).distinct()
             e_df = e_df.join(keys, ["src", "dst", "label"], "left_anti")
-        elif kind == "update_edge_props":
-            last_u: dict[tuple, tuple] = {}
+        elif kind in ("add_edge", "update_edge_props"):
+            # within a run the last op per edge key wins
+            last_e: dict[tuple, tuple] = {}
             for p in ps:
                 key = (p["src"], p["dst"], p["label"])
-                last_u[key] = (*key, _render_props(p["props"]))
-            upd = local_df(spark, 
-                list(last_u.values()),
-                "src long, dst long, label string, new_properties map<string,string>",
-            )
-            e_df = e_df.join(upd, ["src", "dst", "label"], "left").select(
-                "src",
-                "dst",
-                "label",
-                F.coalesce("new_properties", "properties").alias("properties"),
-            )
+                last_e[key] = (*key, _render_props(p["props"]))
+            keys = self._KEY_COLS["edges"]
+            if kind == "add_edge":
+                rows = local_df(spark, list(last_e.values()), EDGE_SCHEMA)
+                e_df = e_df.join(rows.select(*keys), keys, "left_anti").unionByName(rows)
+            else:
+                upd = local_df(
+                    spark,
+                    list(last_e.values()),
+                    "src long, dst long, label string, new_properties map<string,string>",
+                )
+                e_df = e_df.join(upd, keys, "left").select(
+                    *keys, F.coalesce("new_properties", "properties").alias("properties")
+                )
         else:
             raise ValueError(f"unknown op kind {kind}")
         return v_df, e_df

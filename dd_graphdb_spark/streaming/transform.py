@@ -38,6 +38,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dd_graphdb_spark.algorithms._iter import _ckpt
 from dd_graphdb_spark.localrel import local_df
 
 
@@ -631,7 +632,7 @@ def greedy_cooldown_fires(
             .groupBy("_g")
             .applyInPandas(seq_chain, "ts timestamp, metric_value double")
         )
-    c = c.localCheckpoint(eager=True)  # referenced 4× by the successor walk
+    c = _ckpt(c)  # referenced 4× by the successor walk
     start = c.agg(F.min("t")).collect()[0][0]
 
     # bucket-minimum summary + "first bucket strictly past my successor
@@ -678,12 +679,11 @@ def greedy_cooldown_fires(
             .alias("fallback_t"),
         )
     )
-    succ = (
+    succ = _ckpt(
         _bucket_ceilings(c, cdus)
         .join(c.select("t", "_bucket"), "t")
         .join(fallback, "_bucket", "left")
         .select("t", F.coalesce("nxt_t", "fallback_t").alias("succ_t"))
-        .localCheckpoint(eager=True)
     )
 
     # pointer doubling: R holds the first 2^k chain elements after k
@@ -697,15 +697,14 @@ def greedy_cooldown_fires(
             .select(F.col("succ_t").alias("t"))
             .filter(F.col("t").isNotNull())
         )
-        reached = reached.unionByName(stepped).distinct().localCheckpoint(eager=True)
+        reached = _ckpt(reached.unionByName(stepped).distinct())
         n = reached.count()
         if n == n_reached:
             break
         n_reached = n
-        jumps = (
+        jumps = _ckpt(
             jumps.alias("a")
             .join(jumps.alias("b"), F.col("a.succ_t") == F.col("b.t"), "left")
             .select(F.col("a.t").alias("t"), F.col("b.succ_t").alias("succ_t"))
-            .localCheckpoint(eager=True)
         )
     return c.join(reached, "t").select("ts", "metric_value")

@@ -37,11 +37,13 @@ same dependency-free WAL/snapshot mapping GraphStore uses.
 from __future__ import annotations
 
 import json
+import operator
 import os
 import shutil
+from functools import reduce
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dd_graphdb_spark.localrel import local_df
@@ -156,22 +158,6 @@ class _VersionedTable:
         if not os.path.exists(d):
             raise ValueError(f"version {version} of {self.path} is gone")
         raw = s.read.parquet(d)
-        declared = local_df(s, [], self.schema).schema
-        cols = [
-            (F.col(f.name) if f.name in raw.columns else F.lit(None))
-            .cast(f.dataType)
-            .alias(f.name)
-            for f in declared.fields
-        ]
-        return raw.select(cols)
-
-    def read(self, spark: SparkSession | None = None) -> DataFrame:
-        # caller may pass a foreachBatch session clone so state rows and
-        # batch rows live in the same session
-        s = spark or self.spark
-        if self.version < 0:
-            return local_df(s, [], self.schema)
-        raw = s.read.parquet(os.path.join(self.path, f"v{self.version}"))
         # Migration-tolerant: cast the footer's types to the declared
         # schema instead of forcing the declared schema onto the file.
         # State persisted under an older declaration (e.g. the
@@ -186,6 +172,11 @@ class _VersionedTable:
             for f in declared.fields
         ]
         return raw.select(cols)
+
+    def read(self, spark: SparkSession | None = None) -> DataFrame:
+        # caller may pass a foreachBatch session clone so state rows and
+        # batch rows live in the same session
+        return self.read_version(self.version, spark)
 
     #: state versions kept after the pointer swap — enough for any
     #: in-flight reader of the previous version, bounded so a streaming
@@ -207,6 +198,59 @@ class _VersionedTable:
             if os.path.exists(stale):
                 shutil.rmtree(stale, ignore_errors=True)
         return nxt
+
+
+def _signed(deltas: DataFrame) -> DataFrame:
+    """``deltas`` with its ``_sign`` column (+1 add / -1 remove); a
+    batch without one is all adds."""
+    if "_sign" in deltas.columns:
+        return deltas
+    return deltas.withColumn("_sign", F.lit(1))
+
+
+def _merge_signed(
+    table: _VersionedTable, batch: DataFrame, keys: Sequence[str], *extra: Column
+) -> None:
+    """Signed MERGE of a pre-aggregated batch (keys, ±``d_count``,
+    ±``d_sum``) into a (keys, ``_count``, ``_sum``) state: one full-outer
+    join on the keys; untouched rows pass through, rows whose net count
+    reaches <= 0 drop. Keys match NULL-SAFELY: a plain name-list join
+    never matches a NULL group, so the NULL-group state row and the batch
+    row would both survive. ``extra`` columns follow ``_sum`` and read the
+    state as ``s.*``, the batch as ``b.*``."""
+    state = table.read(batch.sparkSession).alias("s")
+    cond = reduce(
+        operator.and_, [F.col(f"s.{c}").eqNullSafe(F.col(f"b.{c}")) for c in keys]
+    )
+    zero = F.lit(0).cast("decimal(38,6)")
+    merged = (
+        state.join(batch.alias("b"), cond, "full_outer")
+        .select(
+            *[F.coalesce(F.col(f"s.{c}"), F.col(f"b.{c}")).alias(c) for c in keys],
+            (
+                F.coalesce(F.col("s._count"), F.lit(0))
+                + F.coalesce(F.col("b.d_count"), F.lit(0))
+            )
+            .cast("long")
+            .alias("_count"),
+            (F.coalesce(F.col("s._sum"), zero) + F.coalesce(F.col("b.d_sum"), zero))
+            .cast("decimal(38,6)")
+            .alias("_sum"),
+            *extra,
+        )
+        .filter(F.col("_count") > 0)
+    )
+    table.write(merged)
+
+
+def _replace_keys(table: _VersionedTable, touched: DataFrame, adds: DataFrame) -> None:
+    """Key-replace MERGE of the set-valued states: every key the batch
+    touches (``touched``'s columns are the key) leaves the state, then
+    ``adds`` re-insert — an add overwrites, a remove deletes, a
+    same-batch retract + add keeps the row. One anti-join + union; a
+    distinct state merged with distinct adds stays distinct."""
+    state = table.read(touched.sparkSession)
+    table.write(state.join(touched, touched.columns, "left_anti").unionByName(adds))
 
 
 class IncrementalAggState:
@@ -252,8 +296,7 @@ class IncrementalAggState:
 
     def apply_deltas(self, deltas: DataFrame) -> None:
         g = self.group_cols
-        if "_sign" not in deltas.columns:
-            deltas = deltas.withColumn("_sign", F.lit(1))
+        deltas = _signed(deltas)
         if self.value_col is not None:
             val = F.col(self.value_col).cast("decimal(38,6)")
         else:
@@ -268,38 +311,15 @@ class IncrementalAggState:
             F.max(F.when(F.col("_sign") > 0, val.cast("double"))).alias("d_max"),
         )
 
-        # MERGE: one outer join on group keys; untouched groups unchanged.
-        # NULL-SAFE key equality: a plain name-list join never matches a
-        # NULL group, so the existing NULL-group state row and the batch
-        # row would both survive — one duplicate NULL-group row per batch
-        state = self._table.read(deltas.sparkSession).alias("s")
-        batch = batch.alias("b")
-        cond = None
-        for c in g:
-            eq = F.col(f"s.{c}").eqNullSafe(F.col(f"b.{c}"))
-            cond = eq if cond is None else (cond & eq)
-        merged = (
-            state.join(batch, cond, "full_outer")
-            .select(
-                *[F.coalesce(F.col(f"s.{c}"), F.col(f"b.{c}")).alias(c) for c in g],
-                (
-                    F.coalesce(F.col("s._count"), F.lit(0))
-                    + F.coalesce(F.col("b.d_count"), F.lit(0))
-                ).alias("_count"),
-                (
-                    F.coalesce(F.col("s._sum"), F.lit(0).cast("decimal(38,6)"))
-                    + F.coalesce(F.col("b.d_sum"), F.lit(0).cast("decimal(38,6)"))
-                )
-                .cast("decimal(38,6)")
-                .alias("_sum"),
-                # least/greatest skip nulls: tightens on adds, keeps the
-                # old bound on remove-only batches (conservative, :885-892)
-                F.least(F.col("s._min"), F.col("b.d_min")).alias("_min"),
-                F.greatest(F.col("s._max"), F.col("b.d_max")).alias("_max"),
-            )
-            .filter(F.col("_count") > 0)
+        _merge_signed(
+            self._table,
+            batch,
+            g,
+            # least/greatest skip nulls: tightens on adds, keeps the
+            # old bound on remove-only batches (conservative, :885-892)
+            F.least(F.col("s._min"), F.col("b.d_min")).alias("_min"),
+            F.greatest(F.col("s._max"), F.col("b.d_max")).alias("_max"),
         )
-        self._table.write(merged)
 
     def result(self) -> DataFrame:
         """Final aggregates per group (compute_final_aggregation,
@@ -334,9 +354,7 @@ class IncrementalCentroids:
 
     def apply_deltas(self, deltas: DataFrame, vec_col: str = "embedding") -> None:
         g = self.group_col
-        if "_sign" not in deltas.columns:
-            deltas = deltas.withColumn("_sign", F.lit(1))
-        e = deltas.select(
+        e = _signed(deltas).select(
             F.col(g).cast("string").alias(g),
             "_sign",
             F.posexplode(F.col(vec_col)).alias("_pos", "_x"),
@@ -347,31 +365,7 @@ class IncrementalCentroids:
                 F.col("_sign") * F.col("_x").cast("double").cast("decimal(38,6)")
             ).alias("d_sum"),
         )
-        state = self._table.read(deltas.sparkSession).alias("s")
-        batch = batch.alias("b")
-        zero = F.lit(0).cast("decimal(38,6)")
-        # null-safe group equality (a NULL group must merge, not duplicate)
-        cond = F.col(f"s.{g}").eqNullSafe(F.col(f"b.{g}")) & (
-            F.col("s.dim").eqNullSafe(F.col("b.dim"))
-        )
-        merged = (
-            state.join(batch, cond, "full_outer")
-            .select(
-                F.coalesce(F.col(f"s.{g}"), F.col(f"b.{g}")).alias(g),
-                F.coalesce(F.col("s.dim"), F.col("b.dim")).alias("dim"),
-                (
-                    F.coalesce(F.col("s._count"), F.lit(0))
-                    + F.coalesce(F.col("b.d_count"), F.lit(0))
-                )
-                .cast("long")
-                .alias("_count"),
-                (F.coalesce(F.col("s._sum"), zero) + F.coalesce(F.col("b.d_sum"), zero))
-                .cast("decimal(38,6)")
-                .alias("_sum"),
-            )
-            .filter(F.col("_count") > 0)
-        )
-        self._table.write(merged)
+        _merge_signed(self._table, batch, [g, "dim"])
 
     def result(self) -> DataFrame:
         return self._table.read().select(
@@ -404,14 +398,11 @@ class IncrementalMinHash:
                      id_col: str = "doc_id") -> None:
         from dd_graphdb_spark.operators.dedup import minhash_signatures
 
-        if "_sign" not in deltas.columns:
-            deltas = deltas.withColumn("_sign", F.lit(1))
+        deltas = _signed(deltas)
         touched = deltas.select(F.col(id_col).alias("id")).distinct()
         adds = deltas.filter(F.col("_sign") > 0).select(id_col, text_col)
         new_sigs = minhash_signatures(adds, text_col=text_col, id_col=id_col, n=self.n)
-        state = self._table.read(deltas.sparkSession)
-        merged = state.join(touched, "id", "left_anti").unionByName(new_sigs)
-        self._table.write(merged)
+        _replace_keys(self._table, touched, new_sigs)
 
     def result(self) -> DataFrame:
         return self._table.read()
@@ -445,8 +436,7 @@ class _EdgeState:
         )
 
     def apply_edge_deltas(self, deltas: DataFrame) -> None:
-        if "_sign" not in deltas.columns:
-            deltas = deltas.withColumn("_sign", F.lit(1))
+        deltas = _signed(deltas)
         if self.weighted:
             if "weight" not in deltas.columns:
                 deltas = deltas.withColumn("weight", F.lit(1.0))
@@ -454,22 +444,12 @@ class _EdgeState:
         else:
             cols = ["src", "dst"]
         adds = deltas.filter(F.col("_sign") > 0).select(*cols).distinct()
-        keys = deltas.select("src", "dst").distinct()
-        state = self._edges.read(deltas.sparkSession)
-        # any touched key leaves the state, then adds re-insert (insert
-        # overwrites weight; remove deletes) — one anti-join + union
-        merged = state.join(keys, ["src", "dst"], "left_anti").unionByName(adds)
-        self._edges.write(merged)
+        _replace_keys(self._edges, deltas.select("src", "dst").distinct(), adds)
 
     def apply_vertex_deltas(self, deltas: DataFrame) -> None:
-        if "_sign" not in deltas.columns:
-            deltas = deltas.withColumn("_sign", F.lit(1))
+        deltas = _signed(deltas)
         adds = deltas.filter(F.col("_sign") > 0).select("id").distinct()
-        removes = deltas.filter(F.col("_sign") < 0).select("id")
-        state = self._verts.read(deltas.sparkSession)
-        self._verts.write(
-            state.join(removes, ["id"], "left_anti").unionByName(adds).distinct()
-        )
+        _replace_keys(self._verts, deltas.select("id").distinct(), adds)
 
     def apply_deltas(self, deltas: DataFrame) -> None:
         """Catalog interface — dispatch on batch shape: edge batches
@@ -898,6 +878,7 @@ class IncrementalPageRank:
         # contrib frame cached as deserialized rows is a heap hazard at
         # scale — see algorithms._iter._ckpt
         from dd_graphdb_spark.algorithms._iter import _ckpt
+        from dd_graphdb_spark.algorithms.pagerank import _power_iterate
 
         edges = self._edges.read()
         verts = _ckpt(
@@ -910,30 +891,13 @@ class IncrementalPageRank:
             self._ranks.write(local_df(self.spark, [], "id long, rank double"))
             return self.ranks()
         outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-        contrib_edges = _ckpt(edges.join(outdeg, "src"))
-        base = float((1.0 - self.damping) / n)
-
         ranks = self._ranks.read()
         if ranks.isEmpty():
             ranks = verts.withColumn("rank", F.lit(1.0 / n))
-        ranks = _ckpt(ranks)
-        for _ in range(self.iterations):
-            contribs = (
-                ranks.join(contrib_edges, ranks.id == contrib_edges.src)
-                .select(F.col("dst").alias("id"), (F.col("rank") / F.col("outdeg")).alias("c"))
-                .groupBy("id")
-                .agg(F.sum("c").alias("msum"))
-            )
-            ranks = _ckpt(
-                verts.join(contribs, "id", "left")
-                .select(
-                    "id",
-                    (
-                        F.lit(base)
-                        + F.lit(self.damping) * F.coalesce(F.col("msum"), F.lit(0.0))
-                    ).alias("rank"),
-                )
-            )
+        ranks = _power_iterate(
+            verts, _ckpt(edges.join(outdeg, "src")), ranks,
+            F.lit(float((1.0 - self.damping) / n)), self.damping, self.iterations,
+        )
         self._ranks.write(ranks)
         return self.ranks()
 

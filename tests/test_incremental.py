@@ -141,6 +141,29 @@ def test_null_group_merges_not_duplicates(spark, agg_state):
     assert rows["a"] == (3, 3.0)
 
 
+def test_centroids_merge_retract_and_update(spark, tmp_path):
+    """IncrementalCentroids' signed merge: a NULL group merges across
+    batches instead of duplicating, a group retracted to zero drops its
+    (group, dim) rows, and an update (retract + add) moves the centroid."""
+    from collections import Counter
+
+    from dd_graphdb_spark.views.incremental import IncrementalCentroids
+
+    cent = IncrementalCentroids(spark, str(tmp_path / "cent"), "g")
+    schema = "g string, embedding array<double>, _sign int"
+    cent.apply_deltas(spark.createDataFrame(
+        [(None, [1.0, 2.0], 1), ("a", [0.0, 4.0], 1), ("b", [2.0, 2.0], 1)], schema
+    ))
+    cent.apply_deltas(spark.createDataFrame([(None, [3.0, 4.0], 1)], schema))
+    cent.apply_deltas(spark.createDataFrame(
+        [("b", [2.0, 2.0], -1), ("a", [0.0, 4.0], -1), ("a", [2.0, 6.0], 1)], schema
+    ))
+    rows = Counter((r["g"], r["dim"], r["centroid"]) for r in cent.result().collect())
+    assert rows == Counter(
+        [(None, 1, 2.0), (None, 2, 3.0), ("a", 1, 2.0), ("a", 2, 6.0)]
+    )
+
+
 def test_pagerank_same_batch_update_keeps_edge(spark, tmp_path):
     """A CDC edge update (retract preimage + add postimage in ONE batch)
     must keep the edge in adjacency state — the add wins, matching

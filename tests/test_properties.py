@@ -439,8 +439,12 @@ def test_asof_matches_pandas_model(spark, lefts, rights, direction, tol, bucket)
 # views, replicas) trust the feed.
 # --------------------------------------------------------------------------
 @SMALL
-@given(st.lists(_op, min_size=1, max_size=8), st.lists(_op, min_size=1, max_size=8))
-def test_cdc_changes_reconstruct_snapshot(spark, tmp_path_factory, ops1, ops2):
+@given(
+    st.lists(_op, min_size=1, max_size=8),
+    st.lists(_op, min_size=1, max_size=8),
+    st.booleans(),
+)
+def test_cdc_changes_reconstruct_snapshot(spark, tmp_path_factory, ops1, ops2, cow):
     from dd_graphdb_spark.storage import (
         GraphStore,
         add_edge,
@@ -460,7 +464,10 @@ def test_cdc_changes_reconstruct_snapshot(spark, tmp_path_factory, ops1, ops2):
         }
         return [mk[kind](a, b) for kind, a, b in ops]
 
-    store = GraphStore(spark, str(tmp_path_factory.mktemp("cdc_store")))
+    # cow: merge-on-read versions (delta layers over a base), not only
+    # full rewrites
+    kw = {"n_buckets": 3, "cow_min_bytes": 0} if cow else {}
+    store = GraphStore(spark, str(tmp_path_factory.mktemp("cdc_store")), **kw)
     store.apply_batch(to_batch(ops1))
     v1 = store.version
     store.apply_batch(to_batch(ops2))

@@ -184,6 +184,22 @@ def test_cdc_rejects_unknown_table(store):
         store.changes("nope", 0)
 
 
+def test_cdc_rejects_bad_span(store):
+    """An inverted span, a version above the current one and a vacuumed
+    version each raise ValueError naming the span — not a silently
+    inverted feed or a bare FileNotFoundError on a manifest."""
+    v1 = store.version
+    store.apply_batch([add_vertex(3, "Person", {"name": "Carol"})])
+    with pytest.raises(ValueError, match=r"changes\('vertices', 2, 1\)"):
+        store.changes("vertices", 2, 1)
+    with pytest.raises(ValueError, match="v9"):
+        store.changes("edges", v1, 9)
+    store.vacuum(keep_last=1)
+    with pytest.raises(ValueError, match=f"v{v1}"):
+        store.changes("vertices", v1)
+    assert store.changes("vertices", store.version).count() == 0
+
+
 def test_cdc_to_deltas_signs(store):
     from dd_graphdb_spark.storage.store import cdc_to_deltas
 
