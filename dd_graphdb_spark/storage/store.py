@@ -249,10 +249,11 @@ class GraphStore:
         io: StorageIO | None = None,
         lock_timeout_s: float = 120.0,
     ):
-        """``cow_min_bytes``: below this on-disk size, commits fall back
-        to a full rewrite — rewriting a few MB is ONE task, while the
-        incremental path pays a touched-bucket job (and a cascade probe
-        job) per commit, which dominates tiny-store commit latency.
+        """``cow_min_bytes``: below this on-disk size, commits rewrite
+        touched tables whole and inherit untouched ones — a few MB is
+        ONE task, while the incremental path pays a touched-bucket job
+        (and a cascade probe job) per commit, which dominates tiny-store
+        commit latency.
         A runtime policy, not persisted: at 100 TB every real store is
         far past it after the first load. 0 = always CoW (tests, the
         decade probe).
@@ -706,9 +707,10 @@ class GraphStore:
         set — touched-set computations that cost a Spark job (distinct-
         bucket collects, the cascade dst-probe) are deferred behind the
         _cow_active gate so small stores never pay them. Below the size
-        threshold the plan degrades to full-table base + full rewrite —
-        the pre-CoW behavior, which is cheaper than the probes for
-        stores a single task rewrites.
+        threshold a touched table is rewritten whole (touched None —
+        cheaper than the probes for stores one task rewrites), and a
+        table the write provably leaves untouched (a non-callable empty
+        set) is inherited by manifest reference: no read, no write job.
 
         The last element is the base version the plan reads, which the
         caller hands to _commit_version: it raises ConflictError if a
@@ -718,10 +720,10 @@ class GraphStore:
         OCC failure). It is returned, not kept on the store, so two
         statements sharing one store cannot overwrite each other's."""
         planned = self.version
-        if not self._cow_active():
-            return self.vertices(planned), self.edges(planned), None, None, planned
-        tv = v_touched() if callable(v_touched) else v_touched
-        te = e_touched() if callable(e_touched) else e_touched
+        if self._cow_active():
+            tv, te = (t() if callable(t) else t for t in (v_touched, e_touched))
+        else:
+            tv, te = (None if callable(t) or t else set() for t in (v_touched, e_touched))
         return self.vertices(planned, tv), self.edges(planned, te), tv, te, planned
 
     # ---- reads (time travel via version=) ---------------------------------
@@ -773,12 +775,16 @@ class GraphStore:
                            update_postimage,  _commit_version
 
         ``table``: "vertices" (key: id) or "edges" (key: src,dst,label).
-        Computed as the single full-outer key join of the two snapshots
-        (``_diff``) — one shuffle, O(|old|+|new|), no per-version replay.
-        The diff spans the endpoints; per-commit granularity = call once
-        per adjacent version pair. Raises ValueError for an inverted
-        span, or an endpoint that is above the current version or whose
-        manifest was vacuumed."""
+        One full-outer key join of the two snapshots (``_diff``) over the
+        buckets whose manifest chain differs (exact: keys determine
+        buckets), exploded into change rows in one pass — O(touched
+        buckets) on a CoW store; an untouched table scans nothing. LAZY:
+        building it launches no Spark job, and a vacuum before the
+        consumer's action fails that scan loudly (the reader contract of
+        ``vertices(version=)``, see vacuum). Per-commit granularity =
+        call once per adjacent version pair. Raises ValueError for an
+        inverted span, or an endpoint that is above the current version
+        or whose manifest was vacuumed."""
         if table not in ("vertices", "edges"):
             raise ValueError(f"unknown table {table!r}")
         cur = self.version
@@ -792,28 +798,30 @@ class GraphStore:
                     f"{span}: v{v} is not a readable version of this store "
                     f"(current v{cur}; vacuumed or never committed)"
                 )
-        keys = self._KEY_COLS[table]
+        old, new = (self._chains(self._load_manifest(v), table) for v in (from_version, to_v))
+        differ = {int(b) for b in old.keys() | new.keys() if old.get(b) != new.get(b)}
         j, in_old, in_new, changed = self._diff(
-            table, self._read_table(from_version, table), self._read_table(to_v, table)
+            table, *(self._read_table(v, table, differ) for v in (from_version, to_v))
         )
-        j = _ckpt(j)  # 4 branches below read it once
         changed = in_old & in_new & changed
 
-        def image(tag: str, pred: Column, change_type: str) -> DataFrame:
-            return j.filter(pred).select(
-                *keys,
+        def image(tag: str, pred: Column, change_type: str) -> Column:
+            return F.when(pred, F.struct(
                 *([F.col(f"_{tag}_label").alias("label")] if table == "vertices" else []),
                 F.col(f"_{tag}_props").alias("properties"),
                 F.lit(change_type).alias("_change_type"),
-            )
+            ))
 
-        return (
-            image("new", in_new & ~in_old, "insert")
-            .unionByName(image("old", in_old & ~in_new, "delete"))
-            .unionByName(image("old", changed, "update_preimage"))
-            .unionByName(image("new", changed, "update_postimage"))
-            .withColumn("_commit_version", F.lit(to_v).cast("long"))
+        rows = F.array(
+            image("new", in_new & ~in_old, "insert"),
+            image("old", in_old & ~in_new, "delete"),
+            image("old", changed, "update_preimage"),
+            image("new", changed, "update_postimage"),
         )
+        keys = self._KEY_COLS[table]
+        return j.select(
+            *keys, F.explode(F.filter(rows, lambda r: r.isNotNull())).alias("_c")
+        ).select(*keys, "_c.*", F.lit(to_v).cast("long").alias("_commit_version"))
 
     def stats(self) -> dict[str, int]:
         """get_stats parity (:571-579)."""
@@ -907,9 +915,7 @@ class GraphStore:
                 else:  # add_edge / remove_edge / update_edge_props
                     touched_e.add(p["src"] % B)
         def e_scope(te=touched_e):
-            if not removed:
-                return te
-            probe = local_df(self.spark, 
+            probe = local_df(self.spark,
                 [(i,) for i in sorted(removed)], "dst long"
             )
             return te | self._collect_buckets(
@@ -921,7 +927,7 @@ class GraphStore:
         # left pinned they accumulate and degrade later queries
         with pin_scope(self.spark):
             v_df, e_df, touched_v, touched_e, planned = self._cow_plan(
-                touched_v, e_scope
+                touched_v, e_scope if removed else touched_e
             )
             for i, (kind, ps) in enumerate(runs):
                 v_df, e_df = self._apply_run(kind, ps, v_df, e_df)
@@ -1173,16 +1179,16 @@ class GraphStore:
             plans.append((table, list(props), vals))
 
         # pass 2: compose the per-variable transforms over the
-        # bucket-restricted bases and commit ONE version
+        # bucket-restricted bases and commit ONE version (a table no
+        # assignment targets is untouched: set())
         def scope(table):
+            fs = [f for t, _, f in plans if t == table]
+            if not fs:
+                return set()
             col = self._BUCKET_KEY[table]
-            return set().union(
-                *(self._collect_buckets(f, col) for t, _, f in plans if t == table)
-            )
+            return lambda: set().union(*(self._collect_buckets(f, col) for f in fs))
 
-        v_df, e_df, tv, te, planned = self._cow_plan(
-            lambda: scope("vertices"), lambda: scope("edges")
-        )
+        v_df, e_df, tv, te, planned = self._cow_plan(scope("vertices"), scope("edges"))
         frames = {"vertices": v_df, "edges": e_df}
         out = None
         for table, keys, vals in plans:
@@ -1280,7 +1286,7 @@ class GraphStore:
         the result (ContextCleaner after GC — the suites' session
         hygiene runs both GCs between queries); they are deliberately
         NOT eagerly unpersisted here, which would invalidate the
-        returned DataFrame. Same contract for ``changes()``.
+        returned DataFrame.
 
         CREATE (execute_create, graph/query/src/executor.rs:521-566):
         nodes get ids max+1.. (next_vertex_id, :618-625), label becomes
@@ -1415,11 +1421,11 @@ class GraphStore:
         layers are RELOCATED — a filesystem rename, no data rewrite
         (a COPY on S3-class object stores — fsio module docstring) —
         into the oldest kept version that references them (under
-        ``v{k}/inherited/``), and every kept manifest is patched to the
-        new location before the dead dirs go. Holds the store's writer
-        lock: a concurrent commit could otherwise inherit a layer path
-        this vacuum is about to relocate (the WRITER half of the
-        single-writer contract, ENFORCED since r14).
+        ``v{k}/inherited/`` + the original path, never nested), and every
+        kept manifest is patched to the new location before the dead dirs
+        go. Holds the store's writer lock: a concurrent commit could
+        otherwise inherit a layer path this vacuum is about to relocate
+        (the WRITER half of the single-writer contract, ENFORCED since r14).
 
         READERS take no lock — that half is still a convention: a
         reader that loaded a manifest before vacuum relocates one of
@@ -1465,7 +1471,7 @@ class GraphStore:
                         if owner not in dead:
                             continue
                         if rel not in moves:
-                            new_rel = f"v{v}/inherited/{rel}"
+                            new_rel = f"v{v}/inherited/" + rel.rsplit("inherited/", 1)[-1]
                             self._io.rename_tree(
                                 os.path.join(self.path, rel),
                                 os.path.join(self.path, new_rel),

@@ -182,7 +182,7 @@ class ViewCatalog:
         os.makedirs(path, exist_ok=True)
         self.defs: dict[str, ViewDefinition] = {}
         self.builders: dict[str, Callable[[SparkSession], DataFrame]] = {}
-        self.state: dict[str, dict] = {}  # name -> {last_refresh, dirty, cached}
+        self.state: dict[str, dict] = {}  # name -> {last_refresh, dirty, cached, schema}
         self.incremental: dict[str, object] = {}  # name -> delta-state object
         self.gql_engine = None  # attach_gql_engine() enables gql views
         self._load()
@@ -372,6 +372,7 @@ class ViewCatalog:
             return False
         df = self._build(name)
         df.write.mode("overwrite").parquet(self._data_path(name))
+        st["schema"] = df.schema  # read() scans with it: no inference job
         st["last_refresh"] = time.time()
         st["dirty"] = False
         return True
@@ -404,7 +405,8 @@ class ViewCatalog:
         p = self._data_path(name)
         if not os.path.exists(p):
             self.refresh(name, force=True)
-        df = self.spark.read.parquet(p)
+        schema = self.state[name].get("schema")  # None: not refreshed since load
+        df = (self.spark.read if schema is None else self.spark.read.schema(schema)).parquet(p)
         if self.state[name]["cached"]:
             df = df.cache()
         return df

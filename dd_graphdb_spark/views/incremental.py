@@ -157,21 +157,11 @@ class _VersionedTable:
         d = os.path.join(self.path, f"v{version}")
         if not os.path.exists(d):
             raise ValueError(f"version {version} of {self.path} is gone")
-        raw = s.read.parquet(d)
-        # Migration-tolerant: cast the footer's types to the declared
-        # schema instead of forcing the declared schema onto the file.
-        # State persisted under an older declaration (e.g. the
-        # decimal(18,6) → decimal(38,6) widening) reads cleanly; a
-        # column added to the declaration since the state was written
-        # materializes as NULL rather than failing the read.
-        declared = local_df(s, [], self.schema).schema
-        cols = [
-            (F.col(f.name) if f.name in raw.columns else F.lit(None))
-            .cast(f.dataType)
-            .alias(f.name)
-            for f in declared.fields
-        ]
-        return raw.select(cols)
+        # the declared schema, so no schema-inference job; the reader
+        # still widens state written under an older declaration
+        # (decimal(18,6) → decimal(38,6)) and reads a column declared
+        # since as NULL
+        return s.read.schema(self.schema).parquet(d)
 
     def read(self, spark: SparkSession | None = None) -> DataFrame:
         # caller may pass a foreachBatch session clone so state rows and

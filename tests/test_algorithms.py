@@ -425,14 +425,13 @@ def test_kcore_bounds_pinned_blocks_per_round(spark):
     assert len(_persistent_ids(spark) - before) <= 1
 
 
-def test_wide_shuffle_scopes_and_restores(spark, monkeypatch):
+def test_wide_shuffle_scopes_and_restores(spark):
     """wide_shuffle rebinds a loop's graph into a child session that
     reads the raised initial partition count; the caller's session never
     changes — not inside the loop, not after it, not when it raises —
     and run_loop hands the result back in the caller's session."""
     from dd_graphdb_spark.algorithms._iter import run_loop, wide_shuffle
 
-    monkeypatch.delenv("SPARK_GRAFT_WIDE_PARTITIONS", raising=False)
     key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     before = spark.conf.get(key, None)
     g = PropertyGraph(spark.range(3), spark.createDataFrame([(0, 1)], "src long, dst long"))
@@ -467,7 +466,6 @@ def test_scoped_sites_never_write_the_parent_session(spark, monkeypatch):
     from dd_graphdb_spark.algorithms import _iter
     from dd_graphdb_spark.operators._skew import salted_self_pairs
 
-    monkeypatch.delenv("SPARK_GRAFT_WIDE_PARTITIONS", raising=False)
     keys = (
         "spark.sql.adaptive.enabled",
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum",

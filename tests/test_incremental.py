@@ -264,3 +264,38 @@ def test_versioned_table_reads_old_precision_state(spark, tmp_path):
     assert str(new.read().schema["_sum"].dataType) == "DecimalType(38,6)"
     # a column added to the declaration since the write reads as NULL
     assert rows[0]["_extra"] is None
+
+
+@pytest.mark.parametrize("cow_min_bytes", [32 << 20, 0])
+def test_state_view_and_feed_reads_launch_no_job(spark, tmp_path, cow_min_bytes):
+    """Building a state read, a refreshed view's read and a change feed
+    launches no Spark job — no schema inference, no checkpoint: the
+    consumer's action is the first job each of them costs."""
+    from dd_graphdb_spark.storage import (
+        GraphStore, add_edge, add_vertex, update_vertex_props,
+    )
+    from dd_graphdb_spark.views.incremental import _VersionedTable
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    cell = _VersionedTable(spark, str(tmp_path / "cell"), "k string, n long")
+    cell.write(spark.createDataFrame([("a", 1)], "k string, n long"))
+    catalog = ViewCatalog(spark, str(tmp_path / "views"))
+    catalog.register(ViewDefinition(name="one", view_type="sql", sql="SELECT 1 AS x"))
+    catalog.refresh("one", force=True)
+    store = GraphStore(spark, str(tmp_path / "g"), n_buckets=4, cow_min_bytes=cow_min_bytes)
+    store.apply_batch([add_vertex(i, "P") for i in range(4)] + [add_edge(0, 1, "l")])
+    a = store.version
+    store.apply_batch([update_vertex_props(1, {"n": 1}), add_edge(1, 2, "l")])
+
+    before = dag.nextJobId()
+    state = cell.read_version(cell.version)
+    view = catalog.read("one")
+    feeds = {t: store.changes(t, a) for t in ("vertices", "edges")}
+    assert dag.nextJobId() == before
+
+    assert [tuple(r) for r in state.collect()] == [("a", 1)]
+    assert [r["x"] for r in view.collect()] == [1]
+    assert sorted(r["_change_type"] for r in feeds["vertices"].collect()) == [
+        "update_postimage", "update_preimage",
+    ]
+    assert [(r["src"], r["dst"]) for r in feeds["edges"].collect()] == [(1, 2)]

@@ -511,7 +511,7 @@ def test_cow_bucket_restricted_read_prunes_files(spark, tmp_path):
 
 
 def test_cow_size_gate_engages_past_threshold(spark, tmp_path):
-    """Below cow_min_bytes commits are full rewrites (no inheritance);
+    """Below cow_min_bytes touched tables are fully rewritten;
     once the store crosses the threshold the same commit shape starts
     inheriting untouched buckets."""
     store = GraphStore(
@@ -902,3 +902,88 @@ def test_apply_batch_never_frees_a_concurrent_loops_checkpoint(store, monkeypatc
     assert seen["ids"] and seen["pinned"]
     assert seen["count"] == 2
     assert store.stats()["vertex_count"] == 3
+
+
+def _rows(df):
+    return sorted(
+        (tuple(r[c] for c in df.columns if c != "properties"), sorted((r["properties"] or {}).items()))
+        for r in df.collect()
+    )
+
+
+def test_full_rewrite_inherits_untouched_table(spark, tmp_path):
+    """Below cow_min_bytes a write rewrites only the tables it touches:
+    a vertex-only apply_batch and a vertex-only MATCH..SET each leave
+    every edge chain identical to the previous version's, so the edge
+    feed over them is empty and scans no file; vacuum then relocates the
+    inherited edge layer and both tables still read back exactly."""
+    import os
+
+    from dd_graphdb_spark.plans.lower import GQLEngine
+
+    store = GraphStore(spark, str(tmp_path / "g"), n_buckets=4)
+    store.apply_batch(
+        [add_vertex(i, "P", {"n": i}) for i in range(6)]
+        + [add_edge(i, (i + 1) % 6, "next", {"w": i}) for i in range(6)]
+    )
+    v1 = store.version
+    assert not store._cow_active()
+    store.apply_batch([update_vertex_props(2, {"type": "P", "n": 20})])
+    v2 = store.version
+    GQLEngine(store.as_property_graph({"n": "long"}), store=store).execute(
+        "MATCH (p:P) WHERE p.id = 3 SET p.n = 30"
+    )
+    v3 = store.version
+    assert v3 == v2 + 1
+    for a, b in ((v1, v2), (v2, v3)):
+        assert _chains(store, b, "edges") == _chains(store, a, "edges")
+        feed = store.changes("edges", a, b)
+        assert feed.inputFiles() == []
+        assert feed.count() == 0
+        # the touched table is still rewritten whole
+        assert all(l["s"] == b for c in _chains(store, b, "vertices").values() for l in c)
+    verts, edges = _rows(store.vertices()), _rows(store.edges())
+    assert len(verts) == 6 and len(edges) == 6
+    assert store.get_vertex(3).collect()[0]["properties"]["n"] == "30"
+    store.vacuum(keep_last=1)  # v1 owned the edge layer v3 inherits
+    assert not os.path.isdir(os.path.join(store.path, f"v{v1}"))
+    assert all(
+        l["p"].startswith(f"v{v3}/inherited/v{v1}/edges/")
+        for c in _chains(store, v3, "edges").values()
+        for l in c
+    )
+    assert _rows(store.vertices()) == verts
+    assert _rows(store.edges()) == edges
+    # the next vertex-only round relocates the layer again, keeping its
+    # original path rather than nesting one inherited/ level per vacuum
+    store.apply_batch([update_vertex_props(4, {"type": "P", "n": 40})])
+    store.vacuum(keep_last=1)
+    assert all(
+        l["p"].startswith(f"v{v3 + 1}/inherited/v{v1}/edges/")
+        for c in _chains(store, v3 + 1, "edges").values()
+        for l in c
+    )
+    assert _rows(store.edges()) == edges
+
+
+def test_cow_changes_scan_only_touched_buckets(spark, tmp_path):
+    """On a CoW store the change feed reads only the buckets whose
+    chain differs between its endpoints."""
+    store = GraphStore(spark, str(tmp_path / "cow"), n_buckets=4, cow_min_bytes=0)
+    store.apply_batch(
+        [add_vertex(i, "P", {"n": i}) for i in range(8)]
+        + [add_edge(i, (i + 1) % 8, "next") for i in range(8)]
+    )
+    v1 = store.version
+    # vertex bucket 1 (id 5) and edge bucket 2 (src 6)
+    store.apply_batch([update_vertex_props(5, {"n": 50}), add_edge(6, 1, "skip")])
+    for table, bucket in (("vertices", 1), ("edges", 2)):
+        files = store.changes(table, v1).inputFiles()
+        assert files and all(f"_b={bucket}/" in f for f in files), files
+    rows = store.changes("vertices", v1).collect()
+    assert sorted((r["id"], r["_change_type"], r["properties"]["n"]) for r in rows) == [
+        (5, "update_postimage", "50"),
+        (5, "update_preimage", "5"),
+    ]
+    rows = store.changes("edges", v1).collect()
+    assert [(r["src"], r["dst"], r["_change_type"]) for r in rows] == [(6, 1, "insert")]
