@@ -19,6 +19,14 @@ brackets the loop with explicit bookkeeping:
 A localCheckpoint'ed RDD cannot be recomputed after unpersist (its
 lineage is truncated), which is why the result must be re-checkpointed
 *before* the loop's blocks are freed.
+
+Every frontier search — BFS, reachability, closeness, betweenness's
+forward phase, SCC's backward mark and GQL shortestPath — runs on
+``bfs_levels``, the one level-synchronous BFS loop, over edges laid out
+by ``src_edges`` (or ``copartitioned``). It has one exhaustion rule: a
+search that uses up its depth bound raises "did not converge" only if
+one more expansion of the last frontier would still settle something;
+BFS and shortestPath treat the bound as a truncation instead.
 """
 
 from __future__ import annotations
@@ -30,6 +38,7 @@ from contextlib import contextmanager
 from dataclasses import replace
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from dd_graphdb_spark.session import rebind, scoped
 
@@ -329,6 +338,92 @@ class RoundPins:
                 del self._ids[k]
                 del self._frames[k]
         _unpersist(self._spark, dead - live_ids)
+
+
+def src_edges(g, label: str | None = None) -> DataFrame:
+    """``g``'s unique (src, dst) pairs, hash-partitioned and sorted on
+    src — the layout every per-round ``frontier ⋈ edges`` join reads.
+    A graph with a declared src layout is used as-is (the label filter
+    and the projection keep its uniqueness, partitioning and order);
+    any other is built once with ``copartitioned``. ``label`` keeps
+    only edges of that label."""
+    e = g.edges if label is None else g.edges.filter(F.col("label") == label)
+    e = e.select("src", "dst")
+    return e if g.edges_layout == "src" else copartitioned(e, "src", dedup_cols=["src", "dst"])
+
+
+def bfs_levels(
+    seed: DataFrame,
+    edges: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    max_depth: int,
+    keys: tuple[str, ...] = (),
+    include_seed: bool = True,
+    stop: Callable[[DataFrame], bool] | None = None,
+    name: str | None = None,
+    bound: str = "max_depth",
+) -> tuple[DataFrame, int]:
+    """Multi-source level-synchronous BFS — the one frontier loop.
+
+    ``seed`` holds level 0 as (``keys``…, id, payload…); ``edges`` is
+    (src, dst). Each level joins the last frontier to ``edges`` on
+    id = src, and ``step(joined, depth)`` projects and reduces those
+    candidates to (keys…, id, payload…) rows. One ``materialize_count``
+    stores the level anti-joined against the settled set on
+    (keys…, id): a (keys, id) pair settles at the first level that
+    reaches it. The settled set is then re-materialized with the level
+    appended; superseded rounds are released as they go (RoundPins).
+    The search stops when a level comes back empty, when ``stop`` says
+    so (asked of each frontier before it expands, the seed first), or
+    after ``max_depth`` levels.
+
+    ``include_seed``: the seed counts as settled (``*0..``) or only
+    starts the search (``*1..`` — a seed vertex then settles when a
+    walk returns to it).
+
+    Exhaustion: after ``max_depth`` non-empty levels, a search with a
+    ``name`` probes whether one more expansion of the last frontier
+    reaches a (keys, id) pair not yet settled, and raises "<name> did
+    not converge in <bound>=…" if so — its result would silently miss
+    reachable vertices. Without a ``name`` the bound is a truncation.
+
+    Returns (settled, deepest non-empty level). The settled set stays
+    pinned until the enclosing ``run_loop`` bracket exits."""
+    pins = RoundPins(seed.sparkSession)
+    on = [*keys, "id"]
+    # an unsettled seed is read once, by the first expansion: no checkpoint
+    settled = pins.materialize(seed) if include_seed else None
+    frontier = seed if settled is None else settled
+    deepest = 0
+    for depth in range(1, max_depth + 1):
+        if stop is not None and stop(frontier):
+            break
+        cand = step(frontier.join(edges, frontier.id == edges.src), depth)
+        if settled is not None:
+            cand = cand.join(settled.select(*on), on, "left_anti")
+        new, n_new = pins.materialize_count(cand)
+        if settled is None:
+            settled = new
+        elif n_new:
+            settled = pins.materialize(settled.unionByName(new))
+        if n_new == 0:
+            break
+        frontier, deepest = new, depth
+        pins.release_except(settled, frontier)
+    else:
+        if name is not None and not (
+            frontier.join(edges, frontier.id == edges.src)
+            .select(*keys, F.col("dst").alias("id"))
+            .join(settled.select(*on), on, "left_anti")
+            .isEmpty()
+        ):
+            raise RuntimeError(
+                f"{name} did not converge in {bound}={max_depth} rounds "
+                f"(frontier still expanding) — raise {bound}"
+            )
+    pins.release_except(settled)
+    pins.forget(settled)
+    return settled, deepest
 
 
 class _PinScope:

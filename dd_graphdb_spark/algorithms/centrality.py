@@ -30,20 +30,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dd_graphdb_spark.graph import PropertyGraph
-from dd_graphdb_spark.algorithms._iter import RoundPins, _ckpt, copartitioned
-from dd_graphdb_spark.algorithms._iter import materialize as _materialize
-from dd_graphdb_spark.algorithms._iter import run_loop
+from dd_graphdb_spark.algorithms._iter import RoundPins, _ckpt, bfs_levels, materialize
+from dd_graphdb_spark.algorithms._iter import run_loop, src_edges
 
 
 def _eigenvector_loop(
     g: PropertyGraph, max_iterations: int = 10, round_to: int | None = None
 ) -> DataFrame:
     verts = _ckpt(g.vertices.select("id").distinct())
-    edges = (
-        g.edges.select("src", "dst")
-        if g.edges_layout == "src"  # declared layout: unique + partitioned + sorted
-        else copartitioned(g.edges.select("src", "dst"), "src", dedup_cols=["src", "dst"])
-    )
+    edges = src_edges(g)
     pins = RoundPins(g.vertices.sparkSession)
     x = pins.materialize(verts.withColumn("score", F.lit(1.0)))
     for _ in range(max_iterations):
@@ -80,25 +75,6 @@ def eigenvector_centrality(
     return run_loop(_eigenvector_loop, g, max_iterations, round_to)
 
 
-def _guard_settled(frontier, edges, visited, algo: str, max_depth: int) -> None:
-    """A BFS loop that exhausts ``max_depth`` with a frontier that would
-    STILL expand has truncated reachable sets — sigma counts and
-    centralities would be silently wrong. Raise instead, mirroring the
-    SCC non-convergence guard (one extra probe join, only paid on
-    exhaustion; a frontier whose next expansion is empty is fine)."""
-    probe = (
-        frontier.join(edges, frontier.id == edges.src)
-        .select("source", F.col("dst").alias("id"))
-        .distinct()
-        .join(visited.select("source", "id"), ["source", "id"], "left_anti")
-    )
-    if not probe.isEmpty():
-        raise RuntimeError(
-            f"{algo} BFS frontier still expanding at max_depth={max_depth}; "
-            f"increase max_depth (graph diameter exceeds it)"
-        )
-
-
 def _closeness_loop(
     g: PropertyGraph,
     sources: list[int] | None = None,
@@ -107,38 +83,18 @@ def _closeness_loop(
     """(id, closeness) for every source (all vertices by default;
     landmark subset via ``sources`` at scale). Multi-source BFS: the
     frontier is keyed by (source, vertex), each round one join."""
-    edges = (
-        g.edges.select("src", "dst")
-        if g.edges_layout == "src"  # declared layout: unique + partitioned + sorted
-        else copartitioned(g.edges.select("src", "dst"), "src", dedup_cols=["src", "dst"])
-    )
     verts = g.vertices.select("id").distinct()
     seeds = verts if sources is None else verts.filter(F.col("id").isin(sources))
-    # visited is CUMULATIVE and (source, vertex)-keyed — each round pins
-    # a fresh |S|·|reached| copy without per-round release (see RoundPins)
-    pins = RoundPins(g.vertices.sparkSession)
-    visited = pins.materialize(
-        seeds.select(F.col("id").alias("source"), F.col("id"), F.lit(0).alias("hops"))
+    visited, _ = bfs_levels(
+        seeds.select(F.col("id").alias("source"), F.col("id"), F.lit(0).alias("hops")),
+        src_edges(g),
+        lambda j, depth: j.select(
+            "source", F.col("dst").alias("id"), F.lit(depth).alias("hops")
+        ).distinct(),
+        max_depth,
+        keys=("source",),
+        name="closeness",
     )
-    frontier = visited
-    for depth in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(edges, frontier.id == edges.src)
-            .select("source", F.col("dst").alias("id"), F.lit(depth).alias("hops"))
-            .distinct()
-        )
-        # one action materializes the round AND yields the emptiness
-        # check (materialize_count, r16 — was checkpoint job + isEmpty)
-        new, n_new = pins.materialize_count(
-            nxt.join(visited, ["source", "id"], "left_anti")
-        )
-        if n_new == 0:
-            break
-        visited = pins.materialize(visited.union(new))
-        frontier = new
-        pins.release_except(visited, frontier)
-    else:
-        _guard_settled(frontier, edges, visited, "closeness", max_depth)
     per_src = visited.groupBy("source").agg(
         F.count("*").alias("r"), F.sum("hops").alias("total_d")
     )
@@ -178,45 +134,24 @@ def _betweenness_loop(
     pass ``sources`` (landmark/pivot sampling, the standard
     approximation) and keep per-landmark exactness.
     """
-    edges = (
-        g.edges.select("src", "dst")
-        if g.edges_layout == "src"  # declared layout: unique + partitioned + sorted
-        else copartitioned(g.edges.select("src", "dst"), "src", dedup_cols=["src", "dst"])
-    )
+    edges = src_edges(g)
     verts = g.vertices.select("id").distinct()
     seeds = verts if sources is None else verts.filter(F.col("id").isin(sources))
 
     # -- forward: BFS levels + shortest-path counts ---------------------
-    # (source, vertex)-keyed cumulative state: per-round release, as in
-    # _closeness_loop (see RoundPins)
-    pins = RoundPins(g.vertices.sparkSession)
-    visited = pins.materialize(
+    visited, deepest = bfs_levels(
         seeds.select(
             F.col("id").alias("source"), F.col("id"), F.lit(0).alias("d"),
             F.lit(1.0).alias("sigma"),
-        )
+        ),
+        edges,
+        lambda j, depth: j.groupBy("source", F.col("dst").alias("id"))
+        .agg(F.sum("sigma").alias("sigma"))
+        .select("source", "id", F.lit(depth).alias("d"), "sigma"),
+        max_depth,
+        keys=("source",),
+        name="betweenness",
     )
-    frontier = visited
-    deepest = 0
-    for depth in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(edges, frontier.id == edges.src)
-            .groupBy("source", F.col("dst").alias("id"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .withColumn("d", F.lit(depth))
-        )
-        new, n_new = pins.materialize_count(
-            nxt.join(visited.select("source", "id"), ["source", "id"], "left_anti")
-            .select("source", "id", "d", "sigma")
-        )
-        if n_new == 0:
-            break
-        visited = pins.materialize(visited.unionByName(new))
-        frontier = new
-        deepest = depth
-        pins.release_except(visited, frontier)
-    else:
-        _guard_settled(frontier, edges, visited, "betweenness", max_depth)
 
     # -- SP-DAG: (source, v→w) where d(w) = d(v)+1 along an edge --------
     v_side = visited.select(
@@ -225,7 +160,7 @@ def _betweenness_loop(
     w_side = visited.select(
         "source", F.col("id").alias("w"), F.col("d").alias("dw"), F.col("sigma").alias("sigma_w")
     )
-    dag = pins.materialize(
+    dag = materialize(
         v_side.join(edges, v_side.v == edges.src)
         .join(w_side, ["source"])
         .filter((F.col("dst") == F.col("w")) & (F.col("dw") == F.col("dv") + 1))
@@ -241,16 +176,13 @@ def _betweenness_loop(
     # cumulative union every round (O(rounds · |δ|) checkpoint writes).
     # Now each round writes O(|level|) and joins |level l+1|; the full δ
     # table exists only as the final lazy union feeding one aggregation.
-    prev = pins.materialize(
+    # The per-level frames are the loop's OUTPUT: they stay pinned until
+    # run_loop's end bracket re-checkpoints the result.
+    prev = materialize(
         visited.filter(F.col("d") == deepest)
         .select("source", "id", F.lit(0.0).alias("delta"))
     )
-    # per-level frames are the loop's OUTPUT: forget() keeps them pinned
-    # until run_loop's end bracket re-checkpoints the result (SCC's
-    # peeled-component pattern)
-    pins.forget(prev)
     levels = [prev]
-    pins.release_except(visited, dag)  # forward frontiers are dead
     for lvl in range(deepest - 1, -1, -1):
         contrib = (
             dag.filter(F.col("dv") == lvl)
@@ -270,8 +202,7 @@ def _betweenness_loop(
             .join(contrib, ["source", "id"], "left")
             .select("source", "id", F.coalesce("c", F.lit(0.0)).alias("delta"))
         )
-        prev = pins.materialize(level)
-        pins.forget(prev)
+        prev = materialize(level)
         levels.append(prev)
 
     delta = levels[0]

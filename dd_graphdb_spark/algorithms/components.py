@@ -41,8 +41,7 @@ from dd_graphdb_spark.localrel import local_df
 from dd_graphdb_spark.graph import PropertyGraph
 
 
-from dd_graphdb_spark.algorithms._iter import RoundPins, copartitioned
-from dd_graphdb_spark.algorithms._iter import materialize as _materialize
+from dd_graphdb_spark.algorithms._iter import RoundPins, bfs_levels, copartitioned
 from dd_graphdb_spark.algorithms._iter import run_loop, wide_shuffle
 
 
@@ -191,44 +190,29 @@ def _strongly_connected_components_loop(
                 f"SCC forward coloring did not converge in "
                 f"max_iterations={max_iterations} rounds — raise max_iterations"
             )
-        # (2) backward mark: can v reach its color root via same-color path?
-        colored_e = pins.materialize(
+        # (2) backward mark: can v reach its color root via same-color
+        # path? A BFS from each root over the REVERSED same-color edges;
+        # a predecessor inherits the frontier vertex's root color. An
+        # exhausted mark raises: recording the partial set would SPLIT
+        # one SCC into many (a 60-cycle at the old limits returned 10)
+        rev_e = pins.materialize(
             remaining_e.join(
                 color.withColumnRenamed("id", "src").withColumnRenamed("color", "c_src"), "src"
             )
             .join(color.withColumnRenamed("id", "dst").withColumnRenamed("color", "c_dst"), "dst")
             .filter(F.col("c_src") == F.col("c_dst"))
-            .select("src", "dst")
+            .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        marked = pins.materialize(color.filter(F.col("id") == F.col("color")).select("id", "color"))
-        frontier = marked
-        for _ in range(max_iterations):
-            # colored_e already restricts to same-color endpoints, so the
-            # predecessor inherits the frontier vertex's root color.
-            preds = (
-                frontier.join(colored_e, frontier.id == colored_e.dst)
-                .select(F.col("src").alias("id"), "color")
-                .distinct()
-            )
-            new_frontier, n_newf = pins.materialize_count(
-                preds.join(marked, "id", "left_anti")
-            )
-            if n_newf == 0:
-                break
-            marked = pins.materialize(marked.union(new_frontier))
-            frontier = new_frontier
-            pins.release_except(remaining_v, remaining_e, colored_e, marked, frontier)
-        else:
-            # exhausted with the mark frontier still growing: recording
-            # the partial `marked` set would SPLIT one SCC into many
-            # (confirmed: a 60-cycle at default limits returned 10 SCCs)
-            raise RuntimeError(
-                f"SCC backward mark did not converge in "
-                f"max_iterations={max_iterations} rounds (component "
-                "diameter exceeds it) — raise max_iterations"
-            )
+        marked, _ = bfs_levels(
+            color.filter(F.col("id") == F.col("color")).select("id", "color"),
+            rev_e,
+            lambda j, _d: j.select(F.col("dst").alias("id"), "color").distinct(),
+            max_iterations,
+            keys=("color",),
+            name="SCC backward mark",
+            bound="max_iterations",
+        )
         results.append(marked.select("id", F.col("color").alias("scc")))
-        pins.forget(marked)  # part of the output — stays pinned
         remaining_v, n_remaining = pins.materialize_count(
             remaining_v.join(marked.select("id"), "id", "left_anti")
         )

@@ -11,7 +11,9 @@ Reference semantics:
 - Reachability / transitive closure: fixpoint reach ∪ (reach ⋈ edges)
   (graph/algorithms/src/lib.rs:14-43).
 
-Spark shape: Bellman-Ford-style frontier relaxation — each round joins
+BFS and reachability are first-visit searches on the shared frontier
+loop, ``_iter.bfs_levels``. SSSP's Spark shape is its own
+Bellman-Ford-style frontier relaxation — each round joins
 the updated-distance frontier with edges and min-combines into the
 distance table. Rounds ≈ longest shortest-path hop count. Driver only
 checks an "any improvement?" flag; all data stays distributed.
@@ -26,9 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dd_graphdb_spark.graph import PropertyGraph
-from dd_graphdb_spark.algorithms._iter import RoundPins, copartitioned, run_loop
-
-CHECKPOINT_EVERY = 4
+from dd_graphdb_spark.algorithms._iter import RoundPins, bfs_levels, copartitioned, run_loop
+from dd_graphdb_spark.algorithms._iter import src_edges
 
 
 def _sssp_loop(
@@ -181,48 +182,29 @@ def _bfs_shortest_path_loop(
     """Unweighted BFS. Returns (id, hops, path); with ``target`` set,
     only that vertex's row (empty DF = unreachable, matching the
     reference's None). Early-terminates when the target is settled
-    (graph/storage/src/lib.rs:858-861)."""
-    e = g.edges.select("src", "dst", "label")
-    if label is not None:
-        e = e.filter(F.col("label") == label)
-    if g.edges_layout == "src":
-        # declared layout ⇒ unique (src, dst) pairs already partitioned
-        # and sorted by src; label filter + projection preserve all three
-        e = e.select("src", "dst")
-    else:
-        e = copartitioned(e.select("src", "dst"), "src", dedup_cols=["src", "dst"])
-
-    # visited is CUMULATIVE: each round re-checkpoints a full copy, so
-    # superseded rounds must be released as they go (see RoundPins)
-    pins = RoundPins(g.vertices.sparkSession)
-    visited = pins.materialize(
+    (graph/storage/src/lib.rs:858-861). All of a level's candidates
+    share its hop count, so min(path) per vertex is the reference's
+    deterministic "first found"."""
+    seed = (
         g.vertices.select("id")
         .filter(F.col("id") == source)
         .select("id", F.lit(0).alias("hops"), F.col("id").cast("string").alias("path"))
     )
-    frontier = visited
-    for depth in range(1, max_depth + 1):
-        if target is not None and not visited.filter(F.col("id") == target).isEmpty():
-            break
-        nxt = (
-            frontier.join(e, frontier.id == e.src)
-            .select(
-                F.col("dst").alias("id"),
-                F.lit(depth).alias("hops"),
-                F.concat(F.col("path"), F.lit("->"), F.col("dst").cast("string")).alias("path"),
-            )
-            .groupBy("id")
-            .agg(F.min(F.struct("hops", "path")).alias("b"))
-            .select("id", F.col("b.hops").alias("hops"), F.col("b.path").alias("path"))
+
+    def step(j: DataFrame, depth: int) -> DataFrame:
+        path = F.concat(F.col("path"), F.lit("->"), F.col("dst").cast("string"))
+        return (
+            j.groupBy(F.col("dst").alias("id"))
+            .agg(F.min(path).alias("path"))
+            .select("id", F.lit(depth).alias("hops"), "path")
         )
-        new, n_new = pins.materialize_count(
-            nxt.join(visited.select("id"), "id", "left_anti")
-        )
-        if n_new == 0:
-            break
-        visited = pins.materialize(visited.union(new))
-        frontier = new
-        pins.release_except(visited, frontier)
+
+    def reached(frontier: DataFrame) -> bool:
+        return not frontier.filter(F.col("id") == target).isEmpty()
+
+    visited, _ = bfs_levels(
+        seed, src_edges(g, label), step, max_depth, stop=None if target is None else reached
+    )
     if target is not None:
         return visited.filter(F.col("id") == target)
     return visited
@@ -232,40 +214,14 @@ def _reachability_loop(g: PropertyGraph, source: int, max_iterations: int = 50) 
     """All vertices reachable from ``source`` (the seed included), as
     (id). Fixpoint reach ∪ (reach ⋈ edges) with a delta frontier so each
     round only expands newly found vertices."""
-    if g.edges_layout == "src":
-        e = g.edges.select("src", "dst")
-    else:
-        e = copartitioned(
-            g.edges.select("src", "dst"), "src", dedup_cols=["src", "dst"]
-        )
-    pins = RoundPins(g.vertices.sparkSession)
-    reach = pins.materialize(g.vertices.select("id").filter(F.col("id") == source))
-    frontier = reach
-    for i in range(max_iterations):
-        nxt = (
-            frontier.join(e, frontier.id == e.src).select(F.col("dst").alias("id")).distinct()
-        )
-        new, n_new = pins.materialize_count(nxt.join(reach, "id", "left_anti"))
-        if n_new == 0:
-            break
-        reach = pins.materialize(reach.union(new))
-        frontier = new
-        pins.release_except(reach, frontier)
-    else:
-        # exhausted with the frontier still growing: the result would
-        # silently miss reachable vertices — probe and raise, matching
-        # the centrality/SCC non-convergence guards
-        probe = (
-            frontier.join(e, frontier.id == e.src)
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(reach, "id", "left_anti")
-        )
-        if not probe.isEmpty():
-            raise RuntimeError(
-                f"reachability did not converge in max_iterations={max_iterations} "
-                "rounds (frontier still expanding) — raise max_iterations"
-            )
+    reach, _ = bfs_levels(
+        g.vertices.select("id").filter(F.col("id") == source),
+        src_edges(g),
+        lambda j, _d: j.select(F.col("dst").alias("id")).distinct(),
+        max_iterations,
+        name="reachability",
+        bound="max_iterations",
+    )
     return reach
 
 

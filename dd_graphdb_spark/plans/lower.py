@@ -1178,13 +1178,11 @@ class GQLEngine:
         return out if stmt.all else _safe_distinct(out)
 
     # -- pattern matching ----------------------------------------------------
-    def _var_length_pairs(self, e, evar: str, tag: str) -> DataFrame:
-        """(start, end, hops) walk pairs for a variable-length edge —
-        a finite union of hop-chained equi-joins (the parser rejects
-        unbounded quantifiers). Bindings stay WALKS, matching the
-        single-edge semantics: one output row per distinct walk.
-        Zero-hop (``*0..m``) contributes the identity pairs."""
-        start, end = f"{tag}_start", f"{tag}_end"
+    def _hop_edges(self, e, src: str = "_b_src", dst: str = "_b_dst") -> DataFrame:
+        """One hop of a variable-length edge pattern as (``src``,
+        ``dst``) in walk direction: the undirected union when the
+        pattern has no direction, the label filter, and reversed
+        endpoints for an incoming pattern."""
         base = (
             self.graph.undirected_edges()
             if e.direction == "undirected"
@@ -1192,10 +1190,17 @@ class GQLEngine:
         )
         if e.label is not None:
             base = base.filter(_label_pred(F.col("label"), e.label))
-        if e.direction == "in":
-            base = base.select(F.col("dst").alias("_b_src"), F.col("src").alias("_b_dst"))
-        else:
-            base = base.select(F.col("src").alias("_b_src"), F.col("dst").alias("_b_dst"))
+        a, b = ("dst", "src") if e.direction == "in" else ("src", "dst")
+        return base.select(F.col(a).alias(src), F.col(b).alias(dst))
+
+    def _var_length_pairs(self, e, evar: str, tag: str) -> DataFrame:
+        """(start, end, hops) walk pairs for a variable-length edge —
+        a finite union of hop-chained equi-joins (the parser rejects
+        unbounded quantifiers). Bindings stay WALKS, matching the
+        single-edge semantics: one output row per distinct walk.
+        Zero-hop (``*0..m``) contributes the identity pairs."""
+        start, end = f"{tag}_start", f"{tag}_end"
+        base = self._hop_edges(e)
         frames = []
         if e.min_hops == 0:
             frames.append(
@@ -1229,8 +1234,8 @@ class GQLEngine:
         Each round extends only the pairs FIRST settled last round,
         reduces the extensions to min(path) per (start, end) — all of a
         round's extensions share its hop count — and anti-joins the
-        already-settled set; rounds eagerly localCheckpoint (the
-        repo-standard iterative pattern, algorithms/_iter.py) and stop
+        already-settled set — the engine's one frontier loop,
+        ``_iter.bfs_levels``, keyed by the start column — and stops
         early when the frontier drains. The result is identical to full
         walk enumeration + min(struct(hops, path)): a shortest walk's
         prefixes are shortest walks, and appending the same suffix
@@ -1250,8 +1255,8 @@ class GQLEngine:
         pairs settled last round enumerates exactly the shortest paths
         of the pairs settling this round; the settled-PAIR anti-join is
         unchanged. Extensions are duplicate-free without a distinct:
-        ``base`` is distinct and a path string determines its (prefix,
-        last-edge) decomposition uniquely. Per-round state is bounded by
+        the hop edges are deduplicated and a path string determines its
+        (prefix, last-edge) decomposition uniquely. Per-round state is bounded by
         tied-path counts (inherent to the ask — Cypher returns one row
         per path), not pairs.
 
@@ -1260,106 +1265,49 @@ class GQLEngine:
         end. Mirrors the reference's routed shortest-path result shape
         (dist/path — incremental_engine.rs:1214-1285) with Cypher
         shortestPath (hop) semantics; unreachable ⇒ no row."""
-        from dd_graphdb_spark.algorithms._iter import (
-            copartitioned,
-            materialize,
-            materialize_count,
-            run_loop,
-        )
+        from dd_graphdb_spark.algorithms._iter import bfs_levels, copartitioned, run_loop
 
         e, a, b, p = sp.edge, sp.src, sp.dst, sp.pvar
-        base = (
-            self.graph.undirected_edges()
-            if e.direction == "undirected"
-            else self.graph.edges
-        )
-        if e.label is not None:
-            base = base.filter(_label_pred(F.col("label"), e.label))
-        if e.direction == "in":
-            base = base.select(F.col("dst").alias("_b_src"), F.col("src").alias("_b_dst"))
-        else:
-            base = base.select(F.col("src").alias("_b_src"), F.col("dst").alias("_b_dst"))
-        base = base.distinct()  # parallel edges never change hop counts
-
         adf = _node_filter(_prefix(self.graph.vertices, a.var), a, a.var)
         bdf = _node_filter(_prefix(self.graph.vertices, b.var), b, b.var)
         start, end, hops, path = "_sp_start", "_sp_end", "_sp_hops", "_sp_path"
-        lo = max(e.min_hops, 0)
-        seed = adf.select(F.col(f"{a.var}__id").alias(start))
+        seed = adf.select(
+            F.col(f"{a.var}__id").alias(start),
+            F.col(f"{a.var}__id").alias("id"),
+            F.lit(0).alias(hops),
+            F.col(f"{a.var}__id").cast("string").alias(path),
+        )
 
-        def _reduce(cands: DataFrame, h: int) -> DataFrame:
+        def step(j: DataFrame, h: int) -> DataFrame:
             """Per-hop reduction: one winner per pair (shortestPath) or
             every tied path (allShortestPaths — no reduction needed,
             see docstring)."""
-            if sp.all_paths:
-                return cands.select(start, end, F.lit(h).alias(hops), path)
-            return (
-                cands.groupBy(start, end)
-                .agg(F.min(path).alias(path))
-                .select(start, end, F.lit(h).alias(hops), path)
+            ext = j.select(
+                start,
+                F.col("dst").alias("id"),
+                F.concat(F.col(path), F.lit("->"), F.col("dst").cast("string")).alias(path),
             )
+            if not sp.all_paths:
+                ext = ext.groupBy(start, "id").agg(F.min(path).alias(path))
+            return ext.select(start, "id", F.lit(h).alias(hops), path)
 
         def _bfs(_g) -> DataFrame:
-            # checkpoint the edge set partitioned + sorted on the
-            # per-round join key (inside run_loop so the bracket frees
-            # its blocks) — each round then exchanges only the frontier
-            fixed = copartitioned(base, "_b_src")
-            hop1 = _reduce(
-                seed.join(fixed, F.col(start) == F.col("_b_src")).select(
-                    F.col(start),
-                    F.col("_b_dst").alias(end),
-                    F.concat(
-                        F.col(start).cast("string"),
-                        F.lit("->"),
-                        F.col("_b_dst").cast("string"),
-                    ).alias(path),
-                ),
-                1,
+            # the edge set partitioned + sorted on the per-round join key
+            # and deduplicated in the same exchange (parallel edges never
+            # change hop counts), built inside run_loop so the bracket
+            # frees its blocks — each round then exchanges only the
+            # frontier
+            fixed = copartitioned(
+                self._hop_edges(e, "src", "dst"), "src", dedup_cols=["src", "dst"]
             )
-            # only frontiers are checkpointed; `best` stays a lazy union
-            # of already-stored frames (flat lineage, no extra jobs).
-            # materialize_count (r16): ONE action per round stores the
-            # frontier AND yields the emptiness check — the prior shape
-            # paid an eager-checkpoint job plus a separate isEmpty job
-            # every round.
-            if lo == 0:
-                zero = materialize(
-                    seed.select(
-                        F.col(start),
-                        F.col(start).alias(end),
-                        F.lit(0).alias(hops),
-                        F.col(start).cast("string").alias(path),
-                    )
-                )
-                frontier, n_frontier = materialize_count(
-                    hop1.join(zero, [start, end], "left_anti")
-                )
-                best = zero.unionByName(frontier)
-            else:
-                frontier, n_frontier = materialize_count(hop1)
-                best = frontier
-            for h in range(2, e.max_hops + 1):
-                if n_frontier == 0:
-                    break  # all reachable pairs settled — stop early
-                ext = _reduce(
-                    frontier.join(fixed, F.col(end) == F.col("_b_src")).select(
-                        F.col(start),
-                        F.col("_b_dst").alias(end),
-                        F.concat(
-                            F.col(path), F.lit("->"), F.col("_b_dst").cast("string")
-                        ).alias(path),
-                    ),
-                    h,
-                )
-                frontier, n_frontier = materialize_count(
-                    ext.join(best, [start, end], "left_anti")
-                )
-                best = best.unionByName(frontier)
+            best, _ = bfs_levels(
+                seed, fixed, step, e.max_hops, keys=(start,), include_seed=e.min_hops == 0
+            )
             return best
 
         best = run_loop(_bfs, self.graph).select(
             start,
-            end,
+            F.col("id").alias(end),
             F.col(hops).cast("long").alias(f"{p}__hops"),
             F.col(path).alias(f"{p}__path"),
         )

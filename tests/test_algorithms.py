@@ -376,6 +376,38 @@ def test_scc_raises_instead_of_splitting_long_cycle(spark):
     assert len(out) == n and len({r["scc"] for r in out}) == 1
 
 
+_CHAIN = ([(i,) for i in range(6)], [(i, i + 1, "x") for i in range(5)])
+_CYCLE8 = ([(i,) for i in range(8)], [(i, (i + 1) % 8, "x") for i in range(8)])
+
+
+@pytest.mark.parametrize(
+    "graph, run, k, expected",
+    [
+        (_CHAIN, lambda g, k: A.reachability(g, 0, max_iterations=k), 5,
+         {i: i for i in range(6)}),
+        (_CHAIN, lambda g, k: A.closeness_centrality(g, sources=[0], max_depth=k), 5,
+         {0: 5 / 15}),
+        (_CHAIN, lambda g, k: A.betweenness_centrality(g, sources=[0], max_depth=k), 5,
+         {0: 0.0, 1: 4.0, 2: 3.0, 3: 2.0, 4: 1.0, 5: 0.0}),
+        (_CYCLE8, lambda g, k: A.strongly_connected_components(g, max_iterations=k), 7,
+         {i: 0 for i in range(8)}),
+    ],
+    ids=["reachability", "closeness", "betweenness", "scc"],
+)
+def test_frontier_exhaustion_boundary(spark, graph, run, k, expected):
+    """One exhaustion rule for every frontier search: a frontier that
+    settles in exactly k levels gives the full result at a bound of k
+    and raises at k-1 (a partial result would be silently wrong). The
+    8-cycle's SCC mark needs exactly 7 levels."""
+    v = spark.createDataFrame(graph[0], "id long")
+    e = spark.createDataFrame(graph[1], "src long, dst long, label string")
+    g = PropertyGraph(v, e)
+    # (id, value) rows; reachability's lone id column maps to itself
+    assert {r[0]: r[-1] for r in run(g, k).collect()} == pytest.approx(expected)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        run(g, k - 1).collect()
+
+
 def test_round_pins_release_and_forget(spark):
     """RoundPins frees superseded rounds' checkpoint blocks while the
     loop runs (the sf10 k-core OOM class), keeps `release_except`
