@@ -6,9 +6,9 @@ and an unsalted join computes each hot key's d² in ONE task. This helper
 splits hot keys (group size > ``salt_threshold``) onto a salted path:
 the left side is bucketed into ``n_salts`` salts by member id and the
 right side is replicated per salt, spreading each hot key's pair
-generation across n_salts tasks. Exact output, parallel work — the same
-technique AQE's skew-join mitigation applies to shuffled joins, done
-explicitly so it also covers the pair-explosion stage.
+generation across n_salts (key, salt) cells. Exact output, parallel
+work — the same technique AQE's skew-join mitigation applies to shuffled
+joins, done explicitly so it also covers the pair-explosion stage.
 """
 
 from __future__ import annotations
@@ -78,20 +78,22 @@ def salted_self_pairs(
     # explosion in one task (observed at sf1: 5 hot keys × 15k members
     # = 1.1B join rows on a single core). The cold join inherits the
     # checkpoint's width (no exchange to coalesce); the hot probe side
-    # keeps an explicit AQE-exempt repartition so each (key, salt) cell
-    # gets its own slot; per-task output is bounded by cell size (hot:
-    # d·d/n_salts; cold: ≤ salt_threshold² per key).
-    n_parts = max(n_salts * 16, spark.sparkContext.defaultParallelism * 4)
+    # keeps an explicit AQE-exempt repartition into n_parts, one width
+    # that follows the host: 4 slots per core, at least n_salts. (key,
+    # salt) cells may share a slot, which decides only which task makes
+    # a cell's pairs, never which pairs; per-cell output stays bounded
+    # (hot: d·d/n_salts; cold: ≤ salt_threshold² per key). A slot per
+    # cell (a 256 floor) left most hot tasks empty: 5 hot n-gram keys ×
+    # 16 salts fill at most 80 cells.
+    n_parts = max(n_salts, spark.sparkContext.defaultParallelism * 4)
 
     # Checkpoint width is SIZE-ADAPTIVE (the wide_shuffle pattern):
     # Catalyst's free size estimate over the input, one partition per
     # SPARK_GRAFT_PAIR_PART_BYTES (4 MB default — deliberately small
     # because each input row fans out up to d-fold in the cold join),
-    # clamped to [session shuffle width, n_parts]. A fixed 256 floor
-    # measured ~1.1× slower across the 9 salted-path gates at sf0.1
-    # (256 near-empty tasks per stage × 5 stages of pure scheduling
-    # overhead) while large inputs still grow toward n_parts; an
-    # unusable estimate keeps the conservative n_parts.
+    # at least the session shuffle width, capped at n_parts — the cap
+    # wins when the session is wider than the host (32 on a 4-core
+    # host runs 16). An unusable estimate takes the cap.
     from dd_graphdb_spark.algorithms._iter import _env_int, _keyed_checkpoint, plan_size_bytes
 
     est = plan_size_bytes(base)

@@ -254,7 +254,7 @@ def cosine_near_dup_pairs(
     (no shuffle); candidate generation shuffles one (band, bucket) row
     per vector per band and goes through the salted pair path
     (operators._skew) so a degenerate bucket (e.g. a corpus of
-    near-identical embeddings) spreads its d^2 across ``n_salts`` tasks;
+    near-identical embeddings) spreads its d^2 across ``n_salts`` cells;
     verification is O(d) per candidate, never all-pairs. Output: (a, b,
     sim).
 
@@ -347,7 +347,7 @@ def semantic_dedup(
     shuffle on cell, quadratic only within a cell; n_centroids scales
     with the corpus to bound cell size, and a degenerate hot cell
     (near-identical corpus) takes the salted pair path so its d^2
-    spreads across ``n_salts`` tasks. Multi-probe multiplies per-cell
+    spreads across ``n_salts`` cells. Multi-probe multiplies per-cell
     membership by ≤ n_probe (candidate volume ≤ n_probe² ×), still
     cell-local — the knob trades exactly that factor for recall.
     Cosines round to 6 decimals before the threshold compare

@@ -88,7 +88,7 @@ def common_neighbors(
     - dst keys with degree > ``salt_threshold`` take a salted path: the
       left side is split into ``n_salts`` buckets by src and the right
       side is replicated per salt, spreading each hot key's d² pair
-      generation across n_salts tasks. Identical output, parallel work.
+      generation across n_salts cells. Identical output, parallel work.
     - ``max_degree`` (optional, OFF by default) caps each dst's fanout to
       its lowest-id ``max_degree`` sources — the documented approximate
       escape hatch when d² itself is unacceptable (or switch to the

@@ -540,3 +540,30 @@ def test_scoped_sites_never_write_the_parent_session(spark, monkeypatch):
     narrow = _iter.narrow_shuffle(spark, 2)
     assert _iter.materialize(narrow.range(10)).count() == 10
     assert seen == [((parent[0], "2", "2"), parent)]
+
+
+def test_keyed_checkpoints_store_serialized_blocks(spark, monkeypatch):
+    """The keyed checkpoints of salted_self_pairs and copartitioned store
+    serialized MEMORY_AND_DISK blocks, the level every engine
+    checkpoint takes through ``_iter._ckpt`` (the JVM default keeps
+    deserialized object rows, 3-4x the footprint)."""
+    from pyspark.sql import functions as F
+    from pyspark.storagelevel import StorageLevel
+
+    from dd_graphdb_spark.algorithms import _iter
+    from dd_graphdb_spark.operators._skew import salted_self_pairs
+
+    levels = []
+    cls = type(spark.range(1))
+    real = cls.localCheckpoint
+
+    def spy(self, eager=True, storageLevel=None):
+        levels.append(storageLevel)
+        return real(self, eager, storageLevel)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    df = spark.range(40).select((F.col("id") % 4).alias("k"), "id")
+    _iter.copartitioned(df, "k")
+    salted_self_pairs(df, "id", ["k"], salt_threshold=5, n_salts=2)
+    assert levels == [StorageLevel.MEMORY_AND_DISK] * 2
+    assert not StorageLevel.MEMORY_AND_DISK.deserialized

@@ -249,6 +249,67 @@ def test_salted_pairs_single_pass_shape(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
+def test_salted_pairs_width_follows_host(spark, monkeypatch):
+    """One host-sized width, max(n_salts, 4 × defaultParallelism), sets
+    the hot probe's AQE-exempt repartition and caps the keyed
+    checkpoint: 16 under the local[4] test session, not a fixed
+    n_salts × 16 (64 here, 256 at the callers' n_salts=16) whose hot
+    tasks mostly got no rows. An unusable size estimate takes the cap."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from dd_graphdb_spark.algorithms import _iter
+    from dd_graphdb_spark.operators._skew import salted_self_pairs
+
+    width = max(4, 4 * spark.sparkContext.defaultParallelism)
+    assert width == 16
+    df = spark.range(100).select(F.col("id").alias("m"), (F.col("id") % 3).alias("k"))
+
+    def ckpt_parts(ann):
+        return ann[0]._jdf.queryExecution().executedPlan().outputPartitioning().numPartitions()
+
+    ann = []
+    pairs = salted_self_pairs(df, "m", ["k"], salt_threshold=10, n_salts=4, annotated_out=ann)
+    p = pairs._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    assert re.findall(r"hashpartitioning\([^()]*, (\d+)\), REPARTITION_BY_NUM", p) == ["16"], p
+    assert ckpt_parts(ann) <= width
+
+    monkeypatch.setattr(_iter, "plan_size_bytes", lambda _df: None)
+    ann = []
+    salted_self_pairs(df, "m", ["k"], salt_threshold=10, n_salts=4, annotated_out=ann)
+    assert ckpt_parts(ann) == width
+
+
+def test_salted_pairs_exact_when_cells_outnumber_width(spark):
+    """40 hot keys × 8 salts = 320 (key, salt) cells share the 16 hot
+    probe partitions of the local[4] session; cold keys and ids that sit
+    in both a hot and a cold key ride along. The salted pairs must equal
+    the plain self-join's a < b pairs as a multiset."""
+    from collections import Counter
+
+    from dd_graphdb_spark.operators._skew import salted_self_pairs
+
+    rows = [(m, m % 40) for m in range(480)]  # 40 hot keys, 12 members each
+    rows += [(1000 + m, 100 + m // 3) for m in range(60)]  # 20 cold keys of 3
+    rows += [(m, 200 + m % 7) for m in range(0, 480, 17)]  # hot ids in cold keys
+    df = spark.createDataFrame(rows, "m long, k long")
+    assert 40 * 8 > max(8, 4 * spark.sparkContext.defaultParallelism)
+
+    plain = (
+        df.selectExpr("m AS a", "k")
+        .join(df.selectExpr("m AS b", "k"), "k")
+        .filter("a < b")
+        .select("a", "b")
+    )
+    salted = salted_self_pairs(df, "m", ["k"], salt_threshold=5, n_salts=8).select("a", "b")
+    want = Counter(map(tuple, plain.collect()))
+    assert sum(want.values()) > 40 * 66  # every hot key's 66 pairs, and more
+    assert Counter(map(tuple, salted.collect())) == want
+
+
 def test_local_df_plans_local_table_scan_for_nested_schemas(spark):
     """local_df must keep planning a LocalTableScan (no Python-RDD
     scan) for every schema shape the engine feeds it — including

@@ -1,110 +1,68 @@
-"""Per-job wall-clock profile of one or more bench queries.
+"""Per-stage task and CPU profile of one or more registry queries.
 
 Usage: python tools/profile_query.py <sf_dir> <query> [query...]
 
-Runs each query exactly the way bench.py does (same session factory,
-noop sink) and prints every Spark job the run launched with its wall
-time, stage shape, and description — the local[*] stand-in for the
-Spark UI's Jobs page (guide §1.1/§7.1), read through the UI's REST API
-on localhost. Diagnostic only: not part of the driver contract, never
-imported by the engine.
+Runs each query the way bench.py does (the engine's ``get_spark``
+session, noop sink) under its own job group, then prints every stage
+those jobs ran, read from the JVM status store (no UI, no REST API):
+tasks, executor run / CPU / deserialize ms, and shuffle read / write
+rows. A stage with many tasks and few rows is scheduling overhead. Name
+a query twice to profile a warm call after a cold one. Diagnostic only:
+neither the engine nor ``perfbench`` imports it.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
 
 
-def _rest(port: int, path: str):
-    with urllib.request.urlopen(f"http://localhost:{port}/api/v1/{path}") as r:
-        return json.loads(r.read())
+def stages(spark, group: str):
+    """(job count, [(stage id, v1.StageData)]) for the stages the jobs of
+    ``group`` ran; stages they skipped (shuffle output reused) are left out."""
+    tracker = spark.sparkContext.statusTracker()
+    store = spark.sparkContext._jsc.sc().statusStore()
+    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+    ids = sorted({s for j in jobs if j is not None for s in j.stageIds})
+    ran = [(s, store.lastStageAttempt(s)) for s in ids]
+    return len(jobs), [(s, d) for s, d in ran if d.status().toString() != "SKIPPED"]
 
 
 def main() -> None:
-    sf_dir = sys.argv[1]
-    names = sys.argv[2:]
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    os.environ.setdefault("SPARK_GRAFT_UI", "true")
-    from pyspark.sql import SparkSession
-
+    from dd_graphdb_spark.session import get_spark
     from dd_graphdb_spark.suites import all_queries
 
-    # same configs as bench, but with the UI (REST API) on
-    import dd_graphdb_spark.session as S
-
-    def get_spark_ui(*a, **kw):
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE", "32")
-        b = (
-            SparkSession.builder.master(f"local[{cpus}]")
-            .appName("profile")
-            .config("spark.sql.shuffle.partitions", shuffle)
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-            .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", shuffle)
-            .config("spark.sql.adaptive.skewJoin.enabled", "true")
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-            .config("spark.network.timeout", "600s")
-            .config("spark.ui.showConsoleProgress", "false")
-            .config("spark.ui.enabled", "true")
-            .config("spark.ui.port", "4049")
-        )
-        return b.getOrCreate()
-
-    # route suite-internal sessions through the UI-enabled factory until
-    # main returns or raises
-    orig = S.get_spark
-    spark = get_spark_ui()
-    S.get_spark = get_spark_ui
+    sf_dir, names = sys.argv[1], sys.argv[2:]
+    spark = get_spark("profile")
     try:
         qs, _ = all_queries(hygiene=False)
-        app_id = spark.sparkContext.applicationId
-        port = int(spark.sparkContext.uiWebUrl.rsplit(":", 1)[1])
-
-        def jobs_after(lo_time: float) -> list[dict]:
-            js = _rest(port, f"applications/{app_id}/jobs?status=succeeded") + _rest(
-                port, f"applications/{app_id}/jobs?status=failed"
-            )
-            out = []
-            for j in js:
-                sub = time.strptime(j["submissionTime"][:19], "%Y-%m-%dT%H:%M:%S")
-                if time.mktime(sub) >= lo_time - 1.5:
-                    out.append(j)
-            return sorted(out, key=lambda j: j["jobId"])
-
-        for name in names:
+        for i, name in enumerate(names):
             if name not in qs:
                 print(f"unknown query: {name}")
                 continue
-            t_build0 = time.time()
-            df = qs[name](spark, sf_dir)
-            build_s = time.time() - t_build0
+            group = f"{name}#{i}"
+            spark.sparkContext.setJobGroup(group, name)
             t0 = time.time()
+            df = qs[name](spark, sf_dir)
+            t1 = time.time()
             df.write.mode("overwrite").format("noop").save()
-            exec_s = time.time() - t0
-            print(f"\n== {name}: build {build_s:.2f}s + execute {exec_s:.2f}s")
-            for j in jobs_after(t_build0):
-                sub = time.mktime(time.strptime(j["submissionTime"][:19], "%Y-%m-%dT%H:%M:%S"))
-                if "completionTime" in j:
-                    end = time.mktime(
-                        time.strptime(j["completionTime"][:19], "%Y-%m-%dT%H:%M:%S")
-                    )
-                    dur = end - sub
-                else:
-                    dur = -1
-                desc = (j.get("description") or j["name"])[:110]
-                print(
-                    f"  job {j['jobId']:>4} {dur:6.1f}s stages={len(j['stageIds'])} "
-                    f"tasks={j['numTasks']:>5} {desc}"
-                )
+            t2 = time.time()
+            n_jobs, ran = stages(spark, group)
+            print(f"\n== {name}: build {t1 - t0:.2f}s + execute {t2 - t1:.2f}s, {n_jobs} jobs")
+            print(f"  {'stage':>5} {'tasks':>5} {'run_ms':>7} {'cpu_ms':>7} {'deser_ms':>8} "
+                  f"{'shuf_rd_rows':>12} {'shuf_wr_rows':>12}  name")
+            tot = [0] * 6
+            for sid, d in ran:
+                row = [d.numTasks(), d.executorRunTime(), d.executorCpuTime() // 1_000_000,
+                       d.executorDeserializeTime(), d.shuffleReadRecords(), d.shuffleWriteRecords()]
+                tot = [a + b for a, b in zip(tot, row)]
+                print(f"  {sid:>5} {row[0]:>5} {row[1]:>7} {row[2]:>7} {row[3]:>8} "
+                      f"{row[4]:>12} {row[5]:>12}  {d.name()[:60]}")
+            print(f"  {'total':>5} {tot[0]:>5} {tot[1]:>7} {tot[2]:>7} {tot[3]:>8} "
+                  f"{tot[4]:>12} {tot[5]:>12}  {len(ran)} stages")
     finally:
-        S.get_spark = orig
         spark.stop()
 
 
